@@ -46,18 +46,13 @@ object ScalingRun {
       else WebConfig(numHosts = 3000, pagesPerHost = 300, fanout = 6,
         imagesPerPage = 4, maxDelayMs = 200, crawlDelayMs = 10L,
         maxConcurrent = 2, imgMinPx = 112, imgPxRange = 97)
-    // GRAFT_NO_BLOOMS: A/B switch — exact-anti-join-only seen set, no
-    // sidecar builds (attribution of the incremental bloom cost)
     val p = new CrawlPipeline(spark, root, webCfg, numBuckets = 64,
-      maxDepth = 4,
-      useBloomSeenFilter = !sys.env.contains("GRAFT_NO_BLOOMS"))
+      maxDepth = 4)
     if (warmup) p.runBatches(depth = 2, topN = 2000, maxPerHost = 40)
     else p.runBatches(depth = 3, topN = 50000, maxPerHost = 40)
     // fold the MoR delta chain so the full-width compaction write is
-    // measured too (it is the amortized cost the per-batch deltas defer);
-    // GRAFT_COMPACT_BINPACK=1 forces the major (exchange) path for A/B
-    p.compact(now = 1700000000000L + 99L * 3600000L,
-      binPack = sys.env.contains("GRAFT_COMPACT_BINPACK"))
+    // measured too (it is the amortized cost the per-batch deltas defer)
+    p.compact(now = 1700000000000L + 99L * 3600000L)
     val commits = p.log.commits()
     val fetched = commits.filter(_.stage == "fetch").map(_.rowCount).sum
     val fetchWall = commits.filter(_.stage == "fetch")

@@ -170,18 +170,8 @@ final class CrawlPipeline(
       .dropDuplicates("urlHash")
     val seq = log.nextSeq()
     val path = snapshotDir(seq)
-    val out = writeFrontier(rows, path)
-    val tB = System.nanoTime()
-    // sidecars only when the seen-filter is on — a pipeline that always
-    // takes the exact anti-join must not pay bloom builds it never reads
-    val bloomPaths =
-      if (useBloomSeenFilter)
-        Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq",
-          out.values.sum))
-      else Nil
-    commitStage(seq, "b0", "inject", path, out, now,
-      metrics = Map("bloomWallMs" -> (System.nanoTime() - tB) / 1e6),
-      bloomPaths = bloomPaths)
+    commitSnapshot(seq, "b0", "inject", path, writeFrontier(rows, path), now,
+      Map.empty)
     readFrontier(path)
   }
 
@@ -264,16 +254,9 @@ final class CrawlPipeline(
         c.stage == "compact")
       .lastOption
 
-  /** Resolve a commit's frontier view — Iceberg merge-on-read semantics:
-    * base snapshot minus keys present in any delta, union the latest
-    * delta version of each key. The delta chain is bounded by
-    * `compactEvery`, so the delta union (and the anti-join's broadcast
-    * side) stays topN-bounded; the base scan remains untouched columnar
-    * parquet. A full snapshot (no deltas) reads directly.
-    */
   /** Latest version of each key across an ordered list of delta frames
-    * (later frames win) — the chain fold shared by the MoR view and both
-    * compaction paths. Shuffle is DELTA-sized (topN-bounded per frame).
+    * (later frames win) — the chain fold shared by the MoR view and
+    * `foldChain`. Shuffle is DELTA-sized (topN-bounded per frame).
     */
   private def latestOf(frames: Seq[org.apache.spark.sql.DataFrame])
       : Dataset[CrawlRow] = {
@@ -295,6 +278,13 @@ final class CrawlPipeline(
       .as[CrawlRow]
   }
 
+  /** Resolve a commit's frontier view — Iceberg merge-on-read semantics:
+    * base snapshot minus keys present in any delta, union the latest
+    * delta version of each key. The delta chain is bounded by
+    * `compactEvery`, so the delta union (and the anti-join's broadcast
+    * side) stays topN-bounded; the base scan remains untouched columnar
+    * parquet. A full snapshot (no deltas) reads directly.
+    */
   private[crawl] def viewOf(c: Commit): Dataset[CrawlRow] = {
     if (c.deltas.isEmpty) readFrontier(c.frontierPath)
     else {
@@ -396,42 +386,70 @@ final class CrawlPipeline(
 
   /** Compact the delta chain into a full snapshot (the Iceberg MoR
     * compaction job). No-op when the state is already a full snapshot.
-    * Minor by default (no base exchange); `binPack` forces a major
-    * (exchange) rewrite that re-densifies the file layout.
     */
-  def compact(now: Long, binPack: Boolean = false): Unit =
-    lastState().foreach { c =>
-      if (c.deltas.nonEmpty) {
-        val seq = log.nextSeq()
-        val path = snapshotDir(seq)
-        val t0 = System.nanoTime()
-        val latest = latestOf(c.deltas.map(p => spark.read.parquet(p)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val baseUntouched = readFrontier(c.frontierPath)
-          .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
-            "left_anti")
-        val counts =
-          if (binPack || nextCompactionIsMajor() ||
-              !useNoExchangeCompaction(c.frontierPath))
-            writeFrontier(
-              baseUntouched.unionByName(latest.toDF()).as[CrawlRow], path)
-          else
-            writeSnapshotNoExchange(baseUntouched.as[CrawlRow], latest, path,
-              c.frontierPath)
-        latest.unpersist()
-        val compactMs = (System.nanoTime() - t0) / 1e6
-        val tB = System.nanoTime()
-        val bloomPaths =
-          if (useBloomSeenFilter)
-            Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq",
-              counts.values.sum))
-          else Nil
-        commitStage(seq, c.batchId, "compact", path, counts, now,
-          Map("compactWallMs" -> compactMs,
-            "bloomWallMs" -> ((System.nanoTime() - tB) / 1e6)),
-          bloomPaths = bloomPaths)
-      }
+  def compact(now: Long): Unit =
+    lastState().filter(_.deltas.nonEmpty).foreach { c =>
+      val seq = log.nextSeq()
+      val t0 = System.nanoTime()
+      val (path, counts, _) = foldChain(seq, c.frontierPath,
+        c.deltas.map(p => spark.read.parquet(p)))
+      commitSnapshot(seq, c.batchId, "compact", path, counts, now,
+        Map("compactWallMs" -> (System.nanoTime() - t0) / 1e6))
     }
+
+  /** Fold a delta chain (ordered frames, later wins) over the base
+    * snapshot at `basePath` into the full snapshot of `seq` — the one
+    * chain compaction behind both `compact` and updatedb's compacting
+    * merge. Minor by default: untouched base rows stream scan->writer
+    * bucket-aligned with NO exchange; only the folded chain (topN-bounded)
+    * shuffles. Every majorEvery-th compaction, and any base below
+    * `noExchangeMinBytes`, goes through the full exchange instead.
+    * Returns the snapshot path, its per-bucket counts and whether the
+    * compaction was major. The name holds no stage name, so per-stage
+    * tracing charges its Spark jobs to the calling stage.
+    */
+  private def foldChain(seq: Long, basePath: String,
+      chain: Seq[org.apache.spark.sql.DataFrame])
+      : (String, Map[String, Long], Boolean) = {
+    val path = snapshotDir(seq)
+    // persisted: the folded chain feeds TWO jobs (base anti-join keys +
+    // its own append) — without it the whole chain lineage would
+    // recompute per job
+    val latest = latestOf(chain)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val baseUntouched = readFrontier(basePath)
+      .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
+        "left_anti")
+      .as[CrawlRow]
+    val major = nextCompactionIsMajor()
+    val counts =
+      if (major || !useNoExchangeCompaction(basePath))
+        writeFrontier(baseUntouched.unionByName(latest), path)
+      else writeSnapshotNoExchange(baseUntouched, latest, path, basePath)
+    latest.unpersist()
+    (path, counts, major)
+  }
+
+  /** Commit a full snapshot together with one fresh bloom generation over
+    * it: inject and every compaction reset the bloom chain (the only full
+    * bloom builds). The build is timed apart from the stage's own work
+    * (`bloomWallMs`), so the commit attributes sidecar cost directly.
+    */
+  private def commitSnapshot(seq: Long, batchId: String, stage: String,
+      path: String, counts: Map[String, Long], now: Long,
+      metrics: Map[String, Double]): Commit = {
+    val tB = System.nanoTime()
+    // sidecars only when the seen-filter is on — a pipeline that always
+    // takes the exact anti-join must not pay bloom builds it never reads
+    val bloomPaths =
+      if (useBloomSeenFilter)
+        Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq",
+          counts.values.sum))
+      else Nil
+    commitStage(seq, batchId, stage, path, counts, now,
+      metrics + ("bloomWallMs" -> (System.nanoTime() - tB) / 1e6),
+      bloomPaths = bloomPaths)
+  }
 
   private def commitStage(seq: Long, batchId: String, stage: String,
       frontierPath: String, partCounts: Map[String, Long], now: Long,
@@ -527,14 +545,10 @@ final class CrawlPipeline(
     // F1 eligibility cascade + O3 max-interval clamp. With no per-site
     // config (the common full-scale case) every check is a pure Column
     // expression, so the ONLY per-batch full-frontier pass stays inside
-    // WholeStageCodegen with no object decode — same two-form pattern as
-    // mergeColumnar, pinned by the same parity spec. The trie path keeps
-    // the typed cascade (F4/F5: depth override + per-node sub-filters).
-    // GRAFT_GENERATE_TYPED forces the typed cascade (A/B harness for the
-    // columnar form; the per-host-cap branch below stays literal either
-    // way so the comparison isolates the eligibility pass)
-    val forceTyped = sys.env.contains("GRAFT_GENERATE_TYPED")
-    val eligible: Dataset[CrawlRow] = if (!hasPerSiteCaps && !forceTyped) {
+    // WholeStageCodegen with no object decode. The trie path keeps the
+    // typed cascade (F4/F5: depth override + per-node sub-filters); a
+    // parity spec pins the two forms row-for-row.
+    val eligible: Dataset[CrawlRow] = if (!hasPerSiteCaps) {
       val overdue = col("fetchTime") - lit(now) > lit(maxIntervalMs)
       frontier
         .filter(col("status") =!= lit(CrawlStatus.Gone) &&
@@ -842,135 +856,36 @@ final class CrawlPipeline(
     res
   }
 
-  /** The updatedb merge as pure Catalyst column expressions — the whole
-    * frontier pass stays inside WholeStageCodegen with no object
-    * round-trip (the typed variant decodes/encodes every CrawlRow).
-    * Semantics = graft.core.Schedule.next (non-adaptive) exactly; the
-    * parity suite pins equality against the simulator which CALLS
-    * Schedule.next, so drift between the two forms fails tests.
+  /** The updatedb merge: applies `Schedule.next` — the one source of
+    * truth for re-crawl scheduling, shared with the simulator oracle — to
+    * the touched rows that have a fetch outcome this batch, and refines
+    * the distance of rediscovered rows. Its input is the topN-bounded
+    * `touched` semi-join, so the object round-trip is delta-sized.
     */
-  private def mergeColumnar(frontier: Dataset[CrawlRow],
-      outcomes: Dataset[Outcome], discDist: Dataset[(Long, Int)],
-      nowMs: Long, sched: ScheduleConfig,
-      cfgIntervals: Option[org.apache.spark.sql.DataFrame] = None)
-      : Dataset[CrawlRow] = {
-    import org.apache.spark.sql.functions._
-    val dayMs = 24L * 3600 * 1000
-    val outDf = outcomes.toDF()
-      .withColumnRenamed("signature", "osig")
-      .withColumnRenamed("batchId", "obatch")
-      .withColumnRenamed("redirectTo", "oredir")
-    val j0 = frontier.toDF()
-      .join(broadcast(outDf), Seq("urlHash"), "left_outer")
-      .join(broadcast(discDist.toDF("urlHash", "newDist")), Seq("urlHash"),
-        "left_outer")
-    val j = cfgIntervals match {
-      case Some(ci) => j0.join(broadcast(ci), Seq("urlHash"), "left_outer")
-      case None => j0
-    }
-    // interval basis for rows WITH an outcome: the per-site refresh rule
-    // (NutchConstant.checkInterval — config interval wins when the stored
-    // one has drifted below half of it); identity when no config is set
-    val storedInterval = cfgIntervals match {
-      case Some(_) =>
-        when(col("cfgInterval").isNotNull &&
-          col("fetchInterval") < col("cfgInterval") * 0.5,
-          col("cfgInterval")).otherwise(col("fetchInterval"))
-      case None => col("fetchInterval")
-    }
-    val has = col("outcome").isNotNull
-    // distance refinement applies regardless of an outcome this batch
-    val dist = when(col("newDist").isNotNull &&
-      col("newDist") < col("distance"), col("newDist"))
-      .otherwise(col("distance"))
-    val changed = col("signature").isNull || !(col("signature") === col("osig"))
-    val eff = when(col("outcome") === FetchOutcome.Success && !changed,
-      lit(FetchOutcome.NotModified)).otherwise(col("outcome"))
-    val retriesNext = col("retries") + 1
-    val retryExceeded = retriesNext > sched.retryMax
-    // Gone interval penalty: min(max, (interval * 1.5).toLong).toInt
-    val goneInterval = least(lit(sched.maxIntervalSec.toLong),
-      floor(storedInterval * 1.5)).cast("int")
-    val newStatus =
-      when(eff === FetchOutcome.Success, lit(CrawlStatus.Fetched))
-        .when(eff === FetchOutcome.NotModified, lit(CrawlStatus.NotModified))
-        .when(eff === FetchOutcome.RetryTransient,
-          when(retryExceeded, lit(CrawlStatus.Gone))
-            .otherwise(lit(CrawlStatus.Retry)))
-        .when(eff === FetchOutcome.Gone, lit(CrawlStatus.Gone))
-        .when(eff === FetchOutcome.RedirTemp, lit(CrawlStatus.RedirTemp))
-        .otherwise(lit(CrawlStatus.RedirPerm))
-    val newFetchTime =
-      when(eff === FetchOutcome.RetryTransient,
-        when(retryExceeded, lit(nowMs) + storedInterval * 1000L)
-          .otherwise(lit(nowMs + dayMs)))
-        .when(eff === FetchOutcome.Gone, lit(nowMs) + goneInterval * 1000L)
-        .otherwise(lit(nowMs) + storedInterval * 1000L)
-    val newInterval =
-      when(eff === FetchOutcome.Gone, goneInterval)
-        .otherwise(storedInterval)
-    val newRetries =
-      when(eff === FetchOutcome.RetryTransient, retriesNext)
-        .when(eff === FetchOutcome.Success ||
-          eff === FetchOutcome.NotModified, lit(0))
-        .otherwise(col("retries"))
-    val newModified =
-      when(eff === FetchOutcome.Success, lit(nowMs))
-        .otherwise(col("modifiedTime"))
-    val sigEmpty = length(col("osig")) === 0
-    j.select(
-      col("urlHash"), col("url"), col("host"), col("domain"), col("bucket"),
-      when(has, newStatus).otherwise(col("status")).as("status"),
-      col("score"),
-      when(has, newFetchTime).otherwise(col("fetchTime")).as("fetchTime"),
-      when(has, col("fetchTime")).otherwise(col("prevFetchTime"))
-        .as("prevFetchTime"),
-      when(has, newInterval).otherwise(col("fetchInterval"))
-        .as("fetchInterval"),
-      when(has, newRetries).otherwise(col("retries")).as("retries"),
-      when(has, newModified).otherwise(col("modifiedTime"))
-        .as("modifiedTime"),
-      when(has, when(sigEmpty, col("signature")).otherwise(col("osig")))
-        .otherwise(col("signature")).as("signature"),
-      when(has, col("signature")).otherwise(col("prevSignature"))
-        .as("prevSignature"),
-      dist.as("distance"),
-      when(has, col("obatch")).otherwise(col("lastBatch")).as("lastBatch"),
-      // reprUrl: permanent fetch-level redirects, plus PERMANENT meta
-      // refreshes (Success outcome, refreshTime < PERM_REFRESH_TIME —
-      // ParseUtil.java:271's chooseRepr permanence rule)
-      when(has && col("oredir") =!= "" &&
-        (col("outcome") === FetchOutcome.RedirPerm ||
-          (col("outcome") === FetchOutcome.Success &&
-            col("refreshTime").between(0, Parse.PermRefreshTime - 1))),
-        col("oredir"))
-        .otherwise(col("reprUrl")).as("reprUrl"),
-      col("anchor"), col("cfgId"), col("crawlType"))
-      .as[CrawlRow]
-  }
-
-  /** Typed merge (adaptive schedules; also the readable reference form). */
   private def mergeTyped(frontier: Dataset[CrawlRow],
       outcomes: Dataset[Outcome], discDist: Dataset[(Long, Int)],
-      now: Long, sched: ScheduleConfig,
-      refreshCfgInterval: Boolean = false): Dataset[CrawlRow] = {
+      now: Long): Dataset[CrawlRow] = {
     val trie = trieBc
+    val sched = scheduleCfg
+    val perSiteIntervals = hasPerSiteCaps
     frontier
       .joinWith(broadcast(outcomes),
         frontier("urlHash") === outcomes("urlHash"), "left_outer")
       .joinWith(broadcast(discDist.toDF("urlHash", "newDist")
         .as[(Long, Int)]),
-        org.apache.spark.sql.functions.col("_1.urlHash") ===
-          org.apache.spark.sql.functions.col("urlHash"), "left_outer")
-      .map { case ((row0, outRaw), dd) =>
+        col("_1.urlHash") === col("urlHash"), "left_outer")
+      .map { case ((row0, out), dd) =>
         val row1 =
           if (dd == null || dd._2 >= row0.distance) row0
           else row0.copy(distance = dd._2)
-        val out = outRaw
-        // per-site interval refresh on re-crawl (scalar twin of the
-        // columnar storedInterval rule; NutchConstant.checkInterval)
+        // per-site interval refresh on re-crawl (reference
+        // DbConfigFetchSchedule.shouldFetch -> NutchConstant.checkInterval
+        // :975-989): a stored interval below HALF the config's
+        // customInterval is reset to the config value, so a site whose
+        // trie config changes after discovery picks the new interval up
+        // at its next merge
         val row =
-          if (out == null || !refreshCfgInterval) row1
+          if (out == null || !perSiteIntervals) row1
           else {
             val ci = trie.value.configOrDefault(row1.url).customIntervalSec
             if (ci > 0 && row1.fetchInterval < ci * 0.5)
@@ -1106,30 +1021,10 @@ final class CrawlPipeline(
     val touched = frontier
       .join(broadcast(touchedKeys), Seq("urlHash"), "left_semi")
       .as[CrawlRow]
-    // Per-site interval re-applied on RE-CRAWL (reference
-    // DbConfigFetchSchedule.shouldFetch -> NutchConstant.checkInterval
-    // :975-989: a stored interval below HALF the config's customInterval
-    // is reset to the config value at schedule time) — a site whose trie
-    // config changes after discovery picks the new interval up at its
-    // next merge instead of keeping the discovery-time schedule forever.
-    // The probe is bounded: touched is topN-bounded, and only rows under
-    // a customIntervalSec > 0 config survive; with no per-site config the
-    // merge plan is byte-identical to before (None => no join planned).
-    val cfgIntervals: Option[org.apache.spark.sql.DataFrame] =
-      if (!hasPerSiteCaps) None
-      else Some(touched
-        .map(r =>
-          (r.urlHash, trie.value.configOrDefault(r.url).customIntervalSec))
-        .filter(_._2 > 0).toDF("urlHash", "cfgInterval"))
-    val merged: Dataset[CrawlRow] =
-      if (sched.adaptive)
-        mergeTyped(touched, outcomes, discDist, now, sched,
-          refreshCfgInterval = hasPerSiteCaps)
-      else mergeColumnar(touched, outcomes, discDist, now, sched,
-        cfgIntervals)
+    val merged = mergeTyped(touched, outcomes, discDist, now)
     // ScoringFilter updateDbScore hook for EXISTING rows, as a columnar
-    // step shared by both merge forms; skipped entirely (no join in the
-    // plan) for filters that keep stored scores, like Default
+    // step after the merge; skipped entirely (no join in the plan) for
+    // filters that keep stored scores, like Default
     val changed: Dataset[CrawlRow] =
       if (!scoring.updatesExistingScores) merged
       else merged.toDF
@@ -1210,54 +1105,20 @@ final class CrawlPipeline(
     // batch made the snapshot exchange the merge stage's scaling
     // bottleneck (0.60 efficiency); here the per-batch merge cost is
     // O(delta) and the full-width exchange is amortized over the chain.
-    val chainLen = prev.map(_.deltas.size).getOrElse(0)
+    val basePath = prev.map(_.frontierPath).getOrElse("")
+    val chain = prev.map(_.deltas).getOrElse(Nil)
     val seq = log.nextSeq()
     val t0 = System.nanoTime()
     val delta = changed.union(newRows)
     val result =
-      if (chainLen >= compactEvery - 1) {
+      if (chain.size >= compactEvery - 1) {
         // compacting merge: fold the chain + this batch into a full
-        // snapshot. Minor (default): untouched base rows stream
-        // scan->writer bucket-aligned with NO exchange; only the folded
-        // chain (topN-bounded) shuffles. Every majorEvery-th compaction
-        // bin-packs through the full exchange instead.
-        val path = snapshotDir(seq)
-        val chainFrames = prev.map(_.deltas).getOrElse(Nil)
-          .map(p => spark.read.parquet(p))
-        // persisted: the folded chain feeds TWO jobs (base anti-join keys
-        // + its own append) — without it the whole merge lineage would
-        // recompute per job
-        val latest = latestOf(chainFrames :+ delta.toDF()).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val basePath = prev.map(_.frontierPath).getOrElse("")
-        val baseUntouched = readFrontier(basePath)
-          .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
-            "left_anti")
-        val major = nextCompactionIsMajor()
-        val counts =
-          if (major || !useNoExchangeCompaction(basePath))
-            writeFrontier(
-              baseUntouched.unionByName(latest.toDF()).as[CrawlRow], path)
-          else
-            writeSnapshotNoExchange(baseUntouched.as[CrawlRow], latest, path,
-              basePath)
-        latest.unpersist()
-        val mergeMs = (System.nanoTime() - t0) / 1e6
-        // compaction resets the bloom chain: one fresh generation over
-        // the new snapshot (the only full bloom build after inject).
-        // Timed separately from the merge so the artifact attributes
-        // sidecar cost vs merge cost directly.
-        val tB = System.nanoTime()
-        val bloomPaths =
-          if (useBloomSeenFilter)
-            Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq",
-              counts.values.sum))
-          else Nil
-        commitStage(seq, batchId, "updatedb", path, counts, now,
-          Map("mergeWallMs" -> mergeMs,
-            "bloomWallMs" -> (System.nanoTime() - tB) / 1e6,
-            "compacted" -> (if (major) 2.0 else 1.0)),
-          bloomPaths = bloomPaths)
+        // snapshot
+        val (path, counts, major) = foldChain(seq, basePath,
+          chain.map(p => spark.read.parquet(p)) :+ delta.toDF())
+        commitSnapshot(seq, batchId, "updatedb", path, counts, now,
+          Map("mergeWallMs" -> (System.nanoTime() - t0) / 1e6,
+            "compacted" -> (if (major) 2.0 else 1.0)))
       } else {
         val deltaPath = s"$root/frontier/delta-$seq"
         // lineage counts for a delta commit describe the DELTA files — no
@@ -1269,8 +1130,6 @@ final class CrawlPipeline(
         val (obsDelta, oD) = observeBucketCounts(delta)
         obsDelta.repartition(math.max(1, numBuckets / 8), col("bucket"))
           .write.mode(SaveMode.Overwrite).parquet(deltaPath)
-        val basePath = prev.map(_.frontierPath).getOrElse("")
-        val deltas = prev.map(_.deltas).getOrElse(Nil) :+ deltaPath
         val mergeMs = (System.nanoTime() - t0) / 1e6
         // fallback re-scan is DELTA-sized (topN-bounded), never the view
         val deltaCounts = observedCounts(oD).getOrElse(
@@ -1291,7 +1150,7 @@ final class CrawlPipeline(
           total, deltaCounts,
           Map("mergeWallMs" -> mergeMs,
             "bloomWallMs" -> (System.nanoTime() - tB) / 1e6),
-          now, deltas, blooms))
+          now, chain :+ deltaPath, blooms))
       }
     discAgg.unpersist()
     checkedCache.foreach(_.unpersist())
@@ -1443,21 +1302,20 @@ final class CrawlPipeline(
     */
   def runBatches(depth: Int, topN: Int, maxPerHost: Int,
       startTime: Long = 1700000000000L): Dataset[CrawlRow] = {
-    var frontier = lastState() match {
+    // the frontier VIEW is consumed by generate, the seen-set bloom, the
+    // anti-join, the touched semi-join, and hostdb — cache each view once
+    // instead of re-resolving base ∖ deltas per consumer. The returned
+    // view stays cached.
+    var frontier = (lastState() match {
       case Some(c) => viewOf(c)
       case None =>
         inject(SyntheticWeb.seeds(webCfg), startTime)
-    }
+    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val committed = log.commits().map(c => (c.batchId, c.stage)).toSet
     for (i <- 1 to depth) {
       val batchId = s"b$i"
       if (!committed((batchId, "updatedb"))) {
         val now = startTime + i * 3600000L // 1h virtual tick per batch
-        // the frontier VIEW is consumed by generate, the seen-set bloom,
-        // the anti-join, the touched semi-join, and hostdb — cache it for
-        // the batch instead of re-resolving base ∖ deltas per consumer
-        frontier.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // T2 step gate: a committed stage is never re-run — resume picks
         // up the staged parquet exactly where the crash left off
         val list =
@@ -1465,9 +1323,10 @@ final class CrawlPipeline(
             spark.read.parquet(s"$root/batches/$batchId/fetchlist")
               .as[CrawlRow]
           else generate(frontier, batchId, now, topN, maxPerHost)
-        if (list.isEmpty) {
-          // T2: empty step => skip remaining stages (exitValue=2 analog)
-        } else {
+        // T2: empty step => skip remaining stages (exitValue=2 analog).
+        // The generate commit (this batch's, fresh or resumed) holds the
+        // fetchlist size observed on its write — no count job
+        if (log.lastOf("generate").exists(_.rowCount > 0)) {
           val fetched =
             if (committed((batchId, "fetch")))
               spark.read.parquet(s"$root/batches/$batchId/fetched")

@@ -265,27 +265,49 @@ class CrawlParitySpec extends AnyFunSuite {
     // 30-min interval with 1-h batch ticks => rows refetch in later
     // batches; unchanged signatures drive the NotModified path and the
     // adaptive interval growth — exercising the typed merge and the
-    // re-crawl state machine, which single-pass crawls never reach
-    val sched = graft.core.ScheduleConfig(defaultIntervalSec = 1800,
-      adaptive = true)
-    val cfg = webCfg.copy(numHosts = 4, pagesPerHost = 8)
-    val dir = Files.createTempDirectory("crawl-recrawl").toString
-    val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
-      scheduleCfg = sched)
-    p.runBatches(4, 40, 8)
-    val s = new Simulator(cfg, scheduleCfg = sched)
-    s.runBatches(4, 40, 8)
-    val rows = p.frontierState()
-      .collect().map(r => r.url ->
-        (r.status, r.fetchTime, r.fetchInterval, r.retries)).toMap
-    assert(rows.keySet === s.seenSet)
-    s.frontier.foreach { case (url, r) =>
-      assert(rows(url) === ((r.status, r.fetchTime, r.interval, r.retries)),
-        s"mismatch for $url")
+    // re-crawl state machine, which single-pass crawls never reach.
+    // The fixed schedule runs too: the shared parity crawl (30-day
+    // interval) never refetches, so this is its only re-crawl case.
+    Seq(false, true).foreach { adaptive =>
+      val sched = graft.core.ScheduleConfig(defaultIntervalSec = 1800,
+        adaptive = adaptive)
+      val cfg = webCfg.copy(numHosts = 4, pagesPerHost = 8)
+      val dir = Files.createTempDirectory(s"crawl-recrawl-$adaptive").toString
+      val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
+        scheduleCfg = sched)
+      p.runBatches(4, 40, 8)
+      val s = new Simulator(cfg, scheduleCfg = sched)
+      s.runBatches(4, 40, 8)
+      val rows = p.frontierState()
+        .collect().map(r => r.url ->
+          (r.status, r.fetchTime, r.fetchInterval, r.retries)).toMap
+      assert(rows.keySet === s.seenSet)
+      s.frontier.foreach { case (url, r) =>
+        assert(rows(url) === ((r.status, r.fetchTime, r.interval, r.retries)),
+          s"mismatch for $url (adaptive=$adaptive)")
+      }
+      // the NotModified path actually fired
+      assert(s.frontier.values.exists(_.status ==
+        graft.core.CrawlStatus.NotModified))
     }
-    // the NotModified path actually fired
-    assert(s.frontier.values.exists(_.status ==
-      graft.core.CrawlStatus.NotModified))
+  }
+
+  /** Every full-snapshot commit's partition counts (observed on its
+    * write pass) equal the per-bucket row counts of its files; `stage`
+    * must be among the commits checked.
+    */
+  private def assertSnapshotCountsMatchFiles(p: CrawlPipeline,
+      stage: String): Unit = {
+    val full = p.log.commits().filter(c => c.deltas.isEmpty &&
+      Set("inject", "updatedb", "compact").contains(c.stage))
+    assert(full.exists(_.stage == stage), s"no full $stage snapshot")
+    full.foreach { c =>
+      val actual = spark.read.parquet(c.frontierPath)
+        .groupBy(col("bucket")).count().as[(Int, Long)].collect()
+        .map { case (b, n) => b.toString -> n }.toMap
+      assert(c.partitionCounts === actual,
+        s"${c.stage} seq=${c.seq}: observed counts drifted from files")
+    }
   }
 
   test("MoR delta chain + compaction: state identical to per-batch snapshots") {
@@ -297,6 +319,7 @@ class CrawlParitySpec extends AnyFunSuite {
       val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
         compactEvery = every)
       p.runBatches(4, 40, 8)
+      assertSnapshotCountsMatchFiles(p, "updatedb")
       val deltaCommits = p.log.commits()
         .count(c => c.stage == "updatedb" && c.deltas.nonEmpty)
       (p.frontierState().collect()
@@ -323,6 +346,7 @@ class CrawlParitySpec extends AnyFunSuite {
     p.compact(now = 1700000000000L + 99 * 3600000L)
     assert(p.lastState().get.deltas.isEmpty)
     assert(p.lastState().get.stage === "compact")
+    assertSnapshotCountsMatchFiles(p, "compact")
     val after = p.frontierState().collect()
       .map(r => (r.url, r.status, r.fetchTime)).toSet
     assert(after === before)
