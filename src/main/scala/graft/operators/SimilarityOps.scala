@@ -1,15 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Similarity search over the `embeddings` table (`Array[Float]` vectors).
+/** Similarity search over the `embeddings` table (`Array[Float]` vectors,
+  * widened to doubles on read).
   *
-  * Brute-force cosine top-k is the exactness baseline (SQL-oracle-checked);
-  * the LSH-bucketed variant is the 100 TB path: random-hyperplane signatures
-  * prune candidates so the pair join is per-bucket, not |Q|x|N|. All vector
-  * math is codegen'd `zip_with`/`aggregate` over doubles — no UDF.
+  * Four top-k searches rank the first `nQueries` vectors against the
+  * table: brute force (the SQL-oracle-checked exactness baseline), IVF,
+  * IVF-PQ and multi-table LSH. Brute force, IVF and both PQ stages are one
+  * broadcast-probe scan, [[probeTopK]]: the probe side is |Q| rows, so it
+  * is collected and broadcast, and each partition keeps only its k best
+  * rows per query for one window rank. LSH groups by (table, bucket)
+  * instead, so candidate generation never scans |Q|x|N| pairs.
+  *
+  * Vector math runs in JVM loops over `Array[Double]`: an unrolled
+  * Catalyst dot of 64 terms exceeds the codegen method limit and falls
+  * back to interpreted evaluation, and per-row array accessors dominate
+  * the arithmetic. Every reported similarity is [[round4]] of a
+  * left-to-right dot over the product of the norms, which is what the
+  * DuckDB oracle's `round(list_cosine_similarity(...), 4)` computes.
   */
 object SimilarityOps {
 
@@ -19,6 +32,12 @@ object SimilarityOps {
   final case class VecBucket(tbl: Int, bucket: Long, vecId: Long,
       v: Array[Double], nrm: Double)
 
+  /** A broadcast query vector: (vec_id, vector, norm). */
+  private type Probe = (Long, Array[Double], Double)
+
+  /** Receives one scored (query_id, vec_id, score) row. */
+  private type Emit = (Long, Long, Double) => Unit
+
   private def dotArr(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
@@ -26,24 +45,40 @@ object SimilarityOps {
     s
   }
 
-  private def round4(x: Double): Double = math.rint(x * 1e4) / 1e4
+  private def norm(v: Array[Double]): Double = math.sqrt(dotArr(v, v))
 
-  /** Catalyst `round(col, 4)` semantics for doubles (Round expression:
-    * shortest-decimal BigDecimal, HALF_UP, NaN/Inf passthrough) — lets a
-    * JVM-loop scoring path emit values bit-identical to the Column form
-    * it replaces.
+  private def unit(v: Array[Double]): Array[Double] = {
+    val n = norm(v)
+    if (n == 0) v else v.map(_ / n)
+  }
+
+  /** Catalyst `round(x, 4)` for doubles: the shortest decimal of `x`
+    * rounded HALF_UP, NaN and ±Inf passed through, -0.0 returned as 0.0.
+    *
+    * `rint(x * 1e4)` picks the same integer whenever `x * 1e4` lies more
+    * than 1e-6 from a half step: below 1e9 the product and the shortest
+    * decimal differ from the exact value by under 2e-7, and `n / 1e4` is
+    * the correctly rounded double that `BigDecimal.toDouble` returns too.
+    * Only near-ties and large magnitudes build a BigDecimal.
     */
-  private def roundHalfUp4(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else BigDecimal(x).setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP)
-      .toDouble
+  private[operators] def round4(x: Double): Double = {
+    val y = x * 1e4
+    if (math.abs(y) < 1e9 && math.abs(y - math.floor(y) - 0.5) > 1e-6)
+      math.rint(y) / 1e4 + 0.0 // + 0.0 turns -0.0 into 0.0
+    else if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
+  /** The similarity every search reports: the rounded cosine. */
+  private def roundedCos(a: Array[Double], na: Double, b: Array[Double],
+      nb: Double): Double = round4(dotArr(a, b) / (na * nb))
 
   /** Bounded per-query top-k buffer ordered by (sim DESC, id ASC) — the
     * window ordering every top-k query ranks with. Insertion keeps the k
-    * best; ties use the id. Used by the mapPartitions scoring paths so
-    * the final window ranks a few hundred pre-pruned rows instead of the
-    * full |Q|x|candidates| score matrix (the global top-k is always a
-    * subset of the per-partition top-k under the same ordering).
+    * best; ties use the id. The global top-k is always a subset of the
+    * per-partition top-k under the same ordering, so the final window
+    * ranks a few hundred pre-pruned rows instead of the full
+    * |Q|x|candidates| score matrix.
     */
   private final class TopK(k: Int) {
     private val sims = new Array[Double](k)
@@ -74,81 +109,79 @@ object SimilarityOps {
       (0 until n).iterator.map(i => (ids(i), sims(i)))
   }
 
-  private def emb(s: SparkSession, dir: String): DataFrame =
+  /** The embeddings table as (vec_id, vector) rows, widened to doubles. */
+  private def vectors(s: SparkSession, dir: String)
+      : Dataset[(Long, Array[Double])] = {
+    import s.implicits._
     s.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .as[(Long, Array[Double])]
+  }
 
-  /** Dot product of two fixed-dim double-array columns, unrolled into a
-    * straight-line codegen'd expression tree (element_at + multiply-add).
-    * Left-to-right addition keeps bit-parity with DuckDB's sequential
-    * list_cosine_similarity on DOUBLE[]. The higher-order
-    * aggregate(zip_with(...)) form evaluates lambdas per element — 8x
-    * slower on the candidate-pair hot path (measured 74s -> seconds at
-    * 2000x2000 candidates).
+  /** The first `nQueries` vectors in id order: the probe side every
+    * search collects and broadcasts.
     */
-  def dot(a: Column, b: Column, dim: Int): Column =
-    (0 until dim).map(i => a.getItem(i) * b.getItem(i)).reduce(_ + _)
+  private def probes(e: Dataset[(Long, Array[Double])], nQueries: Int)
+      : Array[Probe] =
+    e.filter(col("vec_id") < nQueries).collect().sortBy(_._1)
+      .map { case (id, v) => (id, v, norm(v)) }
 
-  /** Cosine from a precomputed-norm pair: dot / (nrmA * nrmB). */
-  def cosine(a: Column, b: Column, nrmA: Column, nrmB: Column, dim: Int)
-      : Column = dot(a, b, dim) / (nrmA * nrmB)
+  /** Emits the rounded cosine of candidate (id, v) against every probe
+    * other than itself.
+    */
+  private def scoreExact(id: Long, v: Array[Double], probes: Array[Probe],
+      emit: Emit): Unit = {
+    val nrm = norm(v)
+    var i = 0
+    while (i < probes.length) {
+      val (qid, qv, qn) = probes(i)
+      if (id != qid) emit(qid, id, roundedCos(v, nrm, qv, qn))
+      i += 1
+    }
+  }
 
-  /** Cosine with inline norms (oracle-parity path). */
-  def cosine(a: Column, b: Column, dim: Int): Column =
-    dot(a, b, dim) / (sqrt(dot(a, a, dim)) * sqrt(dot(b, b, dim)))
+  /** Keeps the k best (query_id, vec_id, score) rows per query, ranked
+    * `rn` by (score DESC, vec_id ASC) so ties rank the same on any engine.
+    */
+  private def rankTopK(scored: DataFrame, k: Int, score: String = "sim")
+      : DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(score).desc, col("vec_id").asc)
+    scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("query_id"), col("vec_id"), col(score), col("rn"))
+  }
 
-  private def asDouble(c: Column): Column = transform(c, _.cast("double"))
+  /** The broadcast-probe top-k scan: one narrow pass in which `scoreRow`
+    * emits the scored (query, candidate) rows of one vector, reading the
+    * probes from a broadcast it captures. Each partition keeps a [[TopK]]
+    * per query, and [[rankTopK]] ranks the survivors.
+    */
+  private def probeTopK(e: Dataset[(Long, Array[Double])], k: Int,
+      score: String = "sim")(
+      scoreRow: (Long, Array[Double], Emit) => Unit): DataFrame = {
+    import e.sparkSession.implicits._
+    val partial = e.mapPartitions { it =>
+      val heaps = mutable.LongMap[TopK]()
+      val emit: Emit = (qid, id, sc) =>
+        heaps.getOrElseUpdate(qid, new TopK(k)).add(sc, id)
+      it.foreach { case (id, v) => scoreRow(id, v, emit) }
+      heaps.iterator.flatMap { case (qid, h) =>
+        h.result.map { case (id, sc) => (qid, id, sc) }
+      }
+    }.toDF("query_id", "vec_id", score)
+    rankTopK(partial, k, score)
+  }
 
   /** Brute-force cosine top-k: the first `nQueries` vectors against the
-    * whole table. The query side broadcasts (it is tiny); the candidate
-    * scan is embarrassingly parallel; ranking is one window shuffle over
-    * the per-partition top-k survivors. Ranked on ROUNDED similarity +
-    * id tie-break so the ranking is reproducible across engines.
-    *
-    * Round-7: the |Q|x|N| score matrix is computed in a partition-local
-    * JVM loop instead of a Catalyst Project — the unrolled 3x64-term
-    * expression tree (dot + both norms) exceeded the codegen method
-    * limits and fell back to interpreted eval, measuring 15-18 s at
-    * sf0.1 vs <1 s for this loop producing bit-identical output (same
-    * left-to-right summation, same Catalyst round semantics via
-    * roundHalfUp4). Each partition keeps only its k best rows per query
-    * (TopK, same (sim DESC, id ASC) order as the window), so the window
-    * input shrinks from |Q|x|N| to |Q|x k x #partitions.
+    * whole table, ranked on ROUNDED similarity + id tie-break so the
+    * ranking is reproducible across engines.
     */
-  def cosineTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-      dim: Int = 64): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-    val qs = e.filter(col("vec_id") < nQueries)
-      .as[(Long, Array[Float])].collect()
-      .sortBy(_._1)
-      .map { case (id, vf) =>
-        val v = vf.map(_.toDouble)
-        (id, v, math.sqrt(dotArr(v, v)))
-      }
-    val bc = s.sparkContext.broadcast(qs)
-    val partial = e.as[(Long, Array[Float])].mapPartitions { it =>
-      val queries = bc.value
-      val heaps = queries.map(_ => new TopK(k))
-      it.foreach { case (id, vf) =>
-        val v = vf.map(_.toDouble)
-        val nrm = math.sqrt(dotArr(v, v))
-        var qi = 0
-        while (qi < queries.length) {
-          val (qid, qv, qn) = queries(qi)
-          if (id != qid)
-            heaps(qi).add(roundHalfUp4(dotArr(v, qv) / (nrm * qn)), id)
-          qi += 1
-        }
-      }
-      queries.iterator.zip(heaps.iterator).flatMap { case ((qid, _, _), h) =>
-        h.result.map { case (id, sim) => (qid, id, sim) }
-      }
-    }.toDF("query_id", "vec_id", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    partial.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rn"))
+  def cosineTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5)
+      : DataFrame = {
+    val e = vectors(s, dir)
+    val bc = s.sparkContext.broadcast(probes(e, nQueries))
+    probeTopK(e, k)((id, v, emit) => scoreExact(id, v, bc.value, emit))
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane p, dim i):
@@ -159,6 +192,29 @@ object SimilarityOps {
       val h = graft.core.XxHash64.hashLong(p.toLong << 32 | i.toLong, 99L)
       (h.toDouble / Long.MaxValue.toDouble)
     }
+
+  /** Multi-table random-hyperplane LSH: `nTables` independent tables of
+    * `planesPerTable` sign bits each. A pair of similar vectors collides in
+    * at least one table with probability 1-(1-p^b)^L where p = 1 - theta/pi.
+    */
+  private def lshPlanes(nTables: Int, planesPerTable: Int, dim: Int)
+      : Array[Array[Array[Double]]] =
+    Array.tabulate(nTables, planesPerTable)((t, p) =>
+      hyperplane(t * planesPerTable + p, dim))
+
+  /** `v`'s bucket in one LSH table: its hyperplane signs, first plane in
+    * the high bit.
+    */
+  private def bucketOf(v: Array[Double], planes: Array[Array[Double]])
+      : Long = {
+    var bucket = 0L
+    var p = 0
+    while (p < planes.length) {
+      bucket = bucket * 2 + (if (dotArr(v, planes(p)) >= 0) 1L else 0L)
+      p += 1
+    }
+    bucket
+  }
 
   /** Hot-bucket cap: a popular LSH bucket does O(|bucket|^2) pair work in
     * one task — at corpus scale one dense bucket becomes a multi-hour
@@ -191,32 +247,6 @@ object SimilarityOps {
     split(members, 0)
   }
 
-  /** Explode a vector table into one row per (LSH table, bucket).
-    * Multi-table random-hyperplane LSH: `nTables` independent tables of
-    * `planesPerTable` sign bits each. A pair of similar vectors collides in
-    * at least one table with probability 1-(1-p^b)^L where p = 1 - theta/pi.
-    * Everything is codegen'd column math; the (table, bucket) pair is a
-    * plain shuffle key.
-    */
-  private def withBuckets(e: DataFrame, nTables: Int, planesPerTable: Int,
-      dim: Int): DataFrame = {
-    val tables = (0 until nTables).map { t =>
-      val planes = (0 until planesPerTable)
-        .map(p => hyperplane(t * planesPerTable + p, dim))
-      val planesLit = array(planes.map(p => array(p.map(lit): _*)): _*)
-      struct(lit(t).as("tbl"),
-        aggregate(
-          transform(planesLit, pl =>
-            when(aggregate(zip_with(col("v"), pl, (x, y) => x * y),
-              lit(0.0), _ + _) >= 0, lit(1L)).otherwise(lit(0L))),
-          lit(0L), (acc, bit) => acc * 2 + bit).as("bucket"))
-    }
-    e.withColumn("nrm", sqrt(dot(col("v"), col("v"), dim)))
-      .withColumn("tb", explode(array(tables: _*)))
-      .select(col("*"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-      .drop("tb")
-  }
-
   /** LSH-bucketed ANN: candidates = vectors sharing (table, bucket) with
     * the query in ANY of the tables, deduped, then exactly scored and
     * ranked. Scale path: candidate generation is a co-partitioned equi-join
@@ -227,42 +257,19 @@ object SimilarityOps {
       k: Int = 5, nTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
       bucketCap: Int = 512): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // Round-7 pre-filter: only buckets CONTAINING a query can emit rows
-    // (flatMapGroups yields nothing when `queries` is empty), so compute
-    // the |Q| x nTables query bucket keys driver-side — the same planes
-    // and fold order as toVecBuckets — and drop every other bucket
-    // BEFORE the shuffle. The 8-table explode shipped the full vector
-    // payload of all 8|N| membership rows; now only rows colliding with
-    // a query bucket shuffle. Output unchanged: the filter keeps or
-    // drops whole (tbl, bucket) groups, never individual members.
-    val planesQ = Array.tabulate(nTables * planesPerTable)(p =>
-      hyperplane(p, dim))
-    val queryBuckets: Set[Long] = emb(s, dir)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .as[(Long, Array[Double])].collect()
-      .flatMap { case (_, v) =>
-        (0 until nTables).map { t =>
-          var bucket = 0L
-          var p = 0
-          while (p < planesPerTable) {
-            bucket = bucket * 2 +
-              (if (dotArr(v, planesQ(t * planesPerTable + p)) >= 0) 1L else 0L)
-            p += 1
-          }
-          (t.toLong << 32) | bucket
-        }
-      }.toSet
+    val e = vectors(s, dir)
+    val planes = lshPlanes(nTables, planesPerTable, dim)
+    // only a bucket holding a query can emit rows, so every other bucket
+    // is dropped before the shuffle; the filter keeps or drops whole
+    // (table, bucket) groups, never single members
+    val queryBuckets: Set[Long] = probes(e, nQueries).flatMap { q =>
+      planes.indices.map(t => (t.toLong << 32) | bucketOf(q._2, planes(t)))
+    }.toSet
     val qbBc = s.sparkContext.broadcast(queryBuckets)
-    val bucketed = toVecBuckets(e, nTables, planesPerTable, dim)
+    // capBuckets bounds each group's pair loop at O(cap^2): clustered data
+    // makes LSH buckets genuinely dense
+    val scored = toVecBuckets(e, planes)
       .filter(r => qbBc.value.contains((r.tbl.toLong << 32) | r.bucket))
-    // pair scoring inside the bucket group at JVM speed: clustered data
-    // makes LSH buckets genuinely dense, so the candidate volume is
-    // millions of pairs — Catalyst array element access was an ~80x
-    // penalty on this hot loop (measured 40s -> ~2s at 2000 vectors).
-    // capBuckets bounds each group's pair loop at O(cap^2).
-    val scored = bucketed
       .groupByKey(r => (r.tbl, r.bucket))
       .flatMapGroups { (_: (Int, Long), it: Iterator[VecBucket]) =>
         capBuckets(it.toArray, bucketCap, dim).flatMap { members =>
@@ -270,42 +277,30 @@ object SimilarityOps {
           for {
             q <- queries.iterator
             c <- members.iterator if c.vecId != q.vecId
-          } yield (q.vecId, c.vecId,
-            round4(dotArr(q.v, c.v) / (q.nrm * c.nrm)))
+          } yield (q.vecId, c.vecId, roundedCos(q.v, q.nrm, c.v, c.nrm))
         }
       }
       .toDF("query_id", "vec_id", "sim")
       .dropDuplicates("query_id", "vec_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rn"))
+    rankTopK(scored, k)
   }
 
-  /** Bucketed membership as a typed Dataset (hyperplane signs computed
-    * row-wise in JVM code — same deterministic planes as withBuckets).
-    */
-  private def toVecBuckets(e: DataFrame, nTables: Int, planesPerTable: Int,
-      dim: Int): org.apache.spark.sql.Dataset[VecBucket] = {
+  /** Bucketed membership: one row per (LSH table, vector). */
+  private def toVecBuckets(e: Dataset[(Long, Array[Double])],
+      planes: Array[Array[Array[Double]]]): Dataset[VecBucket] = {
     import e.sparkSession.implicits._
-    val planes = Array.tabulate(nTables * planesPerTable)(p =>
-      hyperplane(p, dim))
-    e.select(col("vec_id"), col("v")).as[(Long, Array[Double])]
-      .flatMap { case (id, v) =>
-        val nrm = math.sqrt(dotArr(v, v))
-        (0 until nTables).map { t =>
-          var bucket = 0L
-          var p = 0
-          while (p < planesPerTable) {
-            val d = dotArr(v, planes(t * planesPerTable + p))
-            bucket = bucket * 2 + (if (d >= 0) 1L else 0L)
-            p += 1
-          }
-          VecBucket(t, bucket, id, v, nrm)
-        }
-      }
+    e.flatMap { case (id, v) =>
+      val nrm = norm(v)
+      planes.indices.map(t => VecBucket(t, bucketOf(v, planes(t)), id, v, nrm))
+    }
   }
+
+  /** Deterministic bounded training sample for the IVF and PQ quantizers:
+    * the `sampleN` rows of lowest vec_id hash.
+    */
+  private def trainingSample(e: Dataset[(Long, Array[Double])],
+      sampleN: Int): Array[Array[Double]] =
+    e.orderBy(xxhash64(col("vec_id"))).limit(sampleN).collect().map(_._2)
 
   /** Deterministic spherical k-means over a bounded sample — the IVF
     * coarse quantizer. Driver-side on purpose: IVF trains on a SAMPLE at
@@ -318,24 +313,13 @@ object SimilarityOps {
   private[operators] def trainCentroids(sample: Array[Array[Double]],
       nCells: Int, iters: Int = 8): Array[Array[Double]] = {
     val dim = sample.head.length
-    def unit(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(dotArr(v, v))
-      if (n == 0) v else v.map(_ / n)
-    }
     val pts = sample.map(unit)
     var centroids = pts.take(nCells).map(_.clone)
     for (_ <- 0 until iters) {
       val sums = Array.fill(nCells)(new Array[Double](dim))
       val counts = new Array[Int](nCells)
       pts.foreach { p =>
-        var best = 0
-        var bestD = Double.NegativeInfinity
-        var c = 0
-        while (c < centroids.length) {
-          val d = dotArr(p, centroids(c))
-          if (d > bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearestCells(centroids, p, 1)(0)
         var i = 0
         while (i < dim) { sums(best)(i) += p(i); i += 1 }
         counts(best) += 1
@@ -346,80 +330,40 @@ object SimilarityOps {
     centroids
   }
 
+  /** The `n` cells whose centroids have the largest dot with unit vector
+    * `u`, best first; ties go to the lower cell id.
+    */
+  private def nearestCells(centroids: Array[Array[Double]], u: Array[Double],
+      n: Int): Array[Int] = {
+    val d = centroids.map(dotArr(u, _))
+    centroids.indices.sortBy(c => (-d(c), c)).take(n).toArray
+  }
+
   /** IVF (inverted-file) ANN — the second classic ANN family next to
     * LSH: a coarse quantizer of `nCells` spherical-k-means centroids,
     * every vector assigned to its nearest cell (one narrow map), queries
     * probing their `nProbe` nearest cells, exact rerank of the cell
-    * members. Candidate generation is an equi-join on the cell id — the
-    * same single-shuffle scale shape as the LSH variant — but the cells
+    * members. The probes are broadcast keyed by cell, so a candidate is
+    * scored only against the queries probing its own cell; the cells
     * ADAPT to the data distribution, so recall at an equal candidate
-    * budget is typically higher on clustered corpora (asserted vs the
-    * brute-force baseline in OperatorsSpec).
+    * budget is typically higher than LSH on clustered corpora (asserted
+    * vs the brute-force baseline in OperatorsSpec).
     */
   def cosineTopKIvf(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nCells: Int = 16, nProbe: Int = 4, dim: Int = 64,
-      sampleN: Int = 2048): DataFrame = {
-    import s.implicits._
-    val e = emb(s, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // deterministic bounded training sample: lowest-hash rows
-    val sample = e.withColumn("h", xxhash64(col("vec_id")))
-      .orderBy(col("h")).limit(sampleN)
-      .select(col("v")).as[Array[Double]].collect()
-    val centroids = trainCentroids(sample, nCells)
+      k: Int = 5, nCells: Int = 16, nProbe: Int = 4, sampleN: Int = 2048)
+      : DataFrame = {
+    val e = vectors(s, dir)
     // centroids are tiny (nCells x dim doubles): captured by value in the
     // task closures — no broadcast bookkeeping needed
-    val nearestCells: (Array[Double], Int) => Seq[Int] = (v, n) => {
-      val nrm = math.sqrt(dotArr(v, v))
-      val u = if (nrm == 0) v else v.map(_ / nrm)
-      centroids.indices.map(c => (dotArr(u, centroids(c)), c))
-        .sortBy { case (d, c) => (-d, c) }.take(n).map(_._2)
+    val centroids = trainCentroids(trainingSample(e, sampleN), nCells)
+    val byCell: Map[Int, Array[Probe]] = probes(e, nQueries)
+      .flatMap(q => nearestCells(centroids, unit(q._2), nProbe).map((_, q)))
+      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
+    val bc = s.sparkContext.broadcast(byCell)
+    probeTopK(e, k) { (id, v, emit) =>
+      bc.value.get(nearestCells(centroids, unit(v), 1)(0))
+        .foreach(scoreExact(id, v, _, emit))
     }
-
-    // Round-7: the probe side is |Q| rows — collect it driver-side, key
-    // the probes by cell in a broadcast map, and score candidates in a
-    // partition-local JVM loop with per-partition top-k (TopK). The
-    // previous broadcast JOIN carried the 64-double query vector per
-    // candidate row and scored through an unrolled Catalyst dot (the
-    // interpreted-eval hot spot q_cosine_topk had); this computes the
-    // identical rounded sims (same summation order, Catalyst round
-    // semantics) with one narrow scan and a tiny window input.
-    val probesByCell: Map[Int, Array[(Long, Array[Double], Double)]] =
-      e.filter(col("vec_id") < nQueries)
-        .as[(Long, Array[Double])].collect()
-        .sortBy(_._1)
-        .flatMap { case (id, v) =>
-          val nrm = math.sqrt(dotArr(v, v))
-          nearestCells(v, nProbe).map(c => (c, (id, v, nrm)))
-        }
-        .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val pBc = s.sparkContext.broadcast(probesByCell)
-    val scoredPartial = e.as[(Long, Array[Double])].mapPartitions { it =>
-      val byCell = pBc.value
-      val heaps = scala.collection.mutable.LongMap[TopK]()
-      it.foreach { case (id, v) =>
-        val cell = nearestCells(v, 1).head
-        byCell.get(cell).foreach { probes =>
-          val nrm = math.sqrt(dotArr(v, v))
-          var i = 0
-          while (i < probes.length) {
-            val (qid, qv, qnrm) = probes(i)
-            if (id != qid)
-              heaps.getOrElseUpdate(qid, new TopK(k))
-                .add(roundHalfUp4(dotArr(v, qv) / (nrm * qnrm)), id)
-            i += 1
-          }
-        }
-      }
-      heaps.iterator.flatMap { case (qid, h) =>
-        h.result.map { case (id, sim) => (qid, id, sim) }
-      }
-    }.toDF("query_id", "vec_id", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    scoredPartial.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rn"))
   }
 
   /** Plain (L2) k-means over sub-vectors — the PQ codebook trainer.
@@ -431,24 +375,11 @@ object SimilarityOps {
       kCodes: Int, iters: Int = 8): Array[Array[Double]] = {
     val dim = sub.head.length
     var cb = sub.take(kCodes).map(_.clone)
-    def nearest(p: Array[Double]): Int = {
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cb.length) {
-        var d = 0.0
-        var i = 0
-        while (i < dim) { val t = p(i) - cb(c)(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
     for (_ <- 0 until iters) {
       val sums = Array.fill(kCodes)(new Array[Double](dim))
       val counts = new Array[Int](kCodes)
       sub.foreach { p =>
-        val c = nearest(p)
+        val c = nearestCode(cb, p)
         var i = 0
         while (i < dim) { sums(c)(i) += p(i); i += 1 }
         counts(c) += 1
@@ -458,6 +389,23 @@ object SimilarityOps {
         else sums(c).map(_ / counts(c)))
     }
     cb
+  }
+
+  /** Index of the codeword nearest to `p` in L2; ties go to the lower
+    * index.
+    */
+  private def nearestCode(cb: Array[Array[Double]], p: Array[Double]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < cb.length) {
+      var d = 0.0
+      var i = 0
+      while (i < p.length) { val t = p(i) - cb(c)(i); d += t * t; i += 1 }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** IVF-PQ ANN — the MEMORY-scale path: vectors compress to `m` byte
@@ -474,13 +422,14 @@ object SimilarityOps {
     *  - query: ADC (asymmetric distance computation) — per query, an
     *    m×kCodes table of partial dots; a candidate's approximate
     *    cosine = m table lookups summed, NO vector math per pair;
-    *  - exact rerank: the top `rerank·k` ADC candidates join their raw
-    *    vectors back (a k·rerank-bounded broadcast per query) for the
-    *    exact final ordering — ADC error affects which candidates are
-    *    CONSIDERED, not the reported similarity.
+    *  - exact rerank: the top `rerank·k` ADC candidates are scored
+    *    exactly for the final ordering — ADC error affects which
+    *    candidates are CONSIDERED, not the reported similarity.
     *
-    * Scale shape: candidate generation is the nProbe cell equi-join on
-    * byte codes only; raw vectors are touched for |Q|·rerank·k rows.
+    * Both stages are [[probeTopK]] scans: the ADC tables are built
+    * driver-side and broadcast keyed by probe cell, so no candidate row
+    * carries a table, and the |Q|·rerank·k shortlist is broadcast keyed
+    * by candidate for the rerank.
     */
   def cosineTopKPq(s: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nCells: Int = 16, nProbe: Int = 4, m: Int = 8,
@@ -489,18 +438,8 @@ object SimilarityOps {
     import s.implicits._
     require(dim % m == 0, "dim must divide into m subspaces")
     val subDim = dim / m
-    val e = emb(s, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val sample = e.withColumn("h", xxhash64(col("vec_id")))
-      .orderBy(col("h")).limit(sampleN)
-      .select(col("v")).as[Array[Double]].collect()
-    // function VALS, not local defs: a lambda calling a local def drags
-    // the whole (non-serializable) enclosing module into the closure;
-    // vals capture only the arrays they use
-    val unit: Array[Double] => Array[Double] = v => {
-      val n = math.sqrt(dotArr(v, v))
-      if (n == 0) v else v.map(_ / n)
-    }
+    val e = vectors(s, dir)
+    val sample = trainingSample(e, sampleN)
     val centroids = trainCentroids(sample, nCells)
     val unitSample = sample.map(unit)
     // a corpus smaller than kCodes still trains (fewer codes), instead of
@@ -510,119 +449,49 @@ object SimilarityOps {
       trainCodebook(unitSample.map(_.slice(j * subDim, (j + 1) * subDim)),
         kEff))
 
-    val cellOf: Array[Double] => Int = u => {
-      var best = 0
-      var bestD = Double.NegativeInfinity
-      var c = 0
-      while (c < centroids.length) {
-        val d = dotArr(u, centroids(c))
-        if (d > bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
+    // function VAL, not a local def: a lambda calling a local def drags
+    // the whole (non-serializable) enclosing module into the closure;
+    // a val captures only the arrays it uses
     val encode: Array[Double] => Array[Byte] = u =>
-      Array.tabulate(m) { j =>
-        val sub = u.slice(j * subDim, (j + 1) * subDim)
-        val cb = codebooks(j)
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < cb.length) {
-          var d = 0.0
-          var i = 0
-          while (i < subDim) { val t = sub(i) - cb(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best.toByte
-      }
+      Array.tabulate(m)(j =>
+        nearestCode(codebooks(j), u.slice(j * subDim, (j + 1) * subDim)).toByte)
 
-    // Round-7: the probe side is |Q| rows — collect the queries driver-
-    // side, build the per-query ADC tables there, and broadcast them
-    // keyed by probe cell. The previous broadcast JOIN shipped the m x
-    // kCodes ADC table (4 KB) PER CANDIDATE ROW through the join and the
-    // Dataset encoder — candidate-count x 4 KB of pure serialization.
-    // Scoring fuses cell assignment + encoding + ADC into one narrow
-    // mapPartitions with per-partition top-(k*rerank) pruning; identical
-    // arithmetic, no per-row table payload.
-    val queriesArr = e.filter(col("vec_id") < nQueries)
-      .as[(Long, Array[Double])].collect()
-      .sortBy(_._1)
-    val probesByCell: Map[Int, Array[(Long, Array[Array[Double]])]] =
-      queriesArr
-        .flatMap { case (id, v) =>
-          val u = unit(v)
-          val table = Array.tabulate(m, kEff)((j, c) =>
-            dotArr(u.slice(j * subDim, (j + 1) * subDim), codebooks(j)(c)))
-          centroids.indices.map(c => (dotArr(u, centroids(c)), c))
-            .sortBy { case (d, c) => (-d, c) }.take(nProbe)
-            .map { case (_, c) => (c, (id, table)) }
-        }
-        .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-    val pBc = s.sparkContext.broadcast(probesByCell)
-    val candidatesPartial = e.as[(Long, Array[Double])].mapPartitions { it =>
-      val byCell = pBc.value
-      val heaps = scala.collection.mutable.LongMap[TopK]()
-      it.foreach { case (id, v) =>
+    val queryProbes = probes(e, nQueries)
+    val byCell: Map[Int, Array[(Long, Array[Array[Double]])]] = queryProbes
+      .flatMap { case (id, v, _) =>
         val u = unit(v)
-        byCell.get(cellOf(u)).foreach { probes =>
-          val cs = encode(u)
-          var i = 0
-          while (i < probes.length) {
-            val (qid, table) = probes(i)
-            if (id != qid) {
-              var adc = 0.0
-              var j = 0
-              while (j < m) { adc += table(j)(cs(j) & 0xff); j += 1 }
-              heaps.getOrElseUpdate(qid, new TopK(k * rerank)).add(adc, id)
-            }
-            i += 1
+        val table = Array.tabulate(m, kEff)((j, c) =>
+          dotArr(u.slice(j * subDim, (j + 1) * subDim), codebooks(j)(c)))
+        nearestCells(centroids, u, nProbe).map(c => (c, (id, table)))
+      }
+      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
+    val pBc = s.sparkContext.broadcast(byCell)
+    val shortlist = probeTopK(e, k * rerank, "adc") { (id, v, emit) =>
+      val u = unit(v)
+      pBc.value.get(nearestCells(centroids, u, 1)(0)).foreach { qs =>
+        val cs = encode(u)
+        var i = 0
+        while (i < qs.length) {
+          val (qid, table) = qs(i)
+          if (id != qid) {
+            var adc = 0.0
+            var j = 0
+            while (j < m) { adc += table(j)(cs(j) & 0xff); j += 1 }
+            emit(qid, id, adc)
           }
+          i += 1
         }
       }
-      heaps.iterator.flatMap { case (qid, h) =>
-        h.result.map { case (id, adc) => (qid, id, adc) }
-      }
-    }.toDF("query_id", "vec_id", "adc")
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("vec_id").asc)
-    val shortlist = candidatesPartial.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= k * rerank)
-      .select(col("query_id"), col("vec_id"))
+    }
 
-    // exact rerank of the |Q|·rerank·k shortlist only: the pair list is
-    // tiny (collected + broadcast), so the raw vectors are touched in one
-    // narrow scan instead of a Catalyst norm Project over the whole table
-    // feeding two broadcast joins
-    val shortlistPairs: Map[Long, Array[Long]] = shortlist
-      .as[(Long, Long)].collect()
-      .groupBy(_._2).map { case (vid, xs) => vid -> xs.map(_._1) }
-    val slBc = s.sparkContext.broadcast(shortlistPairs)
-    val queriesByIdArr = queriesArr.map { case (id, v) =>
-      (id, (v, math.sqrt(dotArr(v, v))))
-    }.toMap
-    val qBc = s.sparkContext.broadcast(queriesByIdArr)
-    val exact = e.as[(Long, Array[Double])].mapPartitions { it =>
-      val sl = slBc.value
-      val qs = qBc.value
-      it.flatMap { case (id, v) =>
-        sl.get(id) match {
-          case Some(qids) =>
-            val nrm = math.sqrt(dotArr(v, v))
-            qids.iterator.map { qid =>
-              val (qv, qnrm) = qs(qid)
-              (qid, id, roundHalfUp4(dotArr(v, qv) / (nrm * qnrm)))
-            }
-          case None => Iterator.empty
-        }
-      }
-    }.toDF("query_id", "vec_id", "sim")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id"), col("sim"), col("rn"))
+    val byId = queryProbes.map(q => q._1 -> q).toMap
+    val byCandidate: Map[Long, Array[Probe]] = shortlist
+      .select(col("query_id"), col("vec_id")).as[(Long, Long)].collect()
+      .groupBy(_._2).map { case (vid, xs) => vid -> xs.map(x => byId(x._1)) }
+    val slBc = s.sparkContext.broadcast(byCandidate)
+    probeTopK(e, k) { (id, v, emit) =>
+      slBc.value.get(id).foreach(scoreExact(id, v, _, emit))
+    }
   }
 
   /** Exact embedding near-duplicate pairs: ALL pairs with rounded cosine
@@ -638,30 +507,13 @@ object SimilarityOps {
     * form is verified by a recall spec, not an equality oracle.
     */
   def embeddingNearDupExact(s: SparkSession, dir: String,
-      threshold: Double = 0.35, dim: Int = 64, capVecs: Int = 2000)
-      : DataFrame = {
+      threshold: Double = 0.35, capVecs: Int = 2000): DataFrame = {
     import s.implicits._
-    // The capped side is bounded by construction (capVecs × dim doubles,
-    // ~1 MB at the defaults) — the same bounded-driver-sample pattern the
-    // IVF/PQ trainers use — so broadcast it once and run the O(cap²)
-    // pair scan as partition-local JVM loops. The Catalyst alternative
-    // (broadcast self-join + a 64-term dot Project over the ~2M candidate
-    // rows) measured 15-117 s at sf0.1: per-candidate UnsafeRow
-    // materialization and array accessors dominate, not arithmetic; the
-    // loop form is <1 s for identical output. Summation order (k =
-    // 0..dim-1), sqrt-of-each-norm, and HALF_UP rounding all match the
-    // DuckDB oracle's sequential list_cosine_similarity bit-for-bit.
-    val capped = emb(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(capVecs)
-      .as[(Long, Array[Float])].collect()
-      .map { case (id, v) =>
-        val d = v.map(_.toDouble)
-        var nrm = 0.0
-        var k = 0
-        while (k < dim) { nrm += d(k) * d(k); k += 1 }
-        (id, d, math.sqrt(nrm))
-      }
+    // the capped side is bounded by construction (capVecs × dim doubles,
+    // ~1 MB at the defaults), so it is broadcast once and the O(cap²)
+    // pair scan runs as partition-local JVM loops
+    val capped = vectors(s, dir).orderBy(col("vec_id")).limit(capVecs)
+      .collect().map { case (id, v) => (id, v, norm(v)) }
     val bc = s.sparkContext.broadcast(capped)
     s.range(0, capped.length, 1, 64).mapPartitions { it =>
       val arr = bc.value
@@ -670,23 +522,8 @@ object SimilarityOps {
         val (ida, va, na) = arr(i)
         Iterator.range(i + 1, arr.length).flatMap { j =>
           val (idb, vb, nb) = arr(j)
-          var dp = 0.0
-          var k = 0
-          while (k < dim) { dp += va(k) * vb(k); k += 1 }
-          val raw = dp / (na * nb)
-          // cheap reject before the BigDecimal rounding: HALF_UP at 4
-          // decimals can only lift a value to >= threshold from raw >=
-          // threshold - 5e-5, so anything below threshold - 1e-4 cannot
-          // survive the post-round filter. The 2M rejected pairs were
-          // paying a BigDecimal alloc each (the measured hot spot); only
-          // the ~300 near-threshold survivors round now.
-          if (raw < threshold - 1e-4) None
-          else {
-            val sim = BigDecimal(raw)
-              .setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP)
-              .toDouble
-            if (sim >= threshold) Some((ida, idb, sim)) else None
-          }
+          val sim = roundedCos(va, na, vb, nb)
+          if (sim >= threshold) Some((ida, idb, sim)) else None
         }
       }
     }.toDF("id_a", "id_b", "sim")
@@ -699,8 +536,8 @@ object SimilarityOps {
       nTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
       bucketCap: Int = 512): DataFrame = {
     import s.implicits._
-    val e = emb(s, dir).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val pairs = toVecBuckets(e, nTables, planesPerTable, dim)
+    val pairs = toVecBuckets(vectors(s, dir),
+        lshPlanes(nTables, planesPerTable, dim))
       .groupByKey(r => (r.tbl, r.bucket))
       .flatMapGroups { (_: (Int, Long), it: Iterator[VecBucket]) =>
         capBuckets(it.toArray, bucketCap, dim).flatMap { grp =>
@@ -711,7 +548,7 @@ object SimilarityOps {
           while (i < m.length) {
             var j = i + 1
             while (j < m.length) {
-              val sim = round4(dotArr(m(i).v, m(j).v) / (m(i).nrm * m(j).nrm))
+              val sim = roundedCos(m(i).v, m(i).nrm, m(j).v, m(j).nrm)
               if (sim >= threshold) out += ((m(i).vecId, m(j).vecId, sim))
               j += 1
             }

@@ -145,17 +145,31 @@ class OperatorsSpec extends AnyFunSuite {
     // candidate generation = the IVF cells; ADC ordering + 4x rerank
     // should not lose much vs plain IVF's >=0.5 gate
     assert(recall >= 0.5, s"IVF-PQ recall $recall")
-    // the reported similarity is the EXACT rerank value, not the ADC
-    // approximation: spot-check against brute-force scores
-    val exactSims = SimilarityOps.cosineTopK(spark, sfDir)
-      .select("query_id", "vec_id", "sim")
-      .as[(Long, Long, Double)].collect()
-      .map { case (q, v, s) => (q, v) -> s }.toMap
-    pq.select("query_id", "vec_id", "sim").as[(Long, Long, Double)]
-      .collect().foreach { case (q, v, s) =>
-        exactSims.get((q, v)).foreach(es =>
-          assert(math.abs(es - s) < 1e-9, s"sim mismatch at ($q,$v)"))
-      }
+    // the reported similarity is the EXACT rounded cosine, not the ADC
+    // (or bucket) approximation: every emitted PQ, IVF and LSH row is
+    // checked against an in-test cosine rounded HALF_UP like SQL round()
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
+      .map { case (id, v) => id -> v.map(_.toDouble) }.toMap
+    def roundedCosine(a: Long, b: Long): Double = {
+      val (va, vb) = (vecs(a), vecs(b))
+      val dot = va.indices.foldLeft(0.0)((s, i) => s + va(i) * vb(i))
+      val na = math.sqrt(va.foldLeft(0.0)((s, x) => s + x * x))
+      val nb = math.sqrt(vb.foldLeft(0.0)((s, x) => s + x * x))
+      BigDecimal(dot / (na * nb))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    Seq("pq" -> pq, "ivf" -> SimilarityOps.cosineTopKIvf(spark, sfDir),
+      "lsh" -> SimilarityOps.cosineTopKLsh(spark, sfDir)).foreach {
+      case (name, df) =>
+        val rows = df.select("query_id", "vec_id", "sim")
+          .as[(Long, Long, Double)].collect()
+        assert(rows.nonEmpty, s"$name emitted no rows")
+        rows.foreach { case (q, v, s) =>
+          val es = roundedCosine(q, v)
+          assert(math.abs(es - s) < 1e-9, s"$name sim mismatch at ($q,$v)")
+        }
+    }
     val again = SimilarityOps.cosineTopKPq(spark, sfDir)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     assert(again === pqSet)
