@@ -1,8 +1,7 @@
 package graft.crawl
 
-import java.io.File
-
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CrawlStatus, FetchOutcome, Schedule, ScheduleConfig, Urls, XxHash64}
@@ -79,11 +78,10 @@ final class SyntheticFetcher(cfg: WebConfig) extends Fetcher {
   *    is a sequential fold inside `flatMapGroups` (Catalyst-planned
   *    MapGroups — the reference's FetchItemQueues without threads);
   *  - parse: narrow map over the batch staging table, no shuffle;
-  *  - updatedb: discovered side is pre-aggregated per URL before the
-  *    frontier cogroup, capping the shuffle at |distinct urls|; the
-  *    frontier side shuffles once on urlHash (with Iceberg
-  *    storage-partitioned joins this becomes co-located; documented in
-  *    README).
+  *  - updatedb: discovered side is pre-aggregated per URL, capping the
+  *    shuffle at |distinct urls|; the topN-bounded batch side is then
+  *    collected once and broadcast as variables, so every frontier probe
+  *    is a membership filter over the scan — the frontier never shuffles.
   */
 final class CrawlPipeline(
     @transient private val spark: SparkSession,
@@ -106,6 +104,7 @@ final class CrawlPipeline(
     extends Serializable {
 
   import spark.implicits._
+  import CrawlPipeline.BatchSide
 
   @transient val log = new CommitLog(root)
   // the protocol extension point: a real HttpFetcher (or any Fetcher)
@@ -242,8 +241,15 @@ final class CrawlPipeline(
     }.toMap
   }
 
-  def readFrontier(path: String): Dataset[CrawlRow] =
-    spark.read.parquet(path).as[CrawlRow]
+  def readFrontier(path: String): Dataset[CrawlRow] = readAs[CrawlRow](path)
+
+  /** Read a staged table (frontier snapshot or delta, fetchlist, fetched,
+    * parsed, payload, hostdb, bloom sidecar) with the schema its writer
+    * used. A schema-less read would run a one-task footer-inference job
+    * per table per read.
+    */
+  private def readAs[T: Encoder](path: String): Dataset[T] =
+    spark.read.schema(implicitly[Encoder[T]].schema).parquet(path).as[T]
 
   /** The last committed frontier STATE (inject / updatedb / compact),
     * whichever is newest in the log.
@@ -258,19 +264,18 @@ final class CrawlPipeline(
     * (later frames win) — the chain fold shared by the MoR view and
     * `foldChain`. Shuffle is DELTA-sized (topN-bounded per frame).
     */
-  private def latestOf(frames: Seq[org.apache.spark.sql.DataFrame])
-      : Dataset[CrawlRow] = {
+  private def latestOf(frames: Seq[Dataset[CrawlRow]]): Dataset[CrawlRow] = {
     // single-frame fold is the identity: every delta is written as
     // `changed union newRows` — changed rows exist in the frontier, new
     // rows do not, and each side is unique by urlHash — so the
     // dedup window (a full shuffle of the delta) only matters across
     // frames. With compactEvery=1 every compaction folds exactly one
     // frame; skipping the no-op window removes one exchange per batch.
-    if (frames.lengthCompare(1) == 0) return frames.head.as[CrawlRow]
+    if (frames.lengthCompare(1) == 0) return frames.head
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("urlHash")).orderBy(col("_dseq").desc)
     frames.zipWithIndex
-      .map { case (df, i) => df.withColumn("_dseq", lit(i)) }
+      .map { case (ds, i) => ds.withColumn("_dseq", lit(i)) }
       .reduce(_ unionByName _)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
@@ -288,7 +293,7 @@ final class CrawlPipeline(
   private[crawl] def viewOf(c: Commit): Dataset[CrawlRow] = {
     if (c.deltas.isEmpty) readFrontier(c.frontierPath)
     else {
-      val latest = latestOf(c.deltas.map(p => spark.read.parquet(p)))
+      val latest = latestOf(c.deltas.map(readFrontier))
       // unionByName: a partitionBy-layout base read appends `bucket` last,
       // while delta files carry case-class column order
       readFrontier(c.frontierPath)
@@ -391,8 +396,8 @@ final class CrawlPipeline(
     lastState().filter(_.deltas.nonEmpty).foreach { c =>
       val seq = log.nextSeq()
       val t0 = System.nanoTime()
-      val (path, counts, _) = foldChain(seq, c.frontierPath,
-        c.deltas.map(p => spark.read.parquet(p)))
+      val (path, counts, _) =
+        foldChain(seq, c.frontierPath, c.deltas.map(readFrontier))
       commitSnapshot(seq, c.batchId, "compact", path, counts, now,
         Map("compactWallMs" -> (System.nanoTime() - t0) / 1e6))
     }
@@ -409,7 +414,7 @@ final class CrawlPipeline(
     * tracing charges its Spark jobs to the calling stage.
     */
   private def foldChain(seq: Long, basePath: String,
-      chain: Seq[org.apache.spark.sql.DataFrame])
+      chain: Seq[Dataset[CrawlRow]])
       : (String, Map[String, Long], Boolean) = {
     val path = snapshotDir(seq)
     // persisted: the folded chain feeds TWO jobs (base anti-join keys +
@@ -440,7 +445,7 @@ final class CrawlPipeline(
       metrics: Map[String, Double]): Commit = {
     val tB = System.nanoTime()
     // sidecars only when the seen-filter is on — a pipeline that always
-    // takes the exact anti-join must not pay bloom builds it never reads
+    // probes every discovered key must not pay bloom builds it never reads
     val bloomPaths =
       if (useBloomSeenFilter)
         Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq",
@@ -465,8 +470,10 @@ final class CrawlPipeline(
     * task folds its slice into local filters; a bucket may yield several
     * partial filters — membership is exists(_), exactness never depends
     * on them). `expectedKeys` sizes the filters; an under-estimate only
-    * raises the false-positive rate, which just sends more rows through
-    * the exact anti-join.
+    * raises the false-positive rate, which just sends more keys through
+    * the exact probe. Maintained INCREMENTALLY: inject writes the first
+    * generation, each batch appends a delta-sized one, compaction
+    * rebuilds one — so no batch re-scans the frontier to build filters.
     */
   private def writeBlooms(rows: Dataset[CrawlRow], path: String,
       expectedKeys: Long): String = {
@@ -483,10 +490,9 @@ final class CrawlPipeline(
         fs.iterator.map { case (b, f) =>
           val bos = new java.io.ByteArrayOutputStream()
           f.writeTo(bos)
-          (b, bos.toByteArray)
+          BloomPart(b, bos.toByteArray)
         }
       }
-      .toDF("bucket", "bytes")
       // repartition (NOT coalesce): a coalesce(1) here is a narrow
       // dependency that would collapse the whole scan+fold into ONE task
       // holding every bucket's filter; the shuffle barrier keeps the fold
@@ -518,7 +524,7 @@ final class CrawlPipeline(
     observed.repartition(numBuckets, col("host"))
       .write.mode(SaveMode.Overwrite).parquet(path)
     val generateWallMs = (System.nanoTime() - t0) / 1e6
-    val out = spark.read.parquet(path).as[CrawlRow]
+    val out = readFrontier(path)
     val counts = observedCounts(obs).getOrElse(
       out.groupBy("bucket").count().as[(Int, Long)].collect()
         .map { case (b, c) => b.toString -> c }.toMap)
@@ -659,7 +665,7 @@ final class CrawlPipeline(
         case Some(c) =>
           val keys = fetchlist
             .map(r => QueueMode.keyOf(mode, r.host)).distinct().toDF("host")
-          spark.read.parquet(c.frontierPath)
+          readAs[HostRow](c.frontierPath)
             .join(broadcast(keys), Seq("host"))
             .select(col("host"), col("crawlDelayMs"), col("maxConcurrent"))
             .as[(String, Long, Int)].collect()
@@ -760,7 +766,7 @@ final class CrawlPipeline(
       .option("compression", "uncompressed")
       .option("parquet.enable.dictionary", "false").parquet(path)
     val fetchWallMs = (System.nanoTime() - t0) / 1e6
-    val out = spark.read.parquet(path).as[FetchResult]
+    val out = readAs[FetchResult](path)
     val (n, maxEnd) = observedRow(obsF)
       .map(r => (r.getAs[Long]("n"),
         Option(r.getAs[java.lang.Long]("maxEnd")).map(_.toLong)
@@ -816,7 +822,7 @@ final class CrawlPipeline(
     out.observe(obsP, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(path)
     val parseWallMs = (System.nanoTime() - t0) / 1e6
-    val res = spark.read.parquet(path).as[ParsedPage]
+    val res = readAs[ParsedPage](path)
     val n = observedRow(obsP).map(_.getAs[Long]("n")).getOrElse(res.count())
     commitStage(log.nextSeq(), batchId, "parse", path,
       Map("all" -> n), now, Map("parseWallMs" -> parseWallMs))
@@ -849,82 +855,11 @@ final class CrawlPipeline(
     out.observe(obsY, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite)
       .option("compression", "uncompressed").parquet(path) // encoded bytes
-    val res = spark.read.parquet(path).as[PayloadRow]
+    val res = readAs[PayloadRow](path)
     val n = observedRow(obsY).map(_.getAs[Long]("n")).getOrElse(res.count())
     commitStage(log.nextSeq(), batchId, "payload", path,
       Map("all" -> n), now)
     res
-  }
-
-  /** The updatedb merge: applies `Schedule.next` — the one source of
-    * truth for re-crawl scheduling, shared with the simulator oracle — to
-    * the touched rows that have a fetch outcome this batch, and refines
-    * the distance of rediscovered rows. Its input is the topN-bounded
-    * `touched` semi-join, so the object round-trip is delta-sized.
-    */
-  private def mergeTyped(frontier: Dataset[CrawlRow],
-      outcomes: Dataset[Outcome], discDist: Dataset[(Long, Int)],
-      now: Long): Dataset[CrawlRow] = {
-    val trie = trieBc
-    val sched = scheduleCfg
-    val perSiteIntervals = hasPerSiteCaps
-    frontier
-      .joinWith(broadcast(outcomes),
-        frontier("urlHash") === outcomes("urlHash"), "left_outer")
-      .joinWith(broadcast(discDist.toDF("urlHash", "newDist")
-        .as[(Long, Int)]),
-        col("_1.urlHash") === col("urlHash"), "left_outer")
-      .map { case ((row0, out), dd) =>
-        val row1 =
-          if (dd == null || dd._2 >= row0.distance) row0
-          else row0.copy(distance = dd._2)
-        // per-site interval refresh on re-crawl (reference
-        // DbConfigFetchSchedule.shouldFetch -> NutchConstant.checkInterval
-        // :975-989): a stored interval below HALF the config's
-        // customInterval is reset to the config value, so a site whose
-        // trie config changes after discovery picks the new interval up
-        // at its next merge
-        val row =
-          if (out == null || !perSiteIntervals) row1
-          else {
-            val ci = trie.value.configOrDefault(row1.url).customIntervalSec
-            if (ci > 0 && row1.fetchInterval < ci * 0.5)
-              row1.copy(fetchInterval = ci)
-            else row1
-          }
-        if (out == null) row
-        else {
-          val st0 = graft.core.ScheduleState(row.status, row.fetchTime,
-            row.prevFetchTime, row.fetchInterval, row.retries,
-            row.modifiedTime)
-          val changed = row.signature == null ||
-            !java.util.Arrays.equals(row.signature, out.signature)
-          val effOutcome =
-            if (out.outcome == FetchOutcome.Success && !changed)
-              FetchOutcome.NotModified
-            else out.outcome
-          val st1 = Schedule.next(st0, effOutcome, now, sched)
-          row.copy(
-            status = st1.status,
-            fetchTime = st1.fetchTime,
-            prevFetchTime = st1.prevFetchTime,
-            fetchInterval = st1.fetchInterval,
-            retries = st1.retries,
-            modifiedTime = st1.modifiedTime,
-            prevSignature = row.signature,
-            signature =
-              if (out.signature.isEmpty) row.signature else out.signature,
-            reprUrl =
-              if (out.redirectTo.nonEmpty &&
-                (out.outcome == FetchOutcome.RedirPerm ||
-                  (out.outcome == FetchOutcome.Success &&
-                    out.refreshTime >= 0 &&
-                    out.refreshTime < Parse.PermRefreshTime)))
-                out.redirectTo
-              else row.reprUrl,
-            lastBatch = out.batchId)
-        }
-      }
   }
 
   // --------------------------------------------------------------- updatedb
@@ -936,14 +871,25 @@ final class CrawlPipeline(
     * Discovered outlinks are aggregated per destination FIRST (min
     * distance, best inherited score, inlink count — the explode+groupBy
     * analog of the reducer's sorted-inlink fold, capped semantics of
-    * db.update.max.inlinks), then cogrouped with the frontier on urlHash.
+    * db.update.max.inlinks). The batch side is then resolved ONCE on the
+    * driver: the outcome rows and the aggregate's (urlHash, bucket,
+    * distance, contrib) are collected — topN-bounded by generate's
+    * contract, under Spark's `spark.driver.maxResultSize` guard — and
+    * shipped as SparkContext broadcast variables, so every frontier probe
+    * is a key-membership filter over the scan: no join, no Exchange, and
+    * the 10^10-row frontier never shuffles (the reference needed a full
+    * partition/sort/group pass per updatedb, UrlWithScore.java:124-195).
+    *
+    * D1 URL-seen set: the bloom sidecars (see [[writeBlooms]]) only
+    * narrow the exact probe's key set to the maybe-seen discoveries; new
+    * rows are the discoveries the probe finds absent. The commit records
+    * the gate's maybe-seen and false-positive rates.
     */
   def updatedb(frontier: Dataset[CrawlRow], parsed: Dataset[ParsedPage],
       batchId: String, now: Long): Dataset[CrawlRow] = {
     val nb = numBuckets
     val sched = scheduleCfg
     val depthCap = maxDepth
-    val additions = additionsAllowed
     val trie = trieBc
     val normRules = normalizeRules
     val sc = scoring
@@ -980,6 +926,7 @@ final class CrawlPipeline(
     // partial aggregation — the outlink explosion is the largest data
     // volume in the pipeline, and partial agg collapses it before the
     // shuffle. first() is safe: same urlHash => same url/host/bucket.
+    // Persisted: the side collect materializes it, the new rows read it
     val discAgg = discovered
       .groupBy(col("urlHash"))
       .agg(first(col("url")).as("url"),
@@ -991,112 +938,66 @@ final class CrawlPipeline(
         min(col("distance")).as("distance"),
         min(col("anchor")).as("anchor"))
       .as[Discovered]
+      .persist()
 
-    // The batch side is bounded by topN (generate's contract), so the
-    // merge is a BROADCAST join against the frontier scan — the 10^10-row
-    // frontier is never shuffled for the merge (reference needed a full
-    // partition/sort/group pass per updatedb, UrlWithScore.java:124-195).
-    val outcomes = parsed.map(r => Outcome(r.urlHash, r.outcome,
-      Option(r.signature).getOrElse(Array.emptyByteArray), r.batchId,
-      Option(r.redirectTo).getOrElse(""), r.refreshTime))
+    // mergeWallMs covers all of the merge's Spark work, side included
+    val t0 = System.nanoTime()
+    val outcomes = parsed
+      .select(col("urlHash"), col("outcome"),
+        coalesce(col("signature"), lit(Array.emptyByteArray))
+          .as("signature"),
+        col("batchId"), coalesce(col("redirectTo"), lit("")).as("redirectTo"),
+        col("refreshTime"))
+      .as[Outcome].collect()
+    val disc = discAgg
+      .select(col("urlHash"), col("bucket"), col("distance"), col("contrib"))
+      .as[(Long, Int, Int, Float)].collect()
+    val sctx = spark.sparkContext
+    val side = sctx.broadcast(BatchSide(
+      outcomes.iterator.map(o => o.urlHash -> o).toMap,
+      disc.iterator.map(d => d._1 -> ((d._3, d._4))).toMap))
 
-    // A4 for existing rows (DbUpdateReducer.java:235-250): a rediscovery
-    // through a shorter path lowers the stored distance. The discovered
-    // aggregate is topN*fanout-bounded, so it broadcasts like the
-    // outcomes side — the frontier still never shuffles.
-    val discDist = discAgg
-      .map(d => (d.urlHash, d.distance))
-      .toDF("urlHash", "newDist")
-      .as[(Long, Int)]
-
-    // MoR: the merge only ever REWRITES touched rows (rows with a fetch
-    // outcome this batch, or rediscovered rows whose distance may
-    // refine) — both key sets are topN-bounded, so `touched` is a
-    // broadcast semi-join against the frontier scan and the merge output
-    // is delta-sized, not frontier-sized.
-    // no distinct(): a LEFT SEMI join is set-semantic on the build side
-    // already — the dedup was one pure-overhead exchange per batch
-    val touchedKeys = outcomes.select(col("urlHash"))
-      .union(discDist.select(col("urlHash")))
-    val touched = frontier
-      .join(broadcast(touchedKeys), Seq("urlHash"), "left_semi")
-      .as[CrawlRow]
-    val merged = mergeTyped(touched, outcomes, discDist, now)
-    // ScoringFilter updateDbScore hook for EXISTING rows, as a columnar
-    // step after the merge; skipped entirely (no join in the plan) for
-    // filters that keep stored scores, like Default
-    val changed: Dataset[CrawlRow] =
-      if (!scoring.updatesExistingScores) merged
-      else merged.toDF
-        .join(broadcast(discAgg.select(col("urlHash"), col("contrib"))),
-          Seq("urlHash"), "left_outer")
-        .withColumn("score",
-          scoring.updateExistingScore(col("score"), col("contrib"))
-            .cast("float"))
-        .drop("contrib")
-        .as[CrawlRow]
-
-    // new rows from discoveries. D1 URL-seen set (north rule): bloom
-    // filters over frontier keys prune definitely-new URLs; only the
-    // maybe-seen remainder pays the anti-join shuffle. The bloom is an
-    // optimization gate, never the source of truth — exactness comes from
-    // the anti-join on the (much smaller) mightContain subset.
-    //
-    // Scale shape: the filters are PER-BUCKET, built distributed, and
-    // maintained INCREMENTALLY as persisted sidecars — inject writes the
-    // first generation, each batch appends a delta-sized generation for
-    // its new rows, compaction rebuilds one fresh generation. updatedb
-    // therefore never re-scans the frontier to build filters (the
-    // round-2 shape paid a full frontier pass per batch — the dominant
-    // updatedb cost at 10^10 rows). A key lives in >=1 generation, so
-    // might-contain = exists over the chain's filters for the bucket;
-    // chain length is bounded by compactEvery, and the unioned fpp
-    // (~0.03 * chain) only widens the exact anti-join's input.
-    discAgg.persist() // consumed by both bloom branches
+    // the keys the exact probe checks: every discovered key, or only the
+    // bloom gate's maybe-seen ones
     val prev = lastState()
     val bloomChain = prev.map(_.blooms).getOrElse(Nil)
-    var checkedCache: Option[Dataset[(Discovered, Boolean)]] = None
-    val newDiscoveries =
-      if (!additions) spark.emptyDataset[Discovered]
-      else if (useBloomSeenFilter && bloomChain.nonEmpty) {
-        import org.apache.spark.util.sketch.BloomFilter
-        val blooms = bloomChain
-          .map(p => spark.read.parquet(p))
-          .reduce(_ unionByName _)
-          .select(col("bucket"), col("bytes")).as[(Int, Array[Byte])]
-        // persisted: consumed by definitelyNew AND (twice) by the
-        // flipped exact check — without it the bloom cogroup recomputes
-        // per consumer
-        val checked = discAgg
-          .groupByKey(_.bucket)
-          .cogroup(blooms.groupByKey(_._1)) { (_, discs, bs) =>
-            val filters = bs.map { case (_, bytes) =>
-              BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-            }.toArray
-            if (filters.isEmpty) discs.map(d => (d, false))
-            else discs.map(d => (d, filters.exists(_.mightContain(d.urlHash))))
-          }
-          .persist()
-        checkedCache = Some(checked)
-        val definitelyNew = checked.filter(c => !c._2).map(_._1)
-        val maybeSeen = checked.filter(c => c._2).map(_._1)
-        definitelyNew.union(notInFrontier(frontier, maybeSeen))
-      } else
-        notInFrontier(frontier, discAgg)
-
-    val newRows = newDiscoveries
-      .filter(_.distance <= depthCap)
-      .map { d =>
-        // F4: per-site custom score/interval for newly discovered rows
-        val cfg = trie.value.configOrDefault(d.url)
-        Keys.rowOf(d.url, nb, now,
-          score = sc.newRowScore(d.url, d.contrib, cfg.customScore),
-          distance = d.distance,
-          intervalSec =
-            if (cfg.customIntervalSec > 0) cfg.customIntervalSec
-            else sched.defaultIntervalSec,
-          anchor = d.anchor)
+    val gated = additionsAllowed && useBloomSeenFilter &&
+      bloomChain.nonEmpty && disc.nonEmpty
+    val maybeSeen: Set[Long] =
+      if (gated) bloomMaybeSeen(bloomChain,
+        disc.groupBy(_._2).map { case (b, ds) => b -> ds.map(_._1) })
+      else if (additionsAllowed) disc.iterator.map(_._1).toSet
+      else Set.empty
+    val probe = sctx.broadcast(maybeSeen)
+    val present = sctx.broadcast(
+      if (maybeSeen.isEmpty) Set.empty[Long]
+      else presentKeys(frontier, probe).collect().toSet)
+    val bloomMetrics =
+      if (!gated) Map.empty[String, Double]
+      else {
+        val negatives = disc.length - present.value.size
+        Map("bloomMaybeSeenRate" -> maybeSeen.size.toDouble / disc.length,
+          "bloomFalsePositiveRate" ->
+            (if (negatives == 0) 0.0
+            else (maybeSeen.size - present.value.size).toDouble / negatives))
       }
+
+    val newRows =
+      if (!additionsAllowed) spark.emptyDataset[CrawlRow]
+      else discAgg
+        .filter(!keyIn(present)(col("urlHash")) &&
+          col("distance") <= lit(depthCap))
+        .map { d =>
+          // F4: per-site custom score/interval for newly discovered rows
+          val cfg = trie.value.configOrDefault(d.url)
+          Keys.rowOf(d.url, nb, now,
+            score = sc.newRowScore(d.url, d.contrib, cfg.customScore),
+            distance = d.distance,
+            intervalSec =
+              if (cfg.customIntervalSec > 0) cfg.customIntervalSec
+              else sched.defaultIntervalSec,
+            anchor = d.anchor)
+        }
 
     // Snapshot strategy (Iceberg merge-on-read, emulated): each batch
     // writes a DELTA of changed+new rows (topN-bounded — never the
@@ -1108,16 +1009,16 @@ final class CrawlPipeline(
     val basePath = prev.map(_.frontierPath).getOrElse("")
     val chain = prev.map(_.deltas).getOrElse(Nil)
     val seq = log.nextSeq()
-    val t0 = System.nanoTime()
-    val delta = changed.union(newRows)
+    val delta = mergeTouched(frontier, side, now).union(newRows)
     val result =
       if (chain.size >= compactEvery - 1) {
         // compacting merge: fold the chain + this batch into a full
         // snapshot
-        val (path, counts, major) = foldChain(seq, basePath,
-          chain.map(p => spark.read.parquet(p)) :+ delta.toDF())
+        val (path, counts, major) =
+          foldChain(seq, basePath, chain.map(readFrontier) :+ delta)
         commitSnapshot(seq, batchId, "updatedb", path, counts, now,
-          Map("mergeWallMs" -> (System.nanoTime() - t0) / 1e6,
+          bloomMetrics ++ Map(
+            "mergeWallMs" -> (System.nanoTime() - t0) / 1e6,
             "compacted" -> (if (major) 2.0 else 1.0)))
       } else {
         val deltaPath = s"$root/frontier/delta-$seq"
@@ -1133,7 +1034,7 @@ final class CrawlPipeline(
         val mergeMs = (System.nanoTime() - t0) / 1e6
         // fallback re-scan is DELTA-sized (topN-bounded), never the view
         val deltaCounts = observedCounts(oD).getOrElse(
-          spark.read.parquet(deltaPath).groupBy(col("bucket")).count()
+          readFrontier(deltaPath).groupBy(col("bucket")).count()
             .as[(Int, Long)].collect()
             .map { case (b, c) => b.toString -> c }.toMap)
         val total = prev.map(_.rowCount).getOrElse(0L) + deltaCounts.values.sum
@@ -1143,43 +1044,85 @@ final class CrawlPipeline(
         val tB = System.nanoTime()
         val blooms =
           if (!useBloomSeenFilter) Nil
-          else prev.map(_.blooms).getOrElse(Nil) :+
-            writeBlooms(spark.read.parquet(deltaPath).as[CrawlRow],
-              s"$root/blooms/$seq", deltaCounts.values.sum)
+          else bloomChain :+ writeBlooms(readFrontier(deltaPath),
+            s"$root/blooms/$seq", deltaCounts.values.sum)
         log.append(Commit(seq, batchId, "updatedb", "complete", basePath,
           total, deltaCounts,
-          Map("mergeWallMs" -> mergeMs,
+          bloomMetrics ++ Map("mergeWallMs" -> mergeMs,
             "bloomWallMs" -> (System.nanoTime() - tB) / 1e6),
           now, chain :+ deltaPath, blooms))
       }
     discAgg.unpersist()
-    checkedCache.foreach(_.unpersist())
+    Seq(side, probe, present).foreach(_.destroy())
     viewOf(result)
   }
 
-  /** D1 exact seen-check: candidates absent from the frontier, with BOTH
-    * joins oriented so the frontier NEVER shuffles. A naive
-    * `cands LEFT ANTI frontier` cannot broadcast (the build side of an
-    * anti-join is its RIGHT side, and the right side here would be the
-    * 10^10-row frontier), so Spark would sort-merge it — a full
-    * frontier-key shuffle (~80 GB at design scale) per batch. Instead:
-    * (1) probe the frontier with the topN-bounded candidate keys via a
-    * broadcast-right LEFT SEMI — the frontier is scanned in place, never
-    * exchanged, and the output (the candidate keys actually present) is
-    * candidate-bounded; (2) anti-join the candidates against that small
-    * present-set, also broadcast. Mirrors the `touched` semi-join above;
-    * the reference needed a full partition/sort pass of the webtable per
-    * updatedb instead (crawl/UrlWithScore.java:124-195). Plan shape is
-    * spec-pinned: no Exchange may appear above the frontier scan.
+  /** The D1 bloom gate: one narrow pass over the sidecar `chain` probes
+    * each filter with its bucket's keys and collects the maybe-seen ones.
+    * A key lives in >= 1 generation, so a key it drops is not a frontier
+    * key; the chain's unioned fpp (~0.03 * chain) only widens the output.
     */
-  private[crawl] def notInFrontier(frontier: Dataset[CrawlRow],
-      cands: Dataset[Discovered]): Dataset[Discovered] = {
-    val seenKeys = frontier
-      .join(broadcast(cands.select(col("urlHash"))), Seq("urlHash"),
-        "left_semi")
-      .select(col("urlHash"))
-    cands.join(broadcast(seenKeys), Seq("urlHash"), "left_anti")
-      .as[Discovered]
+  private def bloomMaybeSeen(chain: Seq[String],
+      keysByBucket: Map[Int, Array[Long]]): Set[Long] = {
+    val keys = spark.sparkContext.broadcast(keysByBucket)
+    try chain.map(readAs[BloomPart]).reduce(_ union _)
+      .flatMap { p =>
+        keys.value.get(p.bucket).fold(Iterator.empty[Long]) { ks =>
+          val f = org.apache.spark.util.sketch.BloomFilter
+            .readFrom(new java.io.ByteArrayInputStream(p.bytes))
+          ks.iterator.filter(f.mightContain)
+        }
+      }
+      .collect().toSet
+    finally keys.destroy()
+  }
+
+  /** A filter predicate: the key column is in the broadcast key set. */
+  private def keyIn(keys: Broadcast[Set[Long]]): Column => Column = {
+    val f = udf((h: Long) => keys.value.contains(h))
+    c => f(c)
+  }
+
+  /** The exact D1 seen-check: which of the broadcast `keys` are frontier
+    * keys, by a membership filter over the scan (plan spec-pinned).
+    */
+  private[crawl] def presentKeys(frontier: Dataset[CrawlRow],
+      keys: Broadcast[Set[Long]]): Dataset[Long] =
+    frontier.select(col("urlHash")).filter(keyIn(keys)(col("urlHash")))
+      .as[Long]
+
+  /** The touched frontier rows (fetched or rediscovered this batch),
+    * selected by a membership filter over the scan (plan spec-pinned) and
+    * merged in executors by [[CrawlPipeline.mergeRow]]. The ScoringFilter
+    * updateDbScore hook follows as a columnar step whose `contrib` is a
+    * lookup in the same side (null when not rediscovered); filters that
+    * keep stored scores, like Default, skip it.
+    */
+  private[crawl] def mergeTouched(frontier: Dataset[CrawlRow],
+      side: Broadcast[BatchSide], now: Long): Dataset[CrawlRow] = {
+    val trie = trieBc
+    val sched = scheduleCfg
+    val perSiteIntervals = hasPerSiteCaps
+    val touches = udf((h: Long) => side.value.touches(h))
+    val merged = frontier.filter(touches(col("urlHash"))).map { r =>
+      val s = side.value
+      val out = s.outcomes.getOrElse(r.urlHash, null)
+      val ci =
+        if (out == null || !perSiteIntervals) 0
+        else trie.value.configOrDefault(r.url).customIntervalSec
+      CrawlPipeline.mergeRow(r, out,
+        s.disc.get(r.urlHash).fold(Int.MaxValue)(_._1), ci, now, sched)
+    }
+    if (!scoring.updatesExistingScores) merged
+    else {
+      val contrib = udf((h: Long) =>
+        side.value.disc.get(h).map(d => java.lang.Float.valueOf(d._2)).orNull)
+      merged
+        .withColumn("score", scoring
+          .updateExistingScore(col("score"), contrib(col("urlHash")))
+          .cast("float"))
+        .as[CrawlRow]
+    }
   }
 
   // --------------------------------------------------------------- hostdb
@@ -1191,20 +1134,31 @@ final class CrawlPipeline(
     * Stats aggregate map-side (hash partial agg) so the exchange carries
     * |hosts| rows, not |frontier|; the effective politeness settings are
     * materialized from the config trie so the NEXT batch's fetch reads
-    * them as a bounded table lookup.
+    * them as a bounded table lookup. A3 link-host histograms
+    * (HostDbUpdateReducer.java:46-72): the batch's (srcHost, dstHost) link
+    * counts, bounded by its outlinks, are collected; the top-K of each
+    * direction fills in the one map over the stats aggregate.
     */
-  /** Top-K host->host link histograms kept per hostdb row (reference
-    * HostDbUpdateReducer.java:46-72). K bounds the row width — the
-    * reference's own `TODO: limit number of links`.
-    */
-  private val hostLinkTopK = 50
-
   def hostdb(frontier: Dataset[CrawlRow], batchId: String, now: Long,
       parsed: Dataset[ParsedPage] = null): Dataset[HostRow] = {
     val trie = trieBc
     val defaultDelay = webCfg.crawlDelayMs
     val defaultLanes = math.max(1, webCfg.maxConcurrent)
-    val agg = frontier.groupBy(col("host")).agg(
+    val links: Array[(String, String, Long)] =
+      if (parsed == null) Array.empty
+      else {
+        val hostOf = udf((u: String) => Urls.host(u))
+        parsed
+          .select(col("host").as("src"),
+            explode(map_keys(col("outlinks"))).as("dst"))
+          .groupBy(col("src"), hostOf(col("dst")).as("dst"))
+          .agg(count(lit(1)))
+          .as[(String, String, Long)].collect()
+      }
+    val hists = spark.sparkContext.broadcast((
+      CrawlPipeline.topLinks(links.map(l => (l._2, l._1, l._3))),
+      CrawlPipeline.topLinks(links)))
+    val out = frontier.groupBy(col("host")).agg(
       count(lit(1)).as("pages"),
       count_if(col("status") === CrawlStatus.Fetched ||
         col("status") === CrawlStatus.NotModified).as("fetched"),
@@ -1213,80 +1167,21 @@ final class CrawlPipeline(
       avg(col("score")).as("avgScore"),
       max(col("distance")).as("maxDistance"))
       .as[(String, Long, Long, Long, Long, Double, Int)]
-    val stats = agg.map { case (host, pages, fetched, gone, unf, avgS, maxD) =>
-      val cfg = trie.value.configOrDefault(s"http://$host/")
-      HostRow(host, pages, fetched, gone, unf, avgS, maxD,
-        if (cfg.crawlDelayMs > 0) cfg.crawlDelayMs else defaultDelay,
-        if (cfg.maxConcurrent > 1) cfg.maxConcurrent else defaultLanes,
-        Map.empty, Map.empty, batchId)
-    }
-    // A3 link-host histograms (HostDbUpdateReducer.java:46-72): explode
-    // this batch's parsed outlinks into (srcHost, dstHost) pairs,
-    // count-aggregate (map-side partial — the explosion collapses before
-    // its one shuffle), then top-K per host in each direction. Input is
-    // the BATCH's parse output (topN-bounded), never the frontier.
-    var pairsCache: Option[org.apache.spark.sql.DataFrame] = None
-    val out: Dataset[HostRow] =
-      if (parsed == null) stats
-      else {
-        val hostOf = udf((u: String) => Urls.host(u))
-        val pairs = parsed
-          .select(col("host").as("srcHost"),
-            explode(map_keys(col("outlinks"))).as("dst"))
-          .select(col("srcHost"), hostOf(col("dst")).as("dstHost"))
-          .groupBy(col("srcHost"), col("dstHost"))
-          .agg(count(lit(1)).as("links"))
-          .persist() // feeds both histogram directions
-        pairsCache = Some(pairs)
-        // Round-7: one direction-tagged pass instead of two windows + two
-        // joins — the per-direction top-K runs in a single (dir, host)
-        // window, both histogram maps aggregate in one groupBy (the
-        // paired collect_lists see rows in the same order and null out
-        // the same rows, so key/value alignment is preserved exactly as
-        // in the per-direction form), and stats joins the histograms
-        // once. A host with links in only one direction gets an empty
-        // map either way (map_from_arrays of empty lists == the coalesce
-        // default).
-        val tagged = pairs
-          .select(col("srcHost").as("host"), col("dstHost").as("other"),
-            lit("out").as("dir"), col("links"))
-          .unionByName(pairs
-            .select(col("dstHost").as("host"), col("srcHost").as("other"),
-              lit("in").as("dir"), col("links")))
-        val wDir = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("dir"), col("host"))
-          .orderBy(col("links").desc, col("other").asc)
-        val hists = tagged
-          .withColumn("rn", row_number().over(wDir))
-          .filter(col("rn") <= hostLinkTopK)
-          .groupBy(col("host"))
-          .agg(
-            map_from_arrays(
-              collect_list(when(col("dir") === "out", col("other"))),
-              collect_list(when(col("dir") === "out", col("links"))))
-              .as("outHist"),
-            map_from_arrays(
-              collect_list(when(col("dir") === "in", col("other"))),
-              collect_list(when(col("dir") === "in", col("links"))))
-              .as("inHist"))
-        val emptyHist = map().cast("map<string,bigint>")
-        val joined = stats.toDF()
-          .join(hists, Seq("host"), "left_outer")
-          .withColumn("outLinkHosts",
-            coalesce(col("outHist"), emptyHist))
-          .withColumn("inLinkHosts", coalesce(col("inHist"), emptyHist))
-          .drop("outHist", "inHist")
-        val res = joined
-          .select(stats.toDF().columns.map(col).toIndexedSeq: _*)
-          .as[HostRow]
-        res
+      .map { case (host, pages, fetched, gone, unf, avgS, maxD) =>
+        val cfg = trie.value.configOrDefault(s"http://$host/")
+        val (in, outH) = hists.value
+        HostRow(host, pages, fetched, gone, unf, avgS, maxD,
+          if (cfg.crawlDelayMs > 0) cfg.crawlDelayMs else defaultDelay,
+          if (cfg.maxConcurrent > 1) cfg.maxConcurrent else defaultLanes,
+          in.getOrElse(host, Map.empty), outH.getOrElse(host, Map.empty),
+          batchId)
       }
     val path = s"$root/hostdb/$batchId"
     val obsH = org.apache.spark.sql.Observation()
     out.observe(obsH, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).parquet(path)
-    pairsCache.foreach(_.unpersist())
-    val res = spark.read.parquet(path).as[HostRow]
+    hists.destroy()
+    val res = readAs[HostRow](path)
     val n = observedRow(obsH).map(_.getAs[Long]("n")).getOrElse(res.count())
     commitStage(log.nextSeq(), batchId, "hostdb", path,
       Map("all" -> n), now)
@@ -1302,10 +1197,10 @@ final class CrawlPipeline(
     */
   def runBatches(depth: Int, topN: Int, maxPerHost: Int,
       startTime: Long = 1700000000000L): Dataset[CrawlRow] = {
-    // the frontier VIEW is consumed by generate, the seen-set bloom, the
-    // anti-join, the touched semi-join, and hostdb — cache each view once
-    // instead of re-resolving base ∖ deltas per consumer. The returned
-    // view stays cached.
+    // the frontier VIEW is consumed by generate, updatedb's frontier
+    // probe and merge, and hostdb — cache each view once instead of
+    // re-resolving base ∖ deltas per consumer. The returned view stays
+    // cached.
     var frontier = (lastState() match {
       case Some(c) => viewOf(c)
       case None =>
@@ -1320,8 +1215,7 @@ final class CrawlPipeline(
         // up the staged parquet exactly where the crash left off
         val list =
           if (committed((batchId, "generate")))
-            spark.read.parquet(s"$root/batches/$batchId/fetchlist")
-              .as[CrawlRow]
+            readFrontier(s"$root/batches/$batchId/fetchlist")
           else generate(frontier, batchId, now, topN, maxPerHost)
         // T2: empty step => skip remaining stages (exitValue=2 analog).
         // The generate commit (this batch's, fresh or resumed) holds the
@@ -1329,13 +1223,11 @@ final class CrawlPipeline(
         if (log.lastOf("generate").exists(_.rowCount > 0)) {
           val fetched =
             if (committed((batchId, "fetch")))
-              spark.read.parquet(s"$root/batches/$batchId/fetched")
-                .as[FetchResult]
+              readAs[FetchResult](s"$root/batches/$batchId/fetched")
             else fetch(list, batchId, now)
           val parsedRows =
             if (committed((batchId, "parse")))
-              spark.read.parquet(s"$root/batches/$batchId/parsed")
-                .as[ParsedPage]
+              readAs[ParsedPage](s"$root/batches/$batchId/parsed")
             else parse(fetched, batchId, now)
           if (!committed((batchId, "payload"))) payloads(fetched, batchId, now)
           val next = updatedb(frontier, parsedRows, batchId, now)
@@ -1349,6 +1241,90 @@ final class CrawlPipeline(
     }
     frontier
   }
+}
+
+object CrawlPipeline {
+
+  /** Top-K host->host link histograms kept per hostdb row (reference
+    * HostDbUpdateReducer.java:46-72). K bounds the row width — the
+    * reference's own `TODO: limit number of links`.
+    */
+  val HostLinkTopK = 50
+
+  /** One batch's side of the updatedb merge, resolved on the driver:
+    * each fetched row's outcome and each discovered key's
+    * (distance, contrib), keyed by urlHash.
+    */
+  private[crawl] final case class BatchSide(outcomes: Map[Long, Outcome],
+      disc: Map[Long, (Int, Float)]) {
+    def touches(h: Long): Boolean = outcomes.contains(h) || disc.contains(h)
+  }
+
+  /** The updatedb merge of one touched frontier row: `Schedule.next` — the
+    * one source of truth for re-crawl scheduling, shared with the
+    * simulator oracle — applied to a row with a fetch outcome `out` (null
+    * when the row was only rediscovered), after refining its distance to
+    * `newDist` (Int.MaxValue = not rediscovered) and, on re-crawl,
+    * refreshing its interval to the per-site `customIntervalSec`
+    * (0 = none).
+    */
+  def mergeRow(row0: CrawlRow, out: Outcome, newDist: Int,
+      customIntervalSec: Int, now: Long, sched: ScheduleConfig): CrawlRow = {
+    val row1 =
+      if (newDist >= row0.distance) row0 else row0.copy(distance = newDist)
+    if (out == null) row1
+    else {
+      // per-site interval refresh on re-crawl (reference
+      // DbConfigFetchSchedule.shouldFetch -> NutchConstant.checkInterval
+      // :975-989): a stored interval below HALF the config's
+      // customInterval is reset to the config value, so a site whose
+      // trie config changes after discovery picks the new interval up at
+      // its next merge
+      val ci = customIntervalSec
+      val row =
+        if (ci > 0 && row1.fetchInterval < ci * 0.5)
+          row1.copy(fetchInterval = ci)
+        else row1
+      val st0 = graft.core.ScheduleState(row.status, row.fetchTime,
+        row.prevFetchTime, row.fetchInterval, row.retries, row.modifiedTime)
+      val changed = row.signature == null ||
+        !java.util.Arrays.equals(row.signature, out.signature)
+      val effOutcome =
+        if (out.outcome == FetchOutcome.Success && !changed)
+          FetchOutcome.NotModified
+        else out.outcome
+      val st1 = Schedule.next(st0, effOutcome, now, sched)
+      row.copy(
+        status = st1.status,
+        fetchTime = st1.fetchTime,
+        prevFetchTime = st1.prevFetchTime,
+        fetchInterval = st1.fetchInterval,
+        retries = st1.retries,
+        modifiedTime = st1.modifiedTime,
+        prevSignature = row.signature,
+        signature =
+          if (out.signature.isEmpty) row.signature else out.signature,
+        reprUrl =
+          if (out.redirectTo.nonEmpty &&
+            (out.outcome == FetchOutcome.RedirPerm ||
+              (out.outcome == FetchOutcome.Success &&
+                out.refreshTime >= 0 &&
+                out.refreshTime < Parse.PermRefreshTime)))
+            out.redirectTo
+          else row.reprUrl,
+        lastBatch = out.batchId)
+    }
+  }
+
+  /** Per-host top-[[HostLinkTopK]] of (host, other, links) counts, ranked
+    * by links desc, then other host asc.
+    */
+  def topLinks(links: Array[(String, String, Long)])
+      : Map[String, Map[String, Long]] =
+    links.groupBy(_._1).map { case (host, ls) =>
+      host -> ls.sortBy(l => (-l._3, l._2)).iterator.take(HostLinkTopK)
+        .map(l => l._2 -> l._3).toMap
+    }
 }
 
 /** Default URL filter chain instance shared by pipeline stages. */

@@ -1,6 +1,6 @@
 package graft.crawl
 
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, DataBufferInt}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
@@ -50,9 +50,16 @@ object ImageCodec {
 
   private def clamp(v: Int): Int = math.max(0, math.min(255, v))
 
+  /** An RGB image over `px`. A TYPE_INT_RGB raster stores exactly the
+    * 0xRRGGBB int per pixel, so the pixels copy straight into its buffer
+    * (same result as `setRGB`, without its per-pixel color-model calls).
+    */
   def toImage(px: Array[Int], w: Int, h: Int): BufferedImage = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, w, h, px, 0, w)
+    val data =
+      img.getRaster.getDataBuffer.asInstanceOf[DataBufferInt].getData
+    var i = 0
+    while (i < w * h) { data(i) = px(i) & 0xFFFFFF; i += 1 }
     img
   }
 
@@ -94,12 +101,33 @@ object ImageCodec {
     img
   }
 
+  /** Decoded 0xRRGGBB pixels, row-major. An sRGB TYPE_3BYTE_BGR image
+    * (what JPEG and 8-bit RGB PNG decode to) is read straight from its
+    * raster, whose data elements come out R, G, B per pixel whatever the
+    * byte layout; every other image goes through `getRGB` and its color
+    * model. Both give the same pixels.
+    */
   def decodePixels(bytes: Array[Byte]): (Array[Int], Int, Int) = {
     val img = decode(bytes)
     val w = img.getWidth
     val h = img.getHeight
-    (img.getRGB(0, 0, w, h, null, 0, w).map(_ & 0xFFFFFF), w, h)
+    if (!isSrgbBgr(img))
+      return (img.getRGB(0, 0, w, h, null, 0, w).map(_ & 0xFFFFFF), w, h)
+    val b = img.getRaster.getDataElements(0, 0, w, h, null)
+      .asInstanceOf[Array[Byte]]
+    val px = new Array[Int](w * h)
+    var i = 0
+    while (i < px.length) {
+      px(i) = ((b(3 * i) & 0xFF) << 16) | ((b(3 * i + 1) & 0xFF) << 8) |
+        (b(3 * i + 2) & 0xFF)
+      i += 1
+    }
+    (px, w, h)
   }
+
+  private[crawl] def isSrgbBgr(img: BufferedImage): Boolean =
+    img.getType == BufferedImage.TYPE_3BYTE_BGR &&
+      img.getColorModel.getColorSpace.isCS_sRGB
 
   /** Peak signal-to-noise ratio between two RGB pixel buffers (dB). */
   def psnr(a: Array[Int], b: Array[Int]): Double = {

@@ -122,8 +122,11 @@ final class ReadApi(pipeline: CrawlPipeline, port: Int = 0) {
     server.createContext("/batches", (x: HttpExchange) =>
       try {
         val commits = pipeline.log.commits().map { c =>
+          val metrics = c.metrics.toSeq.sorted
+            .map { case (k, v) => s""""${jsonEscape(k)}":$v""" }
           s"""{"seq":${c.seq},"batchId":"${jsonEscape(c.batchId)}",""" +
-            s""""stage":"${jsonEscape(c.stage)}","rows":${c.rowCount}}"""
+            s""""stage":"${jsonEscape(c.stage)}","rows":${c.rowCount},""" +
+            s""""metrics":${metrics.mkString("{", ",", "}")}}"""
         }
         respond(x, 200, commits.mkString("[", ",", "]"))
       } catch { case e: Exception =>

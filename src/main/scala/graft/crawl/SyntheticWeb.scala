@@ -2,7 +2,7 @@ package graft.crawl
 
 import java.nio.charset.{Charset, StandardCharsets}
 
-import graft.core.{FetchOutcome, Urls, XxHash64}
+import graft.core.{Urls, XxHash64}
 
 /** Deterministic fake web — the test/bench substrate, modeled on the
   * reference's benchmark testbed (reference: tools/proxy/FakeHandler.java:46-140
@@ -38,7 +38,7 @@ final case class WebConfig(
 sealed trait WebContent
 final case class HtmlPage(outlinks: Map[String, String]) extends WebContent
 final case class ImageFile(bytes: Array[Byte], w: Int, h: Int, fmt: String,
-    caption: String, phash: Long) extends WebContent
+    caption: String) extends WebContent
 case object NotFound extends WebContent
 final case class Redirect(to: String, permanent: Boolean) extends WebContent
 case object ServerError extends WebContent // transient -> retry
@@ -101,12 +101,6 @@ object SyntheticWeb {
         Seq("/private/")
       else Nil
     case _ => Nil
-  }
-
-  def robotsAllowed(url: String): Boolean = {
-    val host = graft.core.Urls.host(url)
-    val path = graft.core.Urls.pathOf(url)
-    !robotsDisallows(host).exists(path.startsWith)
   }
 
   /** Deterministic fetch delay for a URL (DelayHandler analog). */
@@ -192,7 +186,7 @@ object SyntheticWeb {
     val (w, ht, fmt, caption, seed) = imageSpec(url, cfg)
     val px = ImageCodec.pixels(seed, w, ht)
     val bytes = ImageCodec.encode(px, w, ht, fmt)
-    ImageFile(bytes, w, ht, fmt, caption, ImageCodec.phash(px, w, ht))
+    ImageFile(bytes, w, ht, fmt, caption)
   }
 
   /** Outlink pool (FakeHandler UNIQUE-mode analog): same-host pages, one
@@ -315,14 +309,5 @@ object SyntheticWeb {
     case Redirect(to, perm) => RawRedirect(to, perm)
     case NotFound => RawNotFound
     case ServerError => RawServerError
-  }
-
-  /** Map content to a fetch outcome code (FetcherReducer status dispatch). */
-  def outcomeOf(c: WebContent): Int = c match {
-    case _: HtmlPage | _: ImageFile | _: RefreshPage => FetchOutcome.Success
-    case NotFound => FetchOutcome.Gone
-    case ServerError => FetchOutcome.RetryTransient
-    case Redirect(_, true) => FetchOutcome.RedirPerm
-    case Redirect(_, false) => FetchOutcome.RedirTemp
   }
 }

@@ -379,45 +379,58 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(noExchange === exchange)
   }
 
-  test("updatedb seen-check plans with NO shuffle above the frontier scan " +
-    "(broadcast-oriented semi + anti)") {
-    val pipeline = new CrawlPipeline(spark, root, webCfg, numBuckets = 8)
+  test("updatedb frontier probe and merge plan with NO shuffle above the " +
+    "frontier scan and no broadcast exchange") {
     // read the base snapshot from FILES directly: runBatches leaves the
     // merged view persisted, and frontierState()'s identical plan would
     // cache-hit into InMemoryTableScan leaves — this test pins the
-    // cold-plan shape a 10^10-row frontier (never cacheable) would get
-    val frontier = pipeline.readFrontier(
-      pipeline.lastState().get.frontierPath)
-    val cands = spark.createDataset(Seq(
-      Discovered(11L, "http://h.example/a", "h.example", "h.example", 0,
-        0.5f, 1, 1, ""),
-      Discovered(22L, "http://h.example/b", "h.example", "h.example", 1,
-        0.25f, 1, 2, "")))
-    val ds = pipeline.notInFrontier(frontier, cands)
-    val plan = ds.queryExecution.sparkPlan
-    val frontierScans = plan.collectLeaves().collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.relation.location.rootPaths
-            .exists(_.toString.contains("snapshot-")) => f
-    }
-    assert(frontierScans.nonEmpty, s"no frontier scan in plan:\n$plan")
-    val shuffles = plan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }
-    shuffles.foreach { e =>
-      val below = e.collectLeaves().collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.relation.location.rootPaths
-              .exists(_.toString.contains("snapshot-")) => f
+    // cold-plan shape a 10^10-row frontier (never cacheable) would get.
+    // Both pipelines: Opic adds the columnar existing-score step.
+    val sc = spark.sparkContext
+    val side = sc.broadcast(CrawlPipeline.BatchSide(
+      Map(11L -> Outcome(11L, graft.core.FetchOutcome.Success,
+        Array[Byte](1, 2), "bX", "")),
+      Map(11L -> ((1, 0.5f)), 22L -> ((2, 0.25f)))))
+    val keys = sc.broadcast(Set(11L, 22L))
+    def isFrontierScan(p: org.apache.spark.sql.execution.SparkPlan) =
+      p match {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toString.contains("snapshot-"))
+        case _ => false
       }
-      assert(below.isEmpty,
-        s"frontier scan below a ShuffleExchange — the exact seen-check " +
-          s"would shuffle frontier keys at scale:\n$plan")
+    val plans = Seq(ScoringFilter.Default, ScoringFilter.Opic).flatMap { sf =>
+      val pipeline = new CrawlPipeline(spark, root, webCfg, numBuckets = 8,
+        scoring = sf)
+      val frontier = pipeline.readFrontier(
+        pipeline.lastState().get.frontierPath)
+      Seq(pipeline.presentKeys(frontier, keys).toDF(),
+        pipeline.mergeTouched(frontier, side, 1700000000000L).toDF())
     }
-    // both steps are broadcast joins (semi then anti)
-    val s = plan.toString
-    assert(s.contains("BroadcastHashJoin") && s.contains("LeftSemi"), s)
-    assert(s.contains("LeftAnti"), s)
+    plans.foreach { ds =>
+      // the prepared physical plan: exchanges are planned into it
+      val plan = ds.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }
+      assert(plan.collectLeaves().exists(isFrontierScan),
+        s"no frontier scan in plan:\n$plan")
+      val shuffles = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+      shuffles.foreach { e =>
+        assert(!e.collectLeaves().exists(isFrontierScan),
+          s"frontier scan below a ShuffleExchange — the exact seen-check " +
+            s"would shuffle frontier keys at scale:\n$plan")
+      }
+      val broadcasts = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+          e
+      }
+      assert(broadcasts.isEmpty,
+        s"broadcast exchange in an updatedb frontier plan:\n$plan")
+    }
+    Seq(side, keys).foreach(_.destroy())
   }
 
   test("commit-log lineage counts (collected on the write pass) match files") {

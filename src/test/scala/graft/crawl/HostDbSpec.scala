@@ -74,6 +74,47 @@ class HostDbSpec extends AnyFunSuite {
     assert(hd.values.exists(_.inLinkHosts.nonEmpty))
   }
 
+  test("link histograms keep the top-K per host: links desc, then host asc") {
+    // one hub host links out to K+10 hosts and K+10 hosts link into it;
+    // 10 of each get more links than the rest, so the cut at K falls
+    // inside a tie that only the host-name order decides
+    val k = CrawlPipeline.HostLinkTopK
+    val hub = "www.hub.example"
+    val rnd = new scala.util.Random(7)
+    val others = rnd.shuffle((0 until k + 10).map(i => s"h$i.example"))
+    val outCounts = others.zipWithIndex.map { case (h, i) =>
+      h -> (if (i < 10) 3L else 1L) }.toMap
+    val inCounts = rnd.shuffle(others).zipWithIndex.map { case (h, i) =>
+      h -> (if (i < 10) 2L else 1L) }.toMap
+    def page(host: String, links: Seq[String]) =
+      ParsedPage(0L, s"http://$host/", host, graft.core.FetchOutcome.Success,
+        "text/html", null, links.map(_ -> "").toMap, "", null, 0, "", 1f,
+        0, 0L, 0L, "b1")
+    val pages = page(hub, outCounts.toSeq.flatMap { case (h, n) =>
+      (0L until n).map(j => s"http://$h/p$j.html") }) +:
+      inCounts.toSeq.map { case (h, n) =>
+        page(h, (0L until n).map(j => s"http://$hub/from-$h-$j.html")) }
+    val dir = Files.createTempDirectory("hostdb-topk").toString
+    val p = new CrawlPipeline(spark, dir, webCfg, numBuckets = 4)
+    val frontier = p.inject(Seq(s"http://$hub/"), 1700000000000L)
+    val row = p.hostdb(frontier, "b1", 1700000000000L,
+      spark.createDataset(pages)).collect().find(_.host == hub).get
+    def topK(counts: Map[String, Long]): Map[String, Long] =
+      counts.toSeq.sortBy { case (h, n) => (-n, h) }.take(k).toMap
+    Seq(("outLinkHosts", row.outLinkHosts, outCounts),
+      ("inLinkHosts", row.inLinkHosts, inCounts)).foreach {
+      case (name, got, counts) =>
+        assert(got.size === k, name)
+        assert(got === topK(counts), name)
+        // the tie bites: some single-link hosts are kept, some dropped,
+        // and the kept ones are the smallest host names among them
+        val singles = counts.collect { case (h, 1L) => h }.toSeq.sorted
+        val kept = singles.filter(got.contains)
+        assert(kept.nonEmpty && kept.size < singles.size, name)
+        assert(kept === singles.take(kept.size), name)
+    }
+  }
+
   test("byDomain queue mode: subdomains share one politeness timeline") {
     // seed www + m subdomains of the same registered domain; in byDomain
     // mode they serialize on one queue — parity with the simulator in the

@@ -69,6 +69,20 @@ class ReadApiSpec extends AnyFunSuite {
       assert(c4 === 200)
       assert(batches.contains(""""stage":"updatedb""""))
       assert(batches.contains(""""stage":"inject""""))
+
+      // every updatedb commit carries the bloom gate's rates, taken from
+      // the driver-side key counts, and /batches serves them
+      val updates = p.log.commits().filter(_.stage == "updatedb")
+      assert(updates.size === 2)
+      updates.foreach { c =>
+        Seq("bloomMaybeSeenRate", "bloomFalsePositiveRate").foreach { k =>
+          val v = c.metrics.getOrElse(k, fail(s"${c.batchId}: no $k"))
+          assert(v >= 0.0 && v <= 1.0, s"${c.batchId}: $k = $v")
+          assert(batches.contains(s""""$k":$v"""), k)
+        }
+      }
+      // batch 2 rediscovers batch-1 URLs, so its gate lets keys through
+      assert(updates.last.metrics("bloomMaybeSeenRate") > 0.0)
     } finally api.stop()
   }
 }
