@@ -15,17 +15,19 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * A commit records `(seq, batchId, stage, status, rowCounts, snapshot
   * paths, per-partition lineage, metrics)` — the reference's ZooKeeper step
   * gate (reference: crawl/NutchConstant.java:648-830 preparStartJob,
-  * :1007-1076 preparEndJob) collapses into "read the last committed stage".
-  * Resume = scan commits, find the last complete batch, continue from its
-  * snapshot (north rule: resumes exactly from checkpoint with
-  * per-partition lineage + metrics).
+  * :1007-1076 preparEndJob) collapses into "is (batch, stage) committed?".
+  * Resume = skip every committed (batch, stage), read back the table its
+  * commit names, continue from the last committed frontier state (north
+  * rule: resumes exactly from checkpoint with per-partition lineage +
+  * metrics).
   */
 final case class Commit(
     seq: Long,
     batchId: String,
     stage: String, // inject | generate | fetch | parse | updatedb | ...
     status: String, // complete (only complete commits are ever written)
-    frontierPath: String, // BASE snapshot dir this stage produced/read
+    // the table this stage wrote; the base snapshot for state commits
+    frontierPath: String,
     rowCount: Long,
     partitionCounts: Map[String, Long], // per-bucket lineage
     metrics: Map[String, Double],

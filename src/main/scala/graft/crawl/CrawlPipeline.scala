@@ -1,7 +1,8 @@
 package graft.crawl
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CrawlStatus, FetchOutcome, Schedule, ScheduleConfig, Urls, XxHash64}
@@ -104,7 +105,7 @@ final class CrawlPipeline(
     extends Serializable {
 
   import spark.implicits._
-  import CrawlPipeline.BatchSide
+  import CrawlPipeline.{BatchSide, Table}
 
   @transient val log = new CommitLog(root)
   // the protocol extension point: a real HttpFetcher (or any Fetcher)
@@ -122,9 +123,6 @@ final class CrawlPipeline(
     * predicates from it).
     */
   def bucketCount: Int = numBuckets
-
-  private def snapshotDir(seq: Long): String =
-    s"$root/frontier/snapshot-$seq"
 
   // ---------------------------------------------------------------- inject
 
@@ -167,61 +165,108 @@ final class CrawlPipeline(
         }
       }
       .dropDuplicates("urlHash")
+    runStage[CrawlRow]("b0", "inject", now, Table.Snapshot, rows,
+      bucketCounts)(writeSnapshot)
+  }
+
+  // ---------------------------------------------------------------- commits
+
+  /** The one stage runner: every commit in the log is written here. It
+    * assigns the commit's seq and the table's path, writes `rows` there
+    * with `write`, and observes a row count plus the stage's `observed`
+    * figures on that write itself: no stage re-scans the bytes it just
+    * wrote only to count them. A frontier table then gets its bloom
+    * generation ([[writeBlooms]]). `metrics` turns the observation and the
+    * write's wall time into the commit's stage metrics. Returns the table
+    * it wrote. The name holds no stage name, so per-stage tracing charges
+    * its Spark jobs to the calling stage.
+    *
+    * Partition counts are the observed `bucketCounts` map when the stage
+    * observes one, else `all -> rows`.
+    */
+  private def runStage[T: Encoder](batchId: String, stage: String,
+      now: Long, table: Table, rows: Dataset[_], observed: Column*)(
+      write: (DataFrame, String) => Unit,
+      metrics: (Map[String, Any], Double) => Map[String, Double] =
+        (_, _) => Map.empty): Dataset[T] = {
     val seq = log.nextSeq()
-    val path = snapshotDir(seq)
-    commitSnapshot(seq, "b0", "inject", path, writeFrontier(rows, path), now,
-      Map.empty)
-    readFrontier(path)
-  }
-
-  private def writeFrontier(rows: Dataset[CrawlRow], path: String)
-      : Map[String, Long] = {
-    // align task partitions with bucket dirs: one file per bucket instead
-    // of |tasks| x |buckets| small files (2048 -> 64 at the bench config)
-    val (observed, obs) = observeBucketCounts(rows)
-    observed.repartition(numBuckets, col("bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
-    observedCounts(obs).getOrElse(footerCounts(path))
-  }
-
-  /** Attach a per-bucket row-count observation to a frontier write plan.
-    * The commit log's partition counts come from the WRITE PASS itself —
-    * a snapshot write must not be followed by a full re-scan of the bytes
-    * just written only to count them (at the 10^10-row/2 TB design point
-    * that re-scan doubles every compaction's I/O).
-    */
-  private def observeBucketCounts(rows: Dataset[CrawlRow])
-      : (Dataset[CrawlRow], org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val agg = udaf(new BucketCountsAgg(numBuckets))
-    (rows.observe(obs, agg(col("bucket")).as("bucketCounts")), obs)
-  }
-
-  /** Resolve an observed bucket-count map. Fallback (never expected, but
-    * an Observation that misses its listener event would block forever):
-    * parquet FOOTER row counts per bucket dir — metadata reads only,
-    * still no data re-scan.
-    */
-  private def observedCounts(obs: org.apache.spark.sql.Observation)
-      : Option[Map[String, Long]] =
-    observedRow(obs).map(
-      _.getAs[scala.collection.Map[String, Long]]("bucketCounts").toMap)
-
-  /** Resolve an observation row (30 s guard against a lost listener
-    * event — same rationale as observedCounts). Round-7: every stage's
-    * commit counts now ride the stage's own write job via observe()
-    * instead of a post-write read-back action; locally that removes one
-    * Spark job per stage, at scale it removes a re-scan of bytes the
-    * stage just wrote.
-    */
-  private def observedRow(obs: org.apache.spark.sql.Observation)
-      : Option[org.apache.spark.sql.Row] =
-    try
-      Some(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(30, "s")))
-    catch {
-      case _: java.util.concurrent.TimeoutException => None
+    val path = table match {
+      case Table.Batch(p) => p
+      case Table.Snapshot => s"$root/frontier/snapshot-$seq"
+      case Table.Delta(_) => s"$root/frontier/delta-$seq"
     }
+    val figures = count(lit(1)).as("rows") +: observed
+    val obs = org.apache.spark.sql.Observation()
+    val t0 = System.nanoTime()
+    write(rows.observe(obs, figures.head, figures.tail: _*).toDF(), path)
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    // 30 s guard: an observation that misses its listener event would
+    // block forever. The fallback re-aggregates the same figures over the
+    // batch-sized table just written; a frontier snapshot reads its
+    // parquet FOOTER counts instead — metadata only, never a re-scan.
+    def byName(r: org.apache.spark.sql.Row) =
+      r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq)
+    val seen: Map[String, Any] =
+      try byName(scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(30, "s")))
+      catch {
+        case _: java.util.concurrent.TimeoutException
+            if table == Table.Snapshot =>
+          val fc = footerCounts(path)
+          Map("rows" -> fc.values.sum, "bucketCounts" -> fc)
+        case _: java.util.concurrent.TimeoutException =>
+          byName(readAs[T](path).agg(figures.head, figures.tail: _*).head())
+      }
+    val counts = seen.get("bucketCounts").fold(
+      Map("all" -> seen("rows").asInstanceOf[Long]))(
+      _.asInstanceOf[scala.collection.Map[String, Long]].toMap)
+    val n = counts.values.sum
+    val written = Commit(seq, batchId, stage, "complete", path, n, counts,
+      metrics(seen, wallMs), now)
+    // URL-seen sidecars ride every frontier table: a snapshot starts a
+    // fresh bloom chain, a delta appends a delta-sized generation. Timed
+    // apart from the stage's own work (`bloomWallMs`); none when the
+    // seen-filter is off, since nothing would read them.
+    def withBlooms(c: Commit, chain: Seq[String]): Commit = {
+      val tB = System.nanoTime()
+      val bloom =
+        if (useBloomSeenFilter)
+          Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq", n))
+        else Nil
+      c.copy(bloomPaths = chain ++ bloom, metrics = c.metrics +
+        ("bloomWallMs" -> (System.nanoTime() - tB) / 1e6))
+    }
+    val commit = table match {
+      case Table.Batch(_) => written
+      case Table.Snapshot => withBlooms(written, Nil)
+      // lineage counts for a delta commit describe the DELTA files;
+      // rowCount upper-bounds the logical state (touched rows count
+      // twice) — its only consumer is bloom sizing, where an over-estimate
+      // just lowers the fpp
+      case Table.Delta(base) =>
+        withBlooms(written.copy(frontierPath = base.frontierPath,
+          rowCount = base.rowCount + n, deltaPaths = base.deltas :+ path),
+          base.blooms)
+    }
+    log.append(commit)
+    readAs[T](path)
+  }
+
+  /** Per-bucket row counts of a frontier-keyed table, as an observed
+    * figure: the commit log's partition lineage.
+    */
+  private def bucketCounts: Column = {
+    val agg = udaf(new BucketCountsAgg(numBuckets))
+    agg(col("bucket")).as("bucketCounts")
+  }
+
+  /** A full snapshot write: task partitions aligned with bucket dirs, one
+    * file per bucket instead of |tasks| x |buckets| small files (2048 ->
+    * 64 at the bench config).
+    */
+  private def writeSnapshot(rows: DataFrame, path: String): Unit =
+    rows.repartition(numBuckets, col("bucket"))
+      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
 
   private def footerCounts(path: String): Map[String, Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -304,59 +349,6 @@ final class CrawlPipeline(
     }
   }
 
-  /** Compaction snapshot write WITHOUT the full-width exchange (the
-    * measured scaling soft spot of round 2: repartitioning every frontier
-    * row for the snapshot write was memory-bandwidth bound at 0.54-0.62
-    * efficiency). The base scan's tasks are already bucket-aligned — each
-    * parquet split holds rows of exactly one `bucket=N` directory — so
-    * untouched rows stream scan->writer with no exchange; only the folded
-    * delta (topN-bounded) pays a small repartition and is APPENDED into
-    * the same partition layout.
-    *
-    * Trade-off: each minor compaction adds ~numBuckets delta files to the
-    * snapshot instead of rewriting one file per bucket; `majorEvery`
-    * bounds the growth — every majorEvery-th compaction bin-packs through
-    * the full exchange (Iceberg's minor/major compaction split).
-    */
-  private def writeSnapshotNoExchange(baseUntouched: Dataset[CrawlRow],
-      latest: Dataset[CrawlRow], path: String, basePath: String)
-      : Map[String, Long] = {
-    // Size the scan splits from the BASE SNAPSHOT size so scan
-    // parallelism replaces exchange parallelism at every scale: with the
-    // default 128MB maxPartitionBytes a small frontier packs many bucket
-    // files into ONE task, which (a) single-threads the write and (b)
-    // makes the dynamic-partition writer sort mixed-bucket rows per task
-    // (measured: the "exchange-free" compaction slower than the exchange
-    // at bench scale). One-file-per-task splits keep each task on a
-    // single bucket: constant-key sort, one output file, full
-    // parallelism.
-    val conf = spark.conf
-    val prevMax = conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    val targetSplits =
-      math.max(1, 4 * spark.sparkContext.defaultParallelism)
-    val per = math.max(1L << 20,
-      math.min(128L << 20, dirBytes(basePath) / targetSplits))
-    try {
-      conf.set("spark.sql.files.maxPartitionBytes", per.toString)
-      // counts ride on the two write passes (observe) — summing the two
-      // observations replaces the full-table re-scan this writer exists
-      // to avoid paying
-      val (obsBase, o1) = observeBucketCounts(baseUntouched)
-      obsBase
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
-      val (obsLatest, o2) = observeBucketCounts(latest)
-      obsLatest.repartition(math.max(1, numBuckets / 8), col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(path)
-      (observedCounts(o1), observedCounts(o2)) match {
-        case (Some(base), Some(app)) =>
-          app.foldLeft(base) { case (acc, (b, c)) =>
-            acc.updated(b, acc.getOrElse(b, 0L) + c)
-          }
-        case _ => footerCounts(path)
-      }
-    } finally conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-  }
-
   private def dirBytes(path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -370,20 +362,6 @@ final class CrawlPipeline(
     majorEvery > 0 && n % majorEvery == majorEvery - 1
   }
 
-  /** Exchange-free compaction pays fixed overheads (a second write job,
-    * the persisted chain fold) that only amortize once the avoided
-    * exchange is big enough. Measured on this box at 4 cores (write
-    * pattern alone): 66MB base — exchange wins 2.7s vs 5.3s; 178MB —
-    * parity; 534MB — no-exchange wins 4.5s vs 7.6s; 1.8GB — 14s vs
-    * 18-24s. Below the threshold the snapshot is small enough that the
-    * exchange IS the parallelizer and costs nothing; above it, the
-    * no-exchange path's scan-parallel write wins and keeps winning as
-    * size grows (at the 10^10-row/2TB design point the exchange would
-    * serialize the whole frontier through shuffle files).
-    */
-  private def useNoExchangeCompaction(basePath: String): Boolean =
-    dirBytes(basePath) >= noExchangeMinBytes
-
   /** The current frontier state as a Dataset (test/ops surface). */
   def frontierState(): Dataset[CrawlRow] =
     viewOf(lastState().getOrElse(
@@ -394,76 +372,86 @@ final class CrawlPipeline(
     */
   def compact(now: Long): Unit =
     lastState().filter(_.deltas.nonEmpty).foreach { c =>
-      val seq = log.nextSeq()
       val t0 = System.nanoTime()
-      val (path, counts, _) =
-        foldChain(seq, c.frontierPath, c.deltas.map(readFrontier))
-      commitSnapshot(seq, c.batchId, "compact", path, counts, now,
-        Map("compactWallMs" -> (System.nanoTime() - t0) / 1e6))
+      foldChain(c.batchId, "compact", now, c.frontierPath,
+        c.deltas.map(readFrontier)) { _ =>
+        Map("compactWallMs" -> (System.nanoTime() - t0) / 1e6)
+      }
     }
 
   /** Fold a delta chain (ordered frames, later wins) over the base
-    * snapshot at `basePath` into the full snapshot of `seq` — the one
-    * chain compaction behind both `compact` and updatedb's compacting
-    * merge. Minor by default: untouched base rows stream scan->writer
-    * bucket-aligned with NO exchange; only the folded chain (topN-bounded)
-    * shuffles. Every majorEvery-th compaction, and any base below
-    * `noExchangeMinBytes`, goes through the full exchange instead.
-    * Returns the snapshot path, its per-bucket counts and whether the
-    * compaction was major. The name holds no stage name, so per-stage
-    * tracing charges its Spark jobs to the calling stage.
+    * snapshot at `basePath` and commit the full snapshot as `stage` — the
+    * one chain compaction behind both `compact` and updatedb's compacting
+    * merge. `metrics` gets whether the compaction was major. The name
+    * holds no stage name, so per-stage tracing charges its Spark jobs to
+    * the calling stage.
+    *
+    * Minor by default, WITHOUT the full-width exchange (the measured
+    * scaling soft spot of round 2: repartitioning every frontier row for
+    * the snapshot write was memory-bandwidth bound at 0.54-0.62
+    * efficiency). The base scan's tasks are already bucket-aligned — each
+    * parquet split holds rows of exactly one `bucket=N` directory — so
+    * untouched rows stream scan->writer with no exchange, next to the
+    * folded chain's (topN-bounded) small repartition, in one write job.
+    * Each minor compaction thus adds ~numBuckets delta files to the
+    * snapshot instead of rewriting one file per bucket; every
+    * majorEvery-th compaction bin-packs through the full exchange
+    * (Iceberg's minor/major compaction split).
+    *
+    * A base below `noExchangeMinBytes` also takes the exchange: the
+    * exchange-free path pays fixed overheads that only amortize once the
+    * avoided exchange is big enough. Measured on this box at 4 cores
+    * (write pattern alone): 66MB base — exchange wins 2.7s vs 5.3s;
+    * 178MB — parity; 534MB — no-exchange wins 4.5s vs 7.6s; 1.8GB — 14s
+    * vs 18-24s. At the 10^10-row/2TB design point the exchange would
+    * serialize the whole frontier through shuffle files.
     */
-  private def foldChain(seq: Long, basePath: String,
-      chain: Seq[Dataset[CrawlRow]])
-      : (String, Map[String, Long], Boolean) = {
-    val path = snapshotDir(seq)
+  private def foldChain(batchId: String, stage: String, now: Long,
+      basePath: String, chain: Seq[Dataset[CrawlRow]])(
+      metrics: Boolean => Map[String, Double]): Unit = {
     // persisted: the folded chain feeds TWO jobs (base anti-join keys +
-    // its own append) — without it the whole chain lineage would
-    // recompute per job
+    // the write) — without it the whole chain lineage would recompute
     val latest = latestOf(chain)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val baseUntouched = readFrontier(basePath)
       .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
         "left_anti")
-      .as[CrawlRow]
     val major = nextCompactionIsMajor()
-    val counts =
-      if (major || !useNoExchangeCompaction(basePath))
-        writeFrontier(baseUntouched.unionByName(latest), path)
-      else writeSnapshotNoExchange(baseUntouched, latest, path, basePath)
+    val baseBytes = dirBytes(basePath)
+    val (rows, write) =
+      if (major || baseBytes < noExchangeMinBytes)
+        (baseUntouched.unionByName(latest.toDF()), writeSnapshot _)
+      else {
+        // Size the scan splits from the BASE SNAPSHOT size so scan
+        // parallelism replaces exchange parallelism at every scale: with
+        // the default 128MB maxPartitionBytes a small frontier packs many
+        // bucket files into ONE task, which (a) single-threads the write
+        // and (b) makes the dynamic-partition writer sort mixed-bucket
+        // rows per task (measured: the "exchange-free" compaction slower
+        // than the exchange at bench scale). One-file-per-task splits keep
+        // each task on a single bucket: constant-key sort, one output
+        // file, full parallelism.
+        val targetSplits =
+          math.max(1, 4 * spark.sparkContext.defaultParallelism)
+        val per = math.max(1L << 20,
+          math.min(128L << 20, baseBytes / targetSplits))
+        (baseUntouched.unionByName(latest
+          .repartition(math.max(1, numBuckets / 8), col("bucket")).toDF()),
+          { (df: DataFrame, path: String) =>
+            val conf = spark.conf
+            val prevMax =
+              conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+            try {
+              conf.set("spark.sql.files.maxPartitionBytes", per.toString)
+              df.write.mode(SaveMode.Overwrite).partitionBy("bucket")
+                .parquet(path)
+            } finally conf.set("spark.sql.files.maxPartitionBytes", prevMax)
+          })
+      }
+    runStage[CrawlRow](batchId, stage, now, Table.Snapshot, rows,
+      bucketCounts)(write, (_, _) => metrics(major))
     latest.unpersist()
-    (path, counts, major)
   }
-
-  /** Commit a full snapshot together with one fresh bloom generation over
-    * it: inject and every compaction reset the bloom chain (the only full
-    * bloom builds). The build is timed apart from the stage's own work
-    * (`bloomWallMs`), so the commit attributes sidecar cost directly.
-    */
-  private def commitSnapshot(seq: Long, batchId: String, stage: String,
-      path: String, counts: Map[String, Long], now: Long,
-      metrics: Map[String, Double]): Commit = {
-    val tB = System.nanoTime()
-    // sidecars only when the seen-filter is on — a pipeline that always
-    // probes every discovered key must not pay bloom builds it never reads
-    val bloomPaths =
-      if (useBloomSeenFilter)
-        Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq",
-          counts.values.sum))
-      else Nil
-    commitStage(seq, batchId, stage, path, counts, now,
-      metrics + ("bloomWallMs" -> (System.nanoTime() - tB) / 1e6),
-      bloomPaths = bloomPaths)
-  }
-
-  private def commitStage(seq: Long, batchId: String, stage: String,
-      frontierPath: String, partCounts: Map[String, Long], now: Long,
-      metrics: Map[String, Double] = Map.empty,
-      deltaPaths: Seq[String] = Nil,
-      bloomPaths: Seq[String] = Nil): Commit =
-    log.append(Commit(seq, batchId, stage, "complete", frontierPath,
-      partCounts.values.sum, partCounts, metrics, now, deltaPaths,
-      bloomPaths))
 
   /** Build per-bucket URL-seen bloom filters over `rows` and persist
     * them as a (bucket, bytes) parquet sidecar. Built DISTRIBUTED (each
@@ -513,25 +501,14 @@ final class CrawlPipeline(
     */
   def generate(frontier: Dataset[CrawlRow], batchId: String, now: Long,
       topN: Int, maxPerHost: Int): Dataset[CrawlRow] = {
-    val listFinal = fetchlistPlan(frontier, batchId, now, topN, maxPerHost)
-
-    val path = s"$root/batches/$batchId/fetchlist"
-    val t0 = System.nanoTime()
     // limit() collapses to one partition; spread the fetchlist by host so
-    // the fetch stage's shuffle-write side is parallel, not one task.
-    // Counts observe() the write itself — no read-back count job.
-    val (observed, obs) = observeBucketCounts(listFinal)
-    observed.repartition(numBuckets, col("host"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    val generateWallMs = (System.nanoTime() - t0) / 1e6
-    val out = readFrontier(path)
-    val counts = observedCounts(obs).getOrElse(
-      out.groupBy("bucket").count().as[(Int, Long)].collect()
-        .map { case (b, c) => b.toString -> c }.toMap)
-    commitStage(log.nextSeq(), batchId, "generate",
-      lastState().map(_.frontierPath).getOrElse(""), counts, now,
-      metrics = Map("generateWallMs" -> generateWallMs))
-    out
+    // the fetch stage's shuffle-write side is parallel, not one task
+    runStage[CrawlRow](batchId, "generate", now,
+      Table.Batch(s"$root/batches/$batchId/fetchlist"),
+      fetchlistPlan(frontier, batchId, now, topN, maxPerHost), bucketCounts)(
+      _.repartition(numBuckets, col("host"))
+        .write.mode(SaveMode.Overwrite).parquet(_),
+      (_, ms) => Map("generateWallMs" -> ms))
   }
 
   /** The fetchlist as an UNEXECUTED plan (split from [[generate]] so specs
@@ -754,34 +731,25 @@ final class CrawlPipeline(
         }
       }
 
-    val path = s"$root/batches/$batchId/fetched"
-    val t0 = System.nanoTime()
     // content bytes are jpeg/png/gzip — already entropy-coded; parquet
     // snappy on top is pure CPU/allocation overhead on the widest write,
     // and dictionary-encoding unique binaries is wasted hashing
-    val obsF = org.apache.spark.sql.Observation()
-    results.observe(obsF, count(lit(1)).as("n"),
-        max(col("fetchEnd")).as("maxEnd"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "uncompressed")
-      .option("parquet.enable.dictionary", "false").parquet(path)
-    val fetchWallMs = (System.nanoTime() - t0) / 1e6
-    val out = readAs[FetchResult](path)
-    val (n, maxEnd) = observedRow(obsF)
-      .map(r => (r.getAs[Long]("n"),
-        Option(r.getAs[java.lang.Long]("maxEnd")).map(_.toLong)
-          .getOrElse(0L)))
-      .getOrElse(out.agg(count(lit(1)), max(col("fetchEnd")))
-        .as[(Long, Long)].head())
-    val vWall = maxEnd - now
-    commitStage(log.nextSeq(), batchId, "fetch", path,
-      Map("all" -> n), now,
-      Map("pages" -> n.toDouble,
-        "fetchWallMs" -> fetchWallMs,
-        "virtualWallMs" -> vWall.toDouble,
-        "virtualPagesPerSec" ->
-          (if (vWall > 0) n * 1000.0 / vWall else 0.0)))
-    out
+    runStage[FetchResult](batchId, "fetch", now,
+      Table.Batch(s"$root/batches/$batchId/fetched"), results,
+      max(col("fetchEnd")).as("maxEnd"))(
+      _.write.mode(SaveMode.Overwrite)
+        .option("compression", "uncompressed")
+        .option("parquet.enable.dictionary", "false").parquet(_),
+      { (seen, ms) =>
+        val n = seen("rows").asInstanceOf[Long]
+        val vWall =
+          Option(seen("maxEnd")).fold(0L)(_.asInstanceOf[Long]) - now
+        Map("pages" -> n.toDouble,
+          "fetchWallMs" -> ms,
+          "virtualWallMs" -> vWall.toDouble,
+          "virtualPagesPerSec" ->
+            (if (vWall > 0) n * 1000.0 / vWall else 0.0))
+      })
   }
 
   // ----------------------------------------------------------------- parse
@@ -816,17 +784,10 @@ final class CrawlPipeline(
         r.srcScore, r.srcDistance, r.fetchStart, r.fetchEnd, r.batchId,
         po.refreshTime)
     }
-    val path = s"$root/batches/$batchId/parsed"
-    val t0 = System.nanoTime()
-    val obsP = org.apache.spark.sql.Observation()
-    out.observe(obsP, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    val parseWallMs = (System.nanoTime() - t0) / 1e6
-    val res = readAs[ParsedPage](path)
-    val n = observedRow(obsP).map(_.getAs[Long]("n")).getOrElse(res.count())
-    commitStage(log.nextSeq(), batchId, "parse", path,
-      Map("all" -> n), now, Map("parseWallMs" -> parseWallMs))
-    res
+    runStage[ParsedPage](batchId, "parse", now,
+      Table.Batch(s"$root/batches/$batchId/parsed"), out)(
+      _.write.mode(SaveMode.Overwrite).parquet(_),
+      (_, ms) => Map("parseWallMs" -> ms))
   }
 
   /** Decode+validate image payloads from fetched CONTENT bytes (C11 —
@@ -850,16 +811,10 @@ final class CrawlPipeline(
           r.contentType.stripPrefix("image/"), r.anchor,
           ImageCodec.phash(px, w, h), r.urlHash, batchId)
       }
-    val path = s"$root/batches/$batchId/payload"
-    val obsY = org.apache.spark.sql.Observation()
-    out.observe(obsY, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "uncompressed").parquet(path) // encoded bytes
-    val res = readAs[PayloadRow](path)
-    val n = observedRow(obsY).map(_.getAs[Long]("n")).getOrElse(res.count())
-    commitStage(log.nextSeq(), batchId, "payload", path,
-      Map("all" -> n), now)
-    res
+    runStage[PayloadRow](batchId, "payload", now,
+      Table.Batch(s"$root/batches/$batchId/payload"), out)(
+      _.write.mode(SaveMode.Overwrite)
+        .option("compression", "uncompressed").parquet(_)) // encoded bytes
   }
 
   // --------------------------------------------------------------- updatedb
@@ -1006,55 +961,29 @@ final class CrawlPipeline(
     // batch made the snapshot exchange the merge stage's scaling
     // bottleneck (0.60 efficiency); here the per-batch merge cost is
     // O(delta) and the full-width exchange is amortized over the chain.
-    val basePath = prev.map(_.frontierPath).getOrElse("")
-    val chain = prev.map(_.deltas).getOrElse(Nil)
-    val seq = log.nextSeq()
     val delta = mergeTouched(frontier, side, now).union(newRows)
-    val result =
-      if (chain.size >= compactEvery - 1) {
+    def merged() =
+      bloomMetrics + ("mergeWallMs" -> (System.nanoTime() - t0) / 1e6)
+    prev.filter(_.deltas.size < compactEvery - 1) match {
+      case Some(base) =>
+        // the delta's bloom generation re-adds the changed rows'
+        // already-seen keys: a harmless superset
+        runStage[CrawlRow](batchId, "updatedb", now, Table.Delta(base),
+          delta, bucketCounts)(
+          _.repartition(math.max(1, numBuckets / 8), col("bucket"))
+            .write.mode(SaveMode.Overwrite).parquet(_),
+          (_, _) => merged())
+      case None =>
         // compacting merge: fold the chain + this batch into a full
         // snapshot
-        val (path, counts, major) =
-          foldChain(seq, basePath, chain.map(readFrontier) :+ delta)
-        commitSnapshot(seq, batchId, "updatedb", path, counts, now,
-          bloomMetrics ++ Map(
-            "mergeWallMs" -> (System.nanoTime() - t0) / 1e6,
-            "compacted" -> (if (major) 2.0 else 1.0)))
-      } else {
-        val deltaPath = s"$root/frontier/delta-$seq"
-        // lineage counts for a delta commit describe the DELTA files — no
-        // extra full-view pass per batch, and the counts ride on the
-        // write itself (observe). rowCount upper-bounds the logical state
-        // (prev total + delta rows; touched rows double in the bound) —
-        // its only consumer is bloom sizing, where an over-estimate just
-        // lowers the fpp.
-        val (obsDelta, oD) = observeBucketCounts(delta)
-        obsDelta.repartition(math.max(1, numBuckets / 8), col("bucket"))
-          .write.mode(SaveMode.Overwrite).parquet(deltaPath)
-        val mergeMs = (System.nanoTime() - t0) / 1e6
-        // fallback re-scan is DELTA-sized (topN-bounded), never the view
-        val deltaCounts = observedCounts(oD).getOrElse(
-          readFrontier(deltaPath).groupBy(col("bucket")).count()
-            .as[(Int, Long)].collect()
-            .map { case (b, c) => b.toString -> c }.toMap)
-        val total = prev.map(_.rowCount).getOrElse(0L) + deltaCounts.values.sum
-        // incremental seen-set: a delta-sized bloom generation over this
-        // batch's delta rows (changed rows re-add already-seen keys —
-        // a harmless superset) appended to the chain
-        val tB = System.nanoTime()
-        val blooms =
-          if (!useBloomSeenFilter) Nil
-          else bloomChain :+ writeBlooms(readFrontier(deltaPath),
-            s"$root/blooms/$seq", deltaCounts.values.sum)
-        log.append(Commit(seq, batchId, "updatedb", "complete", basePath,
-          total, deltaCounts,
-          bloomMetrics ++ Map("mergeWallMs" -> mergeMs,
-            "bloomWallMs" -> (System.nanoTime() - tB) / 1e6),
-          now, chain :+ deltaPath, blooms))
-      }
+        foldChain(batchId, "updatedb", now, prev.fold("")(_.frontierPath),
+          prev.fold(Seq.empty[String])(_.deltas).map(readFrontier) :+ delta) {
+          major => merged() + ("compacted" -> (if (major) 2.0 else 1.0))
+        }
+    }
     discAgg.unpersist()
     Seq(side, probe, present).foreach(_.destroy())
-    viewOf(result)
+    frontierState()
   }
 
   /** The D1 bloom gate: one narrow pass over the sidecar `chain` probes
@@ -1140,21 +1069,17 @@ final class CrawlPipeline(
     * direction fills in the one map over the stats aggregate.
     */
   def hostdb(frontier: Dataset[CrawlRow], batchId: String, now: Long,
-      parsed: Dataset[ParsedPage] = null): Dataset[HostRow] = {
+      parsed: Dataset[ParsedPage]): Dataset[HostRow] = {
     val trie = trieBc
     val defaultDelay = webCfg.crawlDelayMs
     val defaultLanes = math.max(1, webCfg.maxConcurrent)
-    val links: Array[(String, String, Long)] =
-      if (parsed == null) Array.empty
-      else {
-        val hostOf = udf((u: String) => Urls.host(u))
-        parsed
-          .select(col("host").as("src"),
-            explode(map_keys(col("outlinks"))).as("dst"))
-          .groupBy(col("src"), hostOf(col("dst")).as("dst"))
-          .agg(count(lit(1)))
-          .as[(String, String, Long)].collect()
-      }
+    val hostOf = udf((u: String) => Urls.host(u))
+    val links = parsed
+      .select(col("host").as("src"),
+        explode(map_keys(col("outlinks"))).as("dst"))
+      .groupBy(col("src"), hostOf(col("dst")).as("dst"))
+      .agg(count(lit(1)))
+      .as[(String, String, Long)].collect()
     val hists = spark.sparkContext.broadcast((
       CrawlPipeline.topLinks(links.map(l => (l._2, l._1, l._3))),
       CrawlPipeline.topLinks(links)))
@@ -1176,15 +1101,10 @@ final class CrawlPipeline(
           in.getOrElse(host, Map.empty), outH.getOrElse(host, Map.empty),
           batchId)
       }
-    val path = s"$root/hostdb/$batchId"
-    val obsH = org.apache.spark.sql.Observation()
-    out.observe(obsH, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    val res = runStage[HostRow](batchId, "hostdb", now,
+      Table.Batch(s"$root/hostdb/$batchId"), out)(
+      _.write.mode(SaveMode.Overwrite).parquet(_))
     hists.destroy()
-    val res = readAs[HostRow](path)
-    val n = observedRow(obsH).map(_.getAs[Long]("n")).getOrElse(res.count())
-    commitStage(log.nextSeq(), batchId, "hostdb", path,
-      Map("all" -> n), now)
     res
   }
 
@@ -1192,58 +1112,71 @@ final class CrawlPipeline(
 
   /** Drive `depth` generate->fetch->updatedb batches (reference:
     * Crawler.java:168-224 depth loop; T1 micro-batch trigger). Resumes
-    * from the commit log: completed stages of a crashed batch are reused,
-    * not re-run (T2 — the ZK step gate as commit-log reads).
+    * from the commit log (T2 — the ZK `{batch}/{step}` gate as commit-log
+    * reads): a committed (batch, stage) is never re-run; its output is
+    * read back from the table its commit names.
     */
   def runBatches(depth: Int, topN: Int, maxPerHost: Int,
       startTime: Long = 1700000000000L): Dataset[CrawlRow] = {
+    val committed = log.commits().map(c => (c.batchId, c.stage) -> c).toMap
     // the frontier VIEW is consumed by generate, updatedb's frontier
     // probe and merge, and hostdb — cache each view once instead of
-    // re-resolving base ∖ deltas per consumer. The returned view stays
-    // cached.
-    var frontier = (lastState() match {
-      case Some(c) => viewOf(c)
-      case None =>
-        inject(SyntheticWeb.seeds(webCfg), startTime)
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val committed = log.commits().map(c => (c.batchId, c.stage)).toSet
+    // re-resolving base ∖ deltas per consumer; the loop owns each cache
+    def cached(ds: Dataset[CrawlRow]) =
+      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // resume starts on the newest committed state, which every committed
+    // updatedb is already folded into
+    var frontier = cached(lastState().fold(
+      inject(SyntheticWeb.seeds(webCfg), startTime))(viewOf))
     for (i <- 1 to depth) {
       val batchId = s"b$i"
-      if (!committed((batchId, "updatedb"))) {
-        val now = startTime + i * 3600000L // 1h virtual tick per batch
-        // T2 step gate: a committed stage is never re-run — resume picks
-        // up the staged parquet exactly where the crash left off
-        val list =
-          if (committed((batchId, "generate")))
-            readFrontier(s"$root/batches/$batchId/fetchlist")
-          else generate(frontier, batchId, now, topN, maxPerHost)
-        // T2: empty step => skip remaining stages (exitValue=2 analog).
-        // The generate commit (this batch's, fresh or resumed) holds the
-        // fetchlist size observed on its write — no count job
-        if (log.lastOf("generate").exists(_.rowCount > 0)) {
-          val fetched =
-            if (committed((batchId, "fetch")))
-              readAs[FetchResult](s"$root/batches/$batchId/fetched")
-            else fetch(list, batchId, now)
-          val parsedRows =
-            if (committed((batchId, "parse")))
-              readAs[ParsedPage](s"$root/batches/$batchId/parsed")
-            else parse(fetched, batchId, now)
-          if (!committed((batchId, "payload"))) payloads(fetched, batchId, now)
-          val next = updatedb(frontier, parsedRows, batchId, now)
-          next.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val now = startTime + i * 3600000L // 1h virtual tick per batch
+      def step[T: Encoder](stage: String)(run: => Dataset[T]): Dataset[T] =
+        committed.get((batchId, stage))
+          .fold(run)(c => readAs[T](c.frontierPath))
+      val list = step("generate")(
+        generate(frontier, batchId, now, topN, maxPerHost))
+      // T2: empty step => skip remaining stages (exitValue=2 analog). The
+      // batch's generate commit holds the fetchlist size observed on its
+      // write — no count job
+      if (log.commits().exists(c => c.batchId == batchId &&
+          c.stage == "generate" && c.rowCount > 0)) {
+        val fetched = step("fetch")(fetch(list, batchId, now))
+        val parsed = step("parse")(parse(fetched, batchId, now))
+        step("payload")(payloads(fetched, batchId, now))
+        if (!committed.contains((batchId, "updatedb"))) {
+          val next = cached(updatedb(frontier, parsed, batchId, now))
           frontier.unpersist()
           frontier = next
-          hostdb(frontier, batchId, now, parsedRows)
         }
+        step("hostdb")(hostdb(frontier, batchId, now, parsed))
       }
     }
-    frontier
+    // the returned view resolves from parquet; no cache outlives the loop
+    frontier.unpersist()
   }
 }
 
 object CrawlPipeline {
+
+  /** The table a stage writes: it decides the path, the observation's
+    * fallback and what the commit records.
+    */
+  private[crawl] sealed trait Table
+  private[crawl] object Table {
+    /** A batch table at a fixed path (fetchlist, fetched, parsed,
+      * payload, hostdb); its commit names it.
+      */
+    final case class Batch(path: String) extends Table
+    /** A full frontier snapshot: its commit names it and starts a fresh
+      * delta and bloom chain.
+      */
+    case object Snapshot extends Table
+    /** A frontier delta over the state `base`: its commit keeps the base
+      * snapshot and extends the delta and bloom chains.
+      */
+    final case class Delta(base: Commit) extends Table
+  }
 
   /** Top-K host->host link histograms kept per hostdb row (reference
     * HostDbUpdateReducer.java:46-72). K bounds the row width — the

@@ -381,9 +381,7 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("updatedb frontier probe and merge plan with NO shuffle above the " +
     "frontier scan and no broadcast exchange") {
-    // read the base snapshot from FILES directly: runBatches leaves the
-    // merged view persisted, and frontierState()'s identical plan would
-    // cache-hit into InMemoryTableScan leaves — this test pins the
+    // read the base snapshot from FILES directly: this test pins the
     // cold-plan shape a 10^10-row frontier (never cacheable) would get.
     // Both pipelines: Opic adds the columnar existing-score step.
     val sc = spark.sparkContext
@@ -495,5 +493,42 @@ class CrawlParitySpec extends AnyFunSuite {
         .collect().map(r => (r.url, r.status, r.fetchTime, r.score)).toSet
     }
     assert(run(bloom = true) === run(bloom = false))
+  }
+
+  test("additionsAllowed=false: discoveries stay out, fetched seeds merge") {
+    // db.update.additions.allowed=false (D1): updatedb merges the fetched
+    // rows but adds none of the discovered ones. A 30-min interval makes
+    // batch 2 re-fetch the seeds, so both batches merge.
+    val cfg = webCfg.copy(numHosts = 4, pagesPerHost = 8)
+    val dir = Files.createTempDirectory("crawl-noadd").toString
+    val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
+      scheduleCfg = graft.core.ScheduleConfig(defaultIntervalSec = 1800),
+      additionsAllowed = false)
+    p.runBatches(2, 40, 8)
+    val commits = p.log.commits()
+    val injected = spark.read.parquet(
+      commits.find(_.stage == "inject").get.frontierPath).as[CrawlRow]
+      .collect().map(r => r.url -> r).toMap
+    assert(injected.keySet === SyntheticWeb.seeds(cfg).toSet)
+    val rows = p.frontierState().collect()
+    assert(rows.map(_.url).toSet === injected.keySet)
+    val fetches = commits.filter(_.stage == "fetch")
+    assert(fetches.map(_.rowCount > 0) === Seq(true, true),
+      "both batches must fetch")
+    val fetched = fetches.flatMap(c => spark.read.parquet(c.frontierPath)
+      .select("url").as[String].collect()).toSet
+    assert(fetched.nonEmpty)
+    rows.filter(r => fetched(r.url)).foreach { r =>
+      val seed = injected(r.url)
+      assert(r.status !== seed.status, s"status not merged for ${r.url}")
+      assert(r.fetchTime !== seed.fetchTime, s"fetchTime kept for ${r.url}")
+    }
+    val updates = commits.filter(_.stage == "updatedb")
+    assert(updates.size === 2)
+    updates.foreach { c =>
+      Seq("bloomMaybeSeenRate", "bloomFalsePositiveRate").foreach { k =>
+        assert(!c.metrics.contains(k), s"${c.batchId}: $k without a gate")
+      }
+    }
   }
 }
