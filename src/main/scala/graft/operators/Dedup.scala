@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.XxHash64
@@ -71,13 +72,11 @@ object Dedup {
   }
 
   /** MinHash+LSH near-dup pairs: band the signature (bands x rows = total
-    * hashes), bucket-join on (band index, band hash), verify candidates
-    * with exact shingle Jaccard >= threshold.
+    * hashes), pair documents sharing >= `minBandMatches` band keys through
+    * [[bandedPairs]], verify with exact shingle Jaccard >= threshold.
     *
-    * Scale shape: the banded self-join carries ONLY (band, bkey, doc_id) —
-    * never the shingle arrays (shipping them multiplied shuffle volume by
-    * the document size); candidate id-pairs are deduped first and the two
-    * shingle sets are joined back exactly once for the verify stage.
+    * Scale shape: the band self-join carries only (band, key, group id);
+    * the shingle sets are joined back once per candidate pair.
     */
   def minHashPairs(s: SparkSession, dir: String, numHashes: Int = 32,
       bands: Int = 8, shingleLen: Int = 3, threshold: Double = 0.5,
@@ -91,52 +90,38 @@ object Dedup {
     // (At production scale the cap would be a semi-join on an id sample,
     // not TakeOrdered — this form keeps the DuckDB oracle expressible.)
     val d0 = docs(s, dir).select(col("doc_id"), col("text"))
-    val d = (if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs)
-             else d0).cache()
+    val d = if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs) else d0
+    // band key: hash of each signature slice
+    def sliceKeys(sig: Column): Column =
+      transform(sequence(lit(0), lit(bands - 1)), b =>
+        xxhash64(b, slice(sig, b * rowsPerBand + lit(1),
+          lit(rowsPerBand)).cast("string")))
+    verifiedPairs(d.select(col("doc_id"), sigUdf(col("text")).as("sig"),
+      shUdf(col("text")).as("set")), sliceKeys, minBandMatches, threshold)
+  }
 
-    // Materialize the signature ONCE per row before banding: Spark
-    // evaluates higher-order-function lambda bodies per array element and
-    // does not hoist loop-invariant sub-expressions, so sigUdf inside the
-    // transform() lambda would run `bands` times per row (measured 12x
-    // stage cost at 32x1 banding).
-    val sig = d.withColumn("sig", sigUdf(col("text")))
-
-    // band key: hash of each signature slice, exploded to (doc, band, key)
-    val banded = sig.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-        xxhash64(b, slice(col("sig"), b * rowsPerBand + lit(1),
-          lit(rowsPerBand)).cast("string")))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-
-    val a = banded.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
-    val b = banded.select(col("band"), col("bkey"), col("doc_id").as("doc_b"))
-    // a pair may collide in many bands: the per-pair count both dedups
-    // and (minBandMatches > 1) gates on ESTIMATED similarity — with
-    // single-hash bands, requiring >= 2 of 32 matches keeps a j>=0.5
-    // pair with P(miss) ~ 33*2^-32 while pruning the singleton-collision
-    // mass that would otherwise dominate the verify join
-    val candidates = a.join(b, Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("matches"))
-      .filter(col("matches") >= minBandMatches)
-      .select(col("doc_a"), col("doc_b"))
-
-    // verify: re-join the shingle sets once per candidate pair; exact
-    // Jaccard as columnar array ops (codegen'd — the UDF form was the
-    // hot spot at high candidate volume), identical to jaccard() on the
-    // distinct shingle arrays
-    val sh = d.select(col("doc_id"), shUdf(col("text")).as("sh"))
-    candidates
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-        Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")),
-        Seq("doc_b"))
+  /** The MinHash pipeline behind [[minHashPairs]] and
+    * [[TextOps.jaccardPairs]]: `rows` holds (doc_id, sig, set, extraKeys).
+    * Candidates are the [[bandedPairs]] of the signatures; each is kept
+    * when the exact Jaccard of the two distinct-item `set` arrays, rounded
+    * to 4 places, reaches `threshold`. The sets are joined back by id once
+    * per candidate pair, so the band join never carries them. The Jaccard
+    * is columnar array ops (codegen'd; a UDF was the hot spot at high
+    * candidate volume), equal to [[jaccard]] on the same sets.
+    */
+  private[operators] def verifiedPairs(rows: DataFrame,
+      bandKeys: Column => Column, minMatches: Int, threshold: Double,
+      extraKeys: Seq[String] = Nil): DataFrame = {
+    def side(s: String) =
+      rows.select(col("doc_id").as("doc_" + s), col("set").as("set_" + s))
+    val (a, b) = (col("set_a"), col("set_b"))
+    bandedPairs(rows, "doc_id", "sig", bandKeys, minMatches, extraKeys)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      .join(side("a"), Seq("doc_a"))
+      .join(side("b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        round(
-          size(array_intersect(col("sh_a"), col("sh_b"))) /
-            size(array_union(col("sh_a"), col("sh_b"))).cast("double"),
-          4).as("jaccard"))
+        round(size(array_intersect(a, b)) /
+          size(array_union(a, b)).cast("double"), 4).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -176,105 +161,88 @@ object Dedup {
     out
   }
 
-  /** All (id_a < id_b) pairs whose 64-bit hashes lie within `maxHamming`
-    * Hamming bits, via 4x16-bit banding — with an EXACT-DUPLICATE
-    * PRE-PASS as the hot-bucket guard (round-7; guide §2.5 skew): only
-    * DISTINCT hashes enter the banded self-join, so a platform corpus
-    * with 10^6 identical logos/boilerplate pages contributes ONE banded
-    * row instead of an O(n^2) bucket in every band. Pairs among exact
-    * duplicates (hamming 0) and the member expansion of near-dup hash
-    * pairs are reconstructed with output-bounded joins afterwards —
-    * the result set is identical (band recall is a function of the hash
-    * pair alone, and every member of a hash group shares its hashes'
-    * bands).
+  /** The one candidate generator of every banded near-dup join: pairs of
+    * `rows` that agree on `extraKeys` (e.g. a frame index) and whose
+    * signatures share at least `minMatches` band keys. `bandKeys` maps the
+    * signature column to its array of band keys; band i's key only meets
+    * band i's.
     *
-    * `extraKeys` are additional alignment columns (e.g. a frame index)
-    * that must match for rows to pair; they ride the band keys and the
-    * expansion joins.
+    * 1. Exact-signature pre-pass (the hot-bucket guard): each row is named
+    *    by the smallest id with its (extraKeys, signature), and only one
+    *    row per name is banded. A page copied 10^6 times is one banded
+    *    row, not a 10^6-deep bucket in every band.
+    * 2. The band self-join on (extraKeys, band, key) carries the names
+    *    only; no payload column reaches its shuffle.
+    * 3. One pair rule: a name pair (a <= b) is kept once, when its
+    *    band-match count reaches `minMatches`. A name meets itself in
+    *    every band, so it pairs with itself at any `minMatches` up to the
+    *    band count: all pairs among identical signatures are candidates.
+    * 4. Name pairs expand to member pairs through two output-bounded
+    *    joins with the (name, id) table.
+    *
+    * Output: (extraKeys, id_a, id_b, sig_a, sig_b), one row per candidate
+    * member pair, `id_a < id_b`, `sig_x` the signature of `id_x`.
     */
-  private[operators] def bandedHammingPairs(hashes: DataFrame, idCol: String,
-      hCol: String, maxHamming: Int, extraKeys: Seq[String] = Nil)
-      : DataFrame = {
-    val keyCols = extraKeys.map(col)
-    // persisted: the guard consumes the hash table from five branches
-    // (distinct, both expansion sides, both intra sides) — without it the
-    // upstream hash computation (a simhash UDF or an image/frame decode)
-    // re-runs per branch. The cached row is (keys, h, id) — narrow at any
-    // corpus size, and always cheaper than recomputing payload decodes.
-    val members = hashes.select(
-      keyCols ++ Seq(col(hCol).as("h"), col(idCol).as("id")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the cache EAGERLY: AQE compiles the five consumer
-    // branches into concurrent stage-jobs (broadcast builds run as
-    // parallel jobs), and concurrent scans of a COLD cache each
-    // recompute its partitions — measured 6x the corpus decode per
-    // action on the video path. One tiny count serializes the fill;
-    // every branch then reads the cache.
-    members.count()
-    val distinctH = members.select(keyCols :+ col("h"): _*).distinct()
-    val banded = distinctH.select(
-      keyCols ++ Seq(col("h"), posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("h"), b * 16).bitwiseAND(lit(0xFFFFL))): _*))): _*)
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val a = banded.select(
-      keyCols ++ Seq(col("band"), col("bkey"), col("h").as("h_a")): _*)
-    val b = banded.select(
-      keyCols ++ Seq(col("band"), col("bkey"), col("h").as("h_b")): _*)
-    // a hash pair within hamming <= bands-1 collides in >= 1 of the 4
-    // bands; keep it exactly ONCE by keeping only its FIRST colliding
-    // band — a pure expression over (h_a, h_b), replacing the former
-    // dropDuplicates exchange (one fewer shuffle, same pair set: the
-    // first colliding band exists for every emitted row by construction)
-    def slice(c: org.apache.spark.sql.Column, bnd: Int) =
-      shiftrightunsigned(c, bnd * 16).bitwiseAND(lit(0xFFFFL))
-    val firstBand = (0 until 4).map { bp =>
-      when(col("band") > bp, slice(col("h_a"), bp) =!= slice(col("h_b"), bp))
-        .otherwise(lit(true))
-    }.reduce(_ && _)
-    val hashPairs = a.join(b, extraKeys ++ Seq("band", "bkey"))
-      .filter(col("h_a") < col("h_b"))
-      .filter(firstBand)
-      .select(keyCols ++ Seq(col("h_a"), col("h_b")): _*)
-      .withColumn("hamming",
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))))
-      .filter(col("hamming") <= maxHamming)
-    // member expansion: near-dup hash pairs (h_a < h_b) PLUS one
-    // (h, h, hamming=0) row per distinct hash — the latter expands to
-    // the intra (exact-duplicate) pairs through the SAME two joins, so
-    // the former separate members-self-join disappears. Singleton
-    // hashes only produce ia == ib rows, removed by the filter; a pair
-    // cannot surface through both arms (its unordered hash pair is
-    // either equal or not), so no dedup is needed — exactly the former
-    // inter/intra union.
-    val pairsAll = hashPairs.unionByName(distinctH.select(
-      keyCols ++ Seq(col("h").as("h_a"), col("h").as("h_b"),
-        lit(0).as("hamming")): _*))
-    pairsAll
-      .join(members.select(
-        keyCols ++ Seq(col("h").as("h_a"), col("id").as("ia")): _*),
-        extraKeys :+ "h_a")
-      .join(members.select(
-        keyCols ++ Seq(col("h").as("h_b"), col("id").as("ib")): _*),
-        extraKeys :+ "h_b")
-      .filter(col("h_a") =!= col("h_b") || col("ia") < col("ib"))
-      .select(Seq(least(col("ia"), col("ib")).as("id_a"),
+  private[operators] def bandedPairs(rows: DataFrame, id: String, sig: String,
+      bandKeys: Column => Column, minMatches: Int,
+      extraKeys: Seq[String] = Nil): DataFrame = {
+    val keys = extraKeys.map(col)
+    val members = rows
+      .select(keys ++ Seq(col(id).as("id"), col(sig).as("sig")): _*)
+      .withColumn("sid",
+        min(col("id")).over(Window.partitionBy(keys :+ col("sig"): _*)))
+    // _outer: posexplode would add a `size(sig) > 0` filter, pushed below
+    // the window, so the band and expansion branches would plan `members`
+    // apart (two exchanges, the signature work twice)
+    val banded = members.filter(col("id") === col("sid")).select(
+      keys ++ Seq(col("sid"),
+        posexplode_outer(bandKeys(col("sig"))).as(Seq("band", "bkey"))): _*)
+    val sigPairs = banded.as("a")
+      .join(banded.as("b"), extraKeys ++ Seq("band", "bkey"))
+      .filter(col("a.sid") <= col("b.sid"))
+      .groupBy(keys ++ Seq(col("a.sid").as("sid_a"), col("b.sid").as("sid_b")): _*)
+      .agg(count(lit(1)).as("matches"))
+      .filter(col("matches") >= minMatches)
+    // one (name, id, sig) table serves both expansion joins
+    def expand(pairs: DataFrame, s: String): DataFrame =
+      pairs.withColumnRenamed("sid_" + s, "sid").join(members, extraKeys :+ "sid")
+        .withColumnRenamed("sid", "sid_" + s)
+        .withColumnRenamed("id", "i" + s).withColumnRenamed("sig", "g" + s)
+    val swap = col("ia") > col("ib")
+    expand(expand(sigPairs, "a"), "b")
+      .filter(col("sid_a") =!= col("sid_b") || col("ia") < col("ib"))
+      .select(keys ++ Seq(
+        least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"),
-        col("hamming")) ++ keyCols: _*)
+        when(swap, col("gb")).otherwise(col("ga")).as("sig_a"),
+        when(swap, col("ga")).otherwise(col("gb")).as("sig_b")): _*)
   }
 
-  /** SimHash near-dup pairs: 4 bands of 16 bits as bucket keys (any pair
-    * within Hamming distance <= 3 of a 64-bit hash shares at least one of
-    * 4 bands by pigeonhole... for distance <= 3 across 4 bands), verified
-    * with bit_count(xor) <= maxHamming. Banding runs over distinct
-    * hashes via [[bandedHammingPairs]] (hot-bucket guard).
+  /** Band keys of a 64-bit hash for Hamming search: its four 16-bit
+    * slices. Two hashes within 3 bits agree on at least one slice
+    * (pigeonhole: 3 differing bits touch at most 3 of the 4 slices), so
+    * banded recall is exact up to distance 3.
+    */
+  private[operators] def hammingBands(h: Column): Column =
+    array((0 until 4).map(b =>
+      shiftrightunsigned(h, b * 16).bitwiseAND(lit(0xFFFFL))): _*)
+
+  /** Hamming distance of a [[bandedPairs]] row's two hashes. */
+  private[operators] val hamming: Column =
+    bit_count(col("sig_a").bitwiseXOR(col("sig_b")))
+
+  /** SimHash near-dup pairs: 4 bands of 16 bits as bucket keys
+    * ([[hammingBands]]: recall is exact for distance <= 3), verified with
+    * bit_count(xor) <= maxHamming.
     */
   def simHashPairs(s: SparkSession, dir: String, maxHamming: Int = 3)
       : DataFrame = {
     val shUdf = udf(simHash _)
     val d = docs(s, dir).select(col("doc_id"), shUdf(col("text")).as("sh"))
-    bandedHammingPairs(d, "doc_id", "sh", maxHamming)
+    bandedPairs(d, "doc_id", "sh", hammingBands, 1)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        col("hamming"))
+        hamming.as("hamming"))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** Connected components over an undirected edge list by alternating

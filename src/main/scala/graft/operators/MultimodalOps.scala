@@ -327,10 +327,9 @@ object MultimodalOps {
     *
     * 100 TB shape: the only shuffle keys are (band, 16-bit value) — pair
     * work is bounded by bucket occupancy exactly like the simhash text
-    * path; byte payloads never shuffle. EXACT duplicates all share every
-    * band — a platform-scale corpus with millions of identical logos
-    * should exact-dedup on full phash (or content digest) first, same
-    * hot-bucket caveat as simHashPairs.
+    * path; byte payloads never shuffle. Exact duplicates (millions of
+    * identical logos) are banded once per distinct hash by
+    * [[Dedup.bandedPairs]].
     */
   def imagePhashDup(media: Dataset[MediaRow], maxHamming: Int = 10)
       : DataFrame = {
@@ -338,11 +337,9 @@ object MultimodalOps {
     val hashes = media.filter(_.kind == "image").mapPartitions { rows =>
       rows.map(r => (r.media_id, ImageCodec.phashOfBytes(r.bytes)))
     }.toDF("media_id", "ph")
-    // round-7 hot-bucket guard: banding over DISTINCT hashes (exact-dup
-    // pre-pass + output-bounded member expansion, Dedup.bandedHammingPairs)
-    // — the uncapped-bucket caveat under exact-duplicate skew is closed
-    Dedup.bandedHammingPairs(hashes, "media_id", "ph", maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+    Dedup.bandedPairs(hashes, "media_id", "ph", Dedup.hammingBands, 1)
+      .select(col("id_a"), col("id_b"), Dedup.hamming.as("hamming"))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** Driver-facing query: planted near-dup pairs recovered from real
@@ -407,18 +404,17 @@ object MultimodalOps {
     *
     * 100 TB shape: shuffles carry (video_id, frame_idx, hash, band)
     * rows only — never AVI payloads; candidate pair mass is bounded by
-    * band-bucket occupancy exactly like the image/simhash paths, and
-    * the majority verify is one groupBy over the candidates' matched
-    * frames (a frame pair can match in several bands — dropDuplicates
-    * before counting, or a video with B band-collisions per frame would
-    * count one frame B times toward the majority).
+    * band-bucket occupancy exactly like the image/simhash paths.
+    * [[Dedup.bandedPairs]] returns each frame pair once, however many
+    * bands it collides in, so the majority verify is one groupBy over the
+    * matched frames.
     */
   def videoPhashDup(media: Dataset[MediaRow], maxHamming: Int = 10)
       : DataFrame = {
     import media.sparkSession.implicits._
-    // persisted: `frames` (demux + per-frame decode + phash — the
-    // expensive narrow pass) feeds BOTH the banded pair join and the
-    // nFrames majority denominator; without the cache the second
+    // persisted, the path's one cache: `frames` (demux + per-frame decode
+    // + phash — the expensive narrow pass) feeds BOTH the banded pair join
+    // and the nFrames majority denominator; without the cache the second
     // consumer re-renders/demuxes/decodes the whole corpus. Narrow
     // (vid, frame_idx, hash) rows — payload bytes are never cached.
     val frames = media.filter(_.kind == "video").flatMap { r =>
@@ -429,15 +425,12 @@ object MultimodalOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nFrames = frames.groupBy(col("vid"))
       .agg(count(lit(1)).as("n_frames"))
-    // round-7 hot-bucket guard: banding over DISTINCT (frame_idx, hash)
-    // rows — identical frame-aligned pair set, but an exact-duplicate
-    // clip family contributes one banded row per frame position instead
-    // of an O(n^2) bucket (Dedup.bandedHammingPairs with frame_idx as
-    // the alignment key)
-    val matched = Dedup.bandedHammingPairs(frames, "vid", "ph", maxHamming,
+    // frame-aligned: frame_idx rides the band keys and the expansion, so an
+    // exact-duplicate clip family is one banded row per frame position
+    Dedup.bandedPairs(frames, "vid", "ph", Dedup.hammingBands, 1,
       extraKeys = Seq("frame_idx"))
-      .select(col("id_a"), col("id_b"), col("frame_idx"), col("hamming"))
-    matched.groupBy(col("id_a"), col("id_b"))
+      .filter(Dedup.hamming <= maxHamming)
+      .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_matched"))
       .join(nFrames.withColumnRenamed("vid", "id_a")
         .withColumnRenamed("n_frames", "nf_a"), Seq("id_a"))

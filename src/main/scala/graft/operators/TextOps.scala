@@ -63,8 +63,9 @@ object TextOps {
     * alone — a FIXED-cardinality key, so per-block pair counts grew
     * quadratically with the corpus. Now the block is
     * (source, band, band-key): `numBands` single-hash MinHash bands over
-    * the distinct-token set, gated on >= `minBandMatches` collisions, then
-    * exact columnar Jaccard verification at `threshold`.
+    * the distinct-token set, gated on >= `minBandMatches` collisions
+    * ([[Dedup.bandedPairs]]), then exact columnar Jaccard verification at
+    * `threshold`.
     *
     * Recall bound (what keeps the DuckDB brute-force oracle valid): a pair
     * at j >= 0.2 fails the 2-of-96 gate with
@@ -79,49 +80,22 @@ object TextOps {
     * itself quadratic on a shared-vocabulary corpus, so the benchmark
     * fixes its input size rather than riding corpus growth.
     */
-  /** Candidate stage of [[jaccardPairs]], exposed for the bounded-candidate
-    * spec: `d` must carry (doc_id, source, toks). Returns (doc_a, doc_b)
-    * pairs sharing a source and >= `minBandMatches` MinHash band keys.
-    */
-  private[operators] def jaccardCandidates(d: DataFrame, numBands: Int,
-      minBandMatches: Int): DataFrame = {
-    val sigUdf = udf((toks: Seq[String]) =>
-      Dedup.minHashOfSet(toks.toIndexedSeq, numBands))
-    // signature materialized once per row (not inside a per-band lambda)
-    val banded = d.withColumn("sig", sigUdf(col("toks")))
-      .select(col("doc_id"), col("source"), posexplode(col("sig")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    val a = banded.select(col("source"), col("band"), col("bkey"),
-      col("doc_id").as("doc_a"))
-    val b = banded.select(col("source"), col("band"), col("bkey"),
-      col("doc_id").as("doc_b"))
-    a.join(b, Seq("source", "band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("matches"))
-      .filter(col("matches") >= minBandMatches)
-      .select(col("doc_a"), col("doc_b"))
-  }
-
   def jaccardPairs(s: SparkSession, dir: String, numBands: Int = 96,
       minBandMatches: Int = 2, threshold: Double = 0.2,
       capDocs: Int = 0): DataFrame = {
     val d0 = docs(s, dir).select(col("doc_id"), col("source"),
       array_distinct(tokensCol(col("text"))).as("toks"))
-    val d = (if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs)
-             else d0).cache()
-    jaccardCandidates(d, numBands, minBandMatches)
-      .join(d.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
-        Seq("doc_a"))
-      .join(d.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(
-          size(array_intersect(col("toks_a"), col("toks_b"))) /
-            size(array_union(col("toks_a"), col("toks_b"))).cast("double"),
-          4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val d = if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs) else d0
+    // each single-hash band's key is its signature element
+    Dedup.verifiedPairs(d.select(col("doc_id"), col("source"),
+      tokenSignature(col("toks"), numBands).as("sig"), col("toks").as("set")),
+      identity, minBandMatches, threshold, Seq("source"))
   }
+
+  /** MinHash signature of a token-set column. */
+  private[operators] def tokenSignature(toks: Column, numHashes: Int): Column =
+    udf((t: Seq[String]) => Dedup.minHashOfSet(t.toIndexedSeq, numHashes))
+      .apply(toks)
 
   /** Exact dedup by content signature (D3: MD5 signature, reference
     * crawl/MD5Signature.java:32-50): group identical texts, keep the

@@ -68,7 +68,11 @@ class OperatorsSpec extends AnyFunSuite {
     val fixture = spark.range(n).map { i =>
       (i, "s0", (0 until 8).map(k => s"w${i}x$k"))
     }.toDF("doc_id", "source", "toks")
-    val cand = TextOps.jaccardCandidates(fixture, 96, 2).count()
+    // the candidate stage of q_jaccard_pairs: 96 single-hash bands over
+    // the token set, gated on 2 matches within a source
+    val cand = Dedup.bandedPairs(
+      fixture.withColumn("sig", TextOps.tokenSignature(col("toks"), 96)),
+      "doc_id", "sig", identity, 2, Seq("source")).count()
     assert(cand <= n / 10, s"candidate explosion on disjoint docs: $cand")
 
     // correctness: banded output == brute-force within-source pairs
