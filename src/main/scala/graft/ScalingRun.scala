@@ -69,8 +69,6 @@ object ScalingRun {
       .flatMap(_.metrics.get("compactWallMs")).sum / 1000.0
     val generateWall = commits.filter(_.stage == "generate")
       .flatMap(_.metrics.get("generateWallMs")).sum / 1000.0
-    val bloomWall = commits
-      .flatMap(_.metrics.get("bloomWallMs")).sum / 1000.0
     // stdout contract with Bench: exactly one line starting with RESULT
     println(s"""RESULT{"fetched":$fetched,"fetchWallSec":$fetchWall,""" +
       s""""mergeWallSec":$mergeWall,""" +
@@ -78,8 +76,7 @@ object ScalingRun {
       s""""steadyFetchWallSec":${steady.metrics("fetchWallMs") / 1000.0},""" +
       s""""steadyMergeWallSec":${steadyMerge / 1000.0},""" +
       s""""compactWallSec":$compactWall,""" +
-      s""""generateWallSec":$generateWall,""" +
-      s""""bloomWallSec":$bloomWall}""")
+      s""""generateWallSec":$generateWall}""")
     spark.stop()
     // best-effort cleanup of the working tree (tmpfs space is shared)
     def rm(f: java.io.File): Unit = {

@@ -3,6 +3,7 @@ package graft.crawl
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.annotation.JsonIgnoreProperties
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
@@ -20,7 +21,11 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * commit names, continue from the last committed frontier state (north
   * rule: resumes exactly from checkpoint with per-partition lineage +
   * metrics).
+  *
+  * Logs written before the URL-seen bloom sidecars were retired carry a
+  * `bloomPaths` field; it is ignored on read, so those roots still resume.
   */
+@JsonIgnoreProperties(Array("bloomPaths"))
 final case class Commit(
     seq: Long,
     batchId: String,
@@ -35,16 +40,8 @@ final case class Commit(
     // merge-on-read lineage (Iceberg MoR contract): the frontier state is
     // base ∖ delta-keys ∪ deltas (latest delta wins per key). Empty for
     // full snapshots; bounded by the compaction interval otherwise.
-    deltaPaths: Seq[String] = Nil,
-    // URL-seen bloom sidecars (per-bucket filters as (bucket, bytes)
-    // parquet): the chain of bloom files covering every key in this
-    // state. Maintained INCREMENTALLY — inject writes the first file,
-    // each updatedb appends a delta-sized file for its new rows, and
-    // compaction rebuilds a single fresh file — so no stage ever
-    // re-scans the full frontier just to build filters.
-    bloomPaths: Seq[String] = Nil) {
+    deltaPaths: Seq[String] = Nil) {
   def deltas: Seq[String] = Option(deltaPaths).getOrElse(Nil)
-  def blooms: Seq[String] = Option(bloomPaths).getOrElse(Nil)
 }
 
 final class CommitLog(root: String) {

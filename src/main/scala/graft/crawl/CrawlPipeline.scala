@@ -92,7 +92,6 @@ final class CrawlPipeline(
     scheduleCfg: ScheduleConfig = ScheduleConfig(),
     maxDepth: Int = 3,
     additionsAllowed: Boolean = true,
-    useBloomSeenFilter: Boolean = true,
     configs: graft.core.ConfigTrie = graft.core.ConfigTrie.empty,
     queueMode: String = QueueMode.ByHost,
     fetchTimelimitMs: Long = -1L,
@@ -175,8 +174,7 @@ final class CrawlPipeline(
     * assigns the commit's seq and the table's path, writes `rows` there
     * with `write`, and observes a row count plus the stage's `observed`
     * figures on that write itself: no stage re-scans the bytes it just
-    * wrote only to count them. A frontier table then gets its bloom
-    * generation ([[writeBlooms]]). `metrics` turns the observation and the
+    * wrote only to count them. `metrics` turns the observation and the
     * write's wall time into the commit's stage metrics. Returns the table
     * it wrote. The name holds no stage name, so per-stage tracing charges
     * its Spark jobs to the calling stage.
@@ -223,30 +221,15 @@ final class CrawlPipeline(
     val n = counts.values.sum
     val written = Commit(seq, batchId, stage, "complete", path, n, counts,
       metrics(seen, wallMs), now)
-    // URL-seen sidecars ride every frontier table: a snapshot starts a
-    // fresh bloom chain, a delta appends a delta-sized generation. Timed
-    // apart from the stage's own work (`bloomWallMs`); none when the
-    // seen-filter is off, since nothing would read them.
-    def withBlooms(c: Commit, chain: Seq[String]): Commit = {
-      val tB = System.nanoTime()
-      val bloom =
-        if (useBloomSeenFilter)
-          Seq(writeBlooms(readFrontier(path), s"$root/blooms/$seq", n))
-        else Nil
-      c.copy(bloomPaths = chain ++ bloom, metrics = c.metrics +
-        ("bloomWallMs" -> (System.nanoTime() - tB) / 1e6))
-    }
     val commit = table match {
-      case Table.Batch(_) => written
-      case Table.Snapshot => withBlooms(written, Nil)
       // lineage counts for a delta commit describe the DELTA files;
-      // rowCount upper-bounds the logical state (touched rows count
-      // twice) — its only consumer is bloom sizing, where an over-estimate
-      // just lowers the fpp
+      // rowCount is base + delta rows, an upper bound on the logical state
+      // (a touched row counts twice) — ReadApi's /batches and perfbench
+      // read it as the stage's row figure
       case Table.Delta(base) =>
-        withBlooms(written.copy(frontierPath = base.frontierPath,
-          rowCount = base.rowCount + n, deltaPaths = base.deltas :+ path),
-          base.blooms)
+        written.copy(frontierPath = base.frontierPath,
+          rowCount = base.rowCount + n, deltaPaths = base.deltas :+ path)
+      case _ => written
     }
     log.append(commit)
     readAs[T](path)
@@ -289,9 +272,9 @@ final class CrawlPipeline(
   def readFrontier(path: String): Dataset[CrawlRow] = readAs[CrawlRow](path)
 
   /** Read a staged table (frontier snapshot or delta, fetchlist, fetched,
-    * parsed, payload, hostdb, bloom sidecar) with the schema its writer
-    * used. A schema-less read would run a one-task footer-inference job
-    * per table per read.
+    * parsed, payload, hostdb) with the schema its writer used. A
+    * schema-less read would run a one-task footer-inference job per table
+    * per read.
     */
   private def readAs[T: Encoder](path: String): Dataset[T] =
     spark.read.schema(implicitly[Encoder[T]].schema).parquet(path).as[T]
@@ -451,44 +434,6 @@ final class CrawlPipeline(
     runStage[CrawlRow](batchId, stage, now, Table.Snapshot, rows,
       bucketCounts)(write, (_, _) => metrics(major))
     latest.unpersist()
-  }
-
-  /** Build per-bucket URL-seen bloom filters over `rows` and persist
-    * them as a (bucket, bytes) parquet sidecar. Built DISTRIBUTED (each
-    * task folds its slice into local filters; a bucket may yield several
-    * partial filters — membership is exists(_), exactness never depends
-    * on them). `expectedKeys` sizes the filters; an under-estimate only
-    * raises the false-positive rate, which just sends more keys through
-    * the exact probe. Maintained INCREMENTALLY: inject writes the first
-    * generation, each batch appends a delta-sized one, compaction
-    * rebuilds one — so no batch re-scans the frontier to build filters.
-    */
-  private def writeBlooms(rows: Dataset[CrawlRow], path: String,
-      expectedKeys: Long): String = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val perBucketExpected =
-      math.max(64L, 2L * expectedKeys / math.max(1, numBuckets))
-    rows.select(col("bucket"), col("urlHash")).as[(Int, Long)]
-      .mapPartitions { it =>
-        val fs = scala.collection.mutable.Map[Int, BloomFilter]()
-        it.foreach { case (b, h) =>
-          fs.getOrElseUpdate(b,
-            BloomFilter.create(perBucketExpected, 0.03)).putLong(h)
-        }
-        fs.iterator.map { case (b, f) =>
-          val bos = new java.io.ByteArrayOutputStream()
-          f.writeTo(bos)
-          BloomPart(b, bos.toByteArray)
-        }
-      }
-      // repartition (NOT coalesce): a coalesce(1) here is a narrow
-      // dependency that would collapse the whole scan+fold into ONE task
-      // holding every bucket's filter; the shuffle barrier keeps the fold
-      // distributed and only the small serialized filters move to the
-      // single writer task
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    path
   }
 
   // -------------------------------------------------------------- generate
@@ -835,10 +780,9 @@ final class CrawlPipeline(
     * the 10^10-row frontier never shuffles (the reference needed a full
     * partition/sort/group pass per updatedb, UrlWithScore.java:124-195).
     *
-    * D1 URL-seen set: the bloom sidecars (see [[writeBlooms]]) only
-    * narrow the exact probe's key set to the maybe-seen discoveries; new
-    * rows are the discoveries the probe finds absent. The commit records
-    * the gate's maybe-seen and false-positive rates.
+    * D1 URL-seen set: the frontier's keys themselves. One exact probe
+    * ([[presentKeys]]) collects which discovered keys the frontier already
+    * holds; new rows are the discoveries it finds absent.
     */
   def updatedb(frontier: Dataset[CrawlRow], parsed: Dataset[ParsedPage],
       batchId: String, now: Long): Dataset[CrawlRow] = {
@@ -905,42 +849,24 @@ final class CrawlPipeline(
         col("refreshTime"))
       .as[Outcome].collect()
     val disc = discAgg
-      .select(col("urlHash"), col("bucket"), col("distance"), col("contrib"))
-      .as[(Long, Int, Int, Float)].collect()
+      .select(col("urlHash"), col("distance"), col("contrib"))
+      .as[(Long, Int, Float)].collect()
     val sctx = spark.sparkContext
     val side = sctx.broadcast(BatchSide(
       outcomes.iterator.map(o => o.urlHash -> o).toMap,
-      disc.iterator.map(d => d._1 -> ((d._3, d._4))).toMap))
+      disc.iterator.map(d => d._1 -> ((d._2, d._3))).toMap))
 
-    // the keys the exact probe checks: every discovered key, or only the
-    // bloom gate's maybe-seen ones
-    val prev = lastState()
-    val bloomChain = prev.map(_.blooms).getOrElse(Nil)
-    val gated = additionsAllowed && useBloomSeenFilter &&
-      bloomChain.nonEmpty && disc.nonEmpty
-    val maybeSeen: Set[Long] =
-      if (gated) bloomMaybeSeen(bloomChain,
-        disc.groupBy(_._2).map { case (b, ds) => b -> ds.map(_._1) })
-      else if (additionsAllowed) disc.iterator.map(_._1).toSet
-      else Set.empty
-    val probe = sctx.broadcast(maybeSeen)
+    // the discovered keys the frontier already holds; none are needed
+    // when no discovery can become a row
     val present = sctx.broadcast(
-      if (maybeSeen.isEmpty) Set.empty[Long]
-      else presentKeys(frontier, probe).collect().toSet)
-    val bloomMetrics =
-      if (!gated) Map.empty[String, Double]
-      else {
-        val negatives = disc.length - present.value.size
-        Map("bloomMaybeSeenRate" -> maybeSeen.size.toDouble / disc.length,
-          "bloomFalsePositiveRate" ->
-            (if (negatives == 0) 0.0
-            else (maybeSeen.size - present.value.size).toDouble / negatives))
-      }
+      if (!additionsAllowed || disc.isEmpty) Set.empty[Long]
+      else presentKeys(frontier, side).collect().toSet)
 
+    val seen = udf((h: Long) => present.value.contains(h))
     val newRows =
       if (!additionsAllowed) spark.emptyDataset[CrawlRow]
       else discAgg
-        .filter(!keyIn(present)(col("urlHash")) &&
+        .filter(!seen(col("urlHash")) &&
           col("distance") <= lit(depthCap))
         .map { d =>
           // F4: per-site custom score/interval for newly discovered rows
@@ -962,12 +888,10 @@ final class CrawlPipeline(
     // bottleneck (0.60 efficiency); here the per-batch merge cost is
     // O(delta) and the full-width exchange is amortized over the chain.
     val delta = mergeTouched(frontier, side, now).union(newRows)
-    def merged() =
-      bloomMetrics + ("mergeWallMs" -> (System.nanoTime() - t0) / 1e6)
+    val prev = lastState()
+    def merged() = Map("mergeWallMs" -> (System.nanoTime() - t0) / 1e6)
     prev.filter(_.deltas.size < compactEvery - 1) match {
       case Some(base) =>
-        // the delta's bloom generation re-adds the changed rows'
-        // already-seen keys: a harmless superset
         runStage[CrawlRow](batchId, "updatedb", now, Table.Delta(base),
           delta, bucketCounts)(
           _.repartition(math.max(1, numBuckets / 8), col("bucket"))
@@ -982,43 +906,20 @@ final class CrawlPipeline(
         }
     }
     discAgg.unpersist()
-    Seq(side, probe, present).foreach(_.destroy())
+    Seq(side, present).foreach(_.destroy())
     frontierState()
   }
 
-  /** The D1 bloom gate: one narrow pass over the sidecar `chain` probes
-    * each filter with its bucket's keys and collects the maybe-seen ones.
-    * A key lives in >= 1 generation, so a key it drops is not a frontier
-    * key; the chain's unioned fpp (~0.03 * chain) only widens the output.
-    */
-  private def bloomMaybeSeen(chain: Seq[String],
-      keysByBucket: Map[Int, Array[Long]]): Set[Long] = {
-    val keys = spark.sparkContext.broadcast(keysByBucket)
-    try chain.map(readAs[BloomPart]).reduce(_ union _)
-      .flatMap { p =>
-        keys.value.get(p.bucket).fold(Iterator.empty[Long]) { ks =>
-          val f = org.apache.spark.util.sketch.BloomFilter
-            .readFrom(new java.io.ByteArrayInputStream(p.bytes))
-          ks.iterator.filter(f.mightContain)
-        }
-      }
-      .collect().toSet
-    finally keys.destroy()
-  }
-
-  /** A filter predicate: the key column is in the broadcast key set. */
-  private def keyIn(keys: Broadcast[Set[Long]]): Column => Column = {
-    val f = udf((h: Long) => keys.value.contains(h))
-    c => f(c)
-  }
-
-  /** The exact D1 seen-check: which of the broadcast `keys` are frontier
-    * keys, by a membership filter over the scan (plan spec-pinned).
+  /** The exact D1 seen-check: which of the batch side's discovered keys
+    * are frontier keys, by a membership filter over the scan (plan
+    * spec-pinned).
     */
   private[crawl] def presentKeys(frontier: Dataset[CrawlRow],
-      keys: Broadcast[Set[Long]]): Dataset[Long] =
-    frontier.select(col("urlHash")).filter(keyIn(keys)(col("urlHash")))
+      side: Broadcast[BatchSide]): Dataset[Long] = {
+    val discovered = udf((h: Long) => side.value.disc.contains(h))
+    frontier.select(col("urlHash")).filter(discovered(col("urlHash")))
       .as[Long]
+  }
 
   /** The touched frontier rows (fetched or rediscovered this batch),
     * selected by a membership filter over the scan (plan spec-pinned) and
@@ -1169,11 +1070,11 @@ object CrawlPipeline {
       */
     final case class Batch(path: String) extends Table
     /** A full frontier snapshot: its commit names it and starts a fresh
-      * delta and bloom chain.
+      * delta chain.
       */
     case object Snapshot extends Table
     /** A frontier delta over the state `base`: its commit keeps the base
-      * snapshot and extends the delta and bloom chains.
+      * snapshot and extends the delta chain.
       */
     final case class Delta(base: Commit) extends Table
   }

@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Export sink (S8 — reference exporter/DbExporter.java:21-165,
@@ -10,21 +10,20 @@ import org.apache.spark.sql.functions._
   * Spark-native form: the "extracted fields" map pivots into real columns;
   * `exportJdbc` writes through `df.write.jdbc` against a LIVE database,
   * ALTERing the target table for columns it doesn't have yet (round-trip
-  * tested against an embedded DuckDB over its JDBC driver); parquet with
-  * schema-merge is the no-database alternative.
+  * tested against an embedded DuckDB over its JDBC driver).
   */
 object Exporter {
 
-  /** Pivot a (id, map<string,string>) segment table into a wide table with
-    * one column per field key — dynamic schema like the reference's
-    * TableMeta ALTER flow.
-    */
   /** Distinct field names become columns — bounded by construction (they
     * are extraction-rule outputs, not data), but guard against a corrupt
     * input exploding the driver collect / the output schema.
     */
   val MaxWidenColumns = 10000
 
+  /** Pivot a (id, map<string,string>) segment table into a wide table with
+    * one column per field key — dynamic schema like the reference's
+    * TableMeta ALTER flow.
+    */
   def widen(segments: DataFrame, idCol: String, mapCol: String): DataFrame = {
     val keys = segments
       .select(explode(map_keys(col(mapCol))).as("k"))
@@ -35,29 +34,6 @@ object Exporter {
         "field names look like data, not extraction-rule outputs")
     segments.select(
       col(idCol) +: keys.map(k => col(mapCol).getItem(k).as(k)): _*)
-  }
-
-  /** Export a crawl batch: frontier rows joined with their payload rows,
-    * written as one wide parquet table per batch (mergeSchema on read
-    * gives the accumulated auto-ALTERed view).
-    */
-  def exportBatch(spark: SparkSession, root: String, batchId: String,
-      outDir: String): DataFrame = {
-    val fetched = spark.read.parquet(s"$root/batches/$batchId/fetched")
-    val payloadPath = new java.io.File(s"$root/batches/$batchId/payload")
-    val base = fetched.select(col("urlHash"), col("url"), col("host"),
-      col("outcome"), col("contentType"), col("fetchStart"), col("fetchEnd"),
-      col("batchId"))
-    val wide =
-      if (payloadPath.exists()) {
-        val payload = spark.read.parquet(payloadPath.getPath)
-          .select(col("urlHash"), col("w"), col("h"), col("fmt"),
-            col("caption"), col("phash"))
-        base.join(payload, Seq("urlHash"), "left")
-      } else base
-    wide.write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/batch_id=$batchId")
-    spark.read.option("mergeSchema", "true").parquet(outDir)
   }
 
   private def jdbcTypeOf(dt: org.apache.spark.sql.types.DataType): String =

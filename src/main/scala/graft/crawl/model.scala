@@ -189,8 +189,3 @@ object Keys {
       crawlType = 7)
   }
 }
-
-/** One serialized filter of a URL-seen bloom sidecar generation. A bucket
-  * may have several (one per building task); membership is exists(_).
-  */
-final case class BloomPart(bucket: Int, bytes: Array[Byte])

@@ -412,28 +412,27 @@ object MultimodalOps {
   def videoPhashDup(media: Dataset[MediaRow], maxHamming: Int = 10)
       : DataFrame = {
     import media.sparkSession.implicits._
-    // persisted, the path's one cache: `frames` (demux + per-frame decode
-    // + phash — the expensive narrow pass) feeds BOTH the banded pair join
-    // and the nFrames majority denominator; without the cache the second
-    // consumer re-renders/demuxes/decodes the whole corpus. Narrow
-    // (vid, frame_idx, hash) rows — payload bytes are never cached.
+    // each frame row carries its clip's frame count in the signature, so
+    // the majority verify needs no second pass over the decoded frames:
+    // demux + per-frame decode + phash run once, uncached
     val frames = media.filter(_.kind == "video").flatMap { r =>
-      MediaCodec.parseAviFrames(r.bytes).zipWithIndex.map {
-        case (fb, idx) => (r.media_id, idx, ImageCodec.phashOfBytes(fb))
+      val fs = MediaCodec.parseAviFrames(r.bytes)
+      val nf = fs.length
+      fs.zipWithIndex.map {
+        case (fb, idx) => (r.media_id, idx, ImageCodec.phashOfBytes(fb), nf)
       }
-    }.toDF("vid", "frame_idx", "ph")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nFrames = frames.groupBy(col("vid"))
-      .agg(count(lit(1)).as("n_frames"))
+    }.toDF("vid", "frame_idx", "ph", "nf")
+      .select(col("vid"), col("frame_idx"),
+        struct(col("ph"), col("nf")).as("sig"))
     // frame-aligned: frame_idx rides the band keys and the expansion, so an
     // exact-duplicate clip family is one banded row per frame position
-    Dedup.bandedPairs(frames, "vid", "ph", Dedup.hammingBands, 1,
+    Dedup.bandedPairs(frames, "vid", "sig",
+      c => Dedup.hammingBands(c.getField("ph")), 1,
       extraKeys = Seq("frame_idx"))
-      .filter(Dedup.hamming <= maxHamming)
-      .groupBy(col("id_a"), col("id_b"))
+      .filter(bit_count(col("sig_a.ph").bitwiseXOR(col("sig_b.ph"))) <=
+        maxHamming)
+      .groupBy(col("id_a"), col("id_b"), col("sig_a.nf").as("nf_a"))
       .agg(count(lit(1)).as("n_matched"))
-      .join(nFrames.withColumnRenamed("vid", "id_a")
-        .withColumnRenamed("n_frames", "nf_a"), Seq("id_a"))
       .filter(col("n_matched") * 2 > col("nf_a"))
       .select(col("id_a"), col("id_b"))
   }

@@ -128,7 +128,8 @@ object RelationalOps {
 
   /** D1: URL-seen anti-join (new-outlink discovery against frontier keys;
     * the reference gets this implicitly from HBase upsert, S4). left_anti
-    * is the exactness path behind the bloom fast-path.
+    * is the exact seen-check as a join; the crawl's updatedb runs the same
+    * check as a broadcast key-membership filter over the frontier scan.
     */
   def seenAntiJoin(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer")

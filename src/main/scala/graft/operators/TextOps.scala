@@ -301,6 +301,10 @@ object TextOps {
     * sequence — Spark's sequence(0,-1) counts DOWN, so empty docs need
     * the when() guard) + one hash-partitioned count-distinct shuffle:
     * the scan side is narrow at any corpus size.
+    *
+    * Precondition: `documents` holds exactly one row per `doc_id` (its
+    * key in the generated tables). The segment count is a row count, so a
+    * `doc_id` on two rows would count twice.
     */
   def boilerplateNgrams(s: SparkSession, dir: String, n: Int = 2,
       minDocs: Int = 5): DataFrame = {
@@ -322,7 +326,8 @@ object TextOps {
     // Round-7 second cut: dedupe segments PER DOCUMENT in the array
     // (array_distinct — an O(segments) hash set per row) before the
     // explode, so each doc contributes each segment exactly once and
-    // count(*) == countDistinct(doc_id). countDistinct planned as TWO
+    // count(*) == countDistinct(doc_id) under the one-row-per-doc_id
+    // precondition above. countDistinct planned as TWO
     // exchanges (partial dedup on (seg, doc_id), then recount on seg);
     // this is ONE exchange with map-side partial aggregation (§2.3
     // aggregate-before-shuffle + §2.4), and the shuffle carries (seg,

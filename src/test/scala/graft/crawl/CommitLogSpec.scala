@@ -41,4 +41,25 @@ class CommitLogSpec extends AnyFunSuite {
     assert(taken != null)
     taken.release(); probe.close()
   }
+
+  test("a commit written with the retired bloomPaths field still parses") {
+    val root = Files.createTempDirectory("commitlegacy")
+    val dir = Files.createDirectories(root.resolve("_commits"))
+    // a delta-state updatedb commit as logs wrote it while URL-seen bloom
+    // sidecars rode every frontier table
+    Files.writeString(dir.resolve("000003.json"),
+      """{"seq":3,"batchId":"b1","stage":"updatedb","status":"complete",
+        |"frontierPath":"/r/frontier/snapshot-0","rowCount":42,
+        |"partitionCounts":{"0":40,"1":2},"metrics":{"mergeWallMs":12.5},
+        |"virtualTime":7,"deltaPaths":["/r/frontier/delta-3"],
+        |"bloomPaths":["/r/blooms/0","/r/blooms/3"]}""".stripMargin)
+    val log = new CommitLog(root.toString)
+    try {
+      assert(log.commits() === Seq(Commit(3L, "b1", "updatedb", "complete",
+        "/r/frontier/snapshot-0", 42L, Map("0" -> 40L, "1" -> 2L),
+        Map("mergeWallMs" -> 12.5), 7L, Seq("/r/frontier/delta-3"))))
+      // resume continues the sequence after the legacy commit
+      assert(log.nextSeq() === 4L)
+    } finally CommitLog.releaseProcessLock(root.toString)
+  }
 }

@@ -55,7 +55,7 @@ class ResumeMatrixSpec extends AnyFunSuite {
   }
 
   private def paths(c: Commit): Seq[String] =
-    c.frontierPath +: (c.deltas ++ c.blooms)
+    c.frontierPath +: c.deltas
 
   private def resultOf(p: CrawlPipeline, root: Path): Result = {
     val rows = p.frontierState().collect()
@@ -113,13 +113,15 @@ class ResumeMatrixSpec extends AnyFunSuite {
       assert(commits.filter(_.stage == "updatedb")
         .map(c => c.metrics.contains("compacted")) === Seq(false, true, false))
       assert(want.steps.values.forall(_ == 1))
+      // the seen-set is the frontier's keys: no URL-seen sidecar is written
+      assert(!Files.exists(refRoot.resolve("blooms")))
 
       def resume(k: Int): Seq[String] = {
         val root = base.resolve(s"crash-$k")
         copyRoot(refRoot, root)
         // the crash: commits after k never happened, and neither did the
-        // writes they name (a table, snapshot, delta or bloom sidecar no
-        // kept commit names)
+        // writes they name (a table, snapshot or delta no kept commit
+        // names)
         val (kept, lost) = commits.splitAt(k + 1)
         val keptPaths = kept.flatMap(paths).toSet
         lost.foreach { c =>
