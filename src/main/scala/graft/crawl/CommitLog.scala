@@ -70,9 +70,6 @@ final class CommitLog(root: String) {
 
   def last(): Option[Commit] = commits().lastOption
 
-  def lastOf(stage: String): Option[Commit] =
-    commits().filter(_.stage == stage).lastOption
-
   def nextSeq(): Long = last().map(_.seq + 1).getOrElse(0L)
 
   /** Atomic append: write temp file, fsync-free rename into place. */

@@ -81,8 +81,10 @@ final class SyntheticFetcher(cfg: WebConfig) extends Fetcher {
   *  - parse: narrow map over the batch staging table, no shuffle;
   *  - updatedb: discovered side is pre-aggregated per URL, capping the
   *    shuffle at |distinct urls|; the topN-bounded batch side is then
-  *    collected once and broadcast as variables, so every frontier probe
-  *    is a membership filter over the scan — the frontier never shuffles.
+  *    collected once and broadcast as variables, so the one frontier scan
+  *    is a membership filter — the frontier never shuffles. Its touched
+  *    rows replace the discovery candidates inside the delta write's
+  *    bucket exchange, which makes the frontier's keys the URL-seen set.
   */
 final class CrawlPipeline(
     @transient private val spark: SparkSession,
@@ -288,23 +290,26 @@ final class CrawlPipeline(
         c.stage == "compact")
       .lastOption
 
-  /** Latest version of each key across an ordered list of delta frames
-    * (later frames win) — the chain fold shared by the MoR view and
-    * `foldChain`. Shuffle is DELTA-sized (topN-bounded per frame).
+  /** Latest version of each key across an ordered list of frames (later
+    * frames win) — the one chain fold, behind the MoR view, `foldChain`
+    * and updatedb's delta write. Shuffle is DELTA-sized (topN-bounded per
+    * frame).
     */
   private def latestOf(frames: Seq[Dataset[CrawlRow]]): Dataset[CrawlRow] = {
-    // single-frame fold is the identity: every delta is written as
-    // `changed union newRows` — changed rows exist in the frontier, new
-    // rows do not, and each side is unique by urlHash — so the
-    // dedup window (a full shuffle of the delta) only matters across
-    // frames. With compactEvery=1 every compaction folds exactly one
-    // frame; skipping the no-op window removes one exchange per batch.
+    // single-frame fold is the identity: every delta is itself written
+    // through this fold, so each frame is unique by urlHash and the
+    // dedup window only matters across frames (a one-delta view or
+    // compaction skips its exchange)
     if (frames.lengthCompare(1) == 0) return frames.head
+    // `bucket` is a function of the URL's host, so equal urlHash means
+    // equal bucket: the bucket exchange (the layout every frontier write
+    // wants anyway) already clusters the window, which adds no exchange
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("urlHash")).orderBy(col("_dseq").desc)
+      .partitionBy(col("bucket"), col("urlHash")).orderBy(col("_dseq").desc)
     frames.zipWithIndex
       .map { case (ds, i) => ds.withColumn("_dseq", lit(i)) }
       .reduce(_ unionByName _)
+      .repartition(math.max(1, numBuckets / 8), col("bucket"))
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn", "_dseq")
@@ -396,31 +401,30 @@ final class CrawlPipeline(
     // the write) — without it the whole chain lineage would recompute
     val latest = latestOf(chain)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val baseUntouched = readFrontier(basePath)
-      .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
-        "left_anti")
-    val major = nextCompactionIsMajor()
-    val baseBytes = dirBytes(basePath)
-    val (rows, write) =
-      if (major || baseBytes < noExchangeMinBytes)
-        (baseUntouched.unionByName(latest.toDF()), writeSnapshot _)
-      else {
-        // Size the scan splits from the BASE SNAPSHOT size so scan
-        // parallelism replaces exchange parallelism at every scale: with
-        // the default 128MB maxPartitionBytes a small frontier packs many
-        // bucket files into ONE task, which (a) single-threads the write
-        // and (b) makes the dynamic-partition writer sort mixed-bucket
-        // rows per task (measured: the "exchange-free" compaction slower
-        // than the exchange at bench scale). One-file-per-task splits keep
-        // each task on a single bucket: constant-key sort, one output
-        // file, full parallelism.
-        val targetSplits =
-          math.max(1, 4 * spark.sparkContext.defaultParallelism)
-        val per = math.max(1L << 20,
-          math.min(128L << 20, baseBytes / targetSplits))
-        (baseUntouched.unionByName(latest
-          .repartition(math.max(1, numBuckets / 8), col("bucket")).toDF()),
-          { (df: DataFrame, path: String) =>
+    try {
+      val baseUntouched = readFrontier(basePath)
+        .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
+          "left_anti")
+      val major = nextCompactionIsMajor()
+      val baseBytes = dirBytes(basePath)
+      val write: (DataFrame, String) => Unit =
+        if (major || baseBytes < noExchangeMinBytes) writeSnapshot
+        else {
+          // Size the scan splits from the BASE SNAPSHOT size so scan
+          // parallelism replaces exchange parallelism at every scale: with
+          // the default 128MB maxPartitionBytes a small frontier packs many
+          // bucket files into ONE task, which (a) single-threads the write
+          // and (b) makes the dynamic-partition writer sort mixed-bucket
+          // rows per task (measured: the "exchange-free" compaction slower
+          // than the exchange at bench scale). One-file-per-task splits
+          // keep each task on a single bucket: constant-key sort, one
+          // output file, full parallelism. The folded chain arrives
+          // bucket-partitioned from `latestOf`.
+          val targetSplits =
+            math.max(1, 4 * spark.sparkContext.defaultParallelism)
+          val per = math.max(1L << 20,
+            math.min(128L << 20, baseBytes / targetSplits))
+          (df: DataFrame, path: String) => {
             val conf = spark.conf
             val prevMax =
               conf.get("spark.sql.files.maxPartitionBytes", "134217728")
@@ -429,11 +433,12 @@ final class CrawlPipeline(
               df.write.mode(SaveMode.Overwrite).partitionBy("bucket")
                 .parquet(path)
             } finally conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-          })
-      }
-    runStage[CrawlRow](batchId, stage, now, Table.Snapshot, rows,
-      bucketCounts)(write, (_, _) => metrics(major))
-    latest.unpersist()
+          }
+        }
+      runStage[CrawlRow](batchId, stage, now, Table.Snapshot,
+        baseUntouched.unionByName(latest.toDF()), bucketCounts)(
+        write, (_, _) => metrics(major))
+    } finally latest.unpersist()
   }
 
   // -------------------------------------------------------------- generate
@@ -568,34 +573,6 @@ final class CrawlPipeline(
     val mode = queueMode
     val timelimit = fetchTimelimitMs
 
-    // J2 host-settings lookup join: politeness settings come from the
-    // LATEST hostdb snapshot (the reference's HostDb.getByHostName LRU,
-    // host/HostDb.java:41-110), restricted to the batch's own queue keys
-    // before collection so the broadcast is fetchlist-bounded (<= topN
-    // keys), never |all hosts|. Unseen keys (batch 1, new hosts) fall
-    // back to the config trie — same values by construction.
-    //
-    // The hostdb is keyed by HOST, so the lookup applies in byHost queue
-    // mode ONLY: a byDomain/byIP queue spans several hostdb rows whose
-    // settings the scheduler contract (and the simulator oracle) resolves
-    // from the config trie at the QUEUE key, not from any per-host
-    // aggregate — so those modes skip the hostdb read explicitly instead
-    // of silently never matching on it.
-    val hostSettings: Map[String, (Long, Int)] =
-      if (mode != QueueMode.ByHost) Map.empty
-      else log.lastOf("hostdb") match {
-        case Some(c) =>
-          val keys = fetchlist
-            .map(r => QueueMode.keyOf(mode, r.host)).distinct().toDF("host")
-          readAs[HostRow](c.frontierPath)
-            .join(broadcast(keys), Seq("host"))
-            .select(col("host"), col("crawlDelayMs"), col("maxConcurrent"))
-            .as[(String, Long, Int)].collect()
-            .map(r => r._1 -> (r._2, r._3)).toMap
-        case None => Map.empty
-      }
-    val hsBc = spark.sparkContext.broadcast(hostSettings)
-
     // groupByKey inserts one hash exchange on the queue key — the
     // politeness partitioner (reference URLPartitioner byHost/byDomain/
     // byIP). NOTE: AQE's post-shuffle coalescing must stay OFF for this
@@ -616,13 +593,10 @@ final class CrawlPipeline(
         // per-executor LRU in the reference (robots stay per-host even
         // when the politeness queue is per-domain/IP)
         val rulesOf = scala.collection.mutable.Map[String, RobotRules]()
-        // queue politeness settings: hostdb row for the queue key, else
-        // the config trie at the queue key (J2/J3)
-        val (crawlDelay, lanes) = hsBc.value.getOrElse(qkey, {
-          val qCfg = trie.value.configOrDefault(s"http://$qkey/")
-          (if (qCfg.crawlDelayMs > 0) qCfg.crawlDelayMs else defaultDelay,
-            if (qCfg.maxConcurrent > 1) qCfg.maxConcurrent else defaultLanes)
-        })
+        // queue politeness settings: the config trie at the queue key
+        // (J2/J3), the same values hostdb materializes per host
+        val (crawlDelay, lanes) = CrawlPipeline.politeness(trie.value, qkey,
+          defaultDelay, defaultLanes)
         val laneAvail = Array.fill(lanes)(now)
         sorted.iterator.flatMap[FetchResult] { r =>
           val host = r.host
@@ -645,7 +619,7 @@ final class CrawlPipeline(
             val delay = f.delayMs(r.url)
             val end = start + delay
             // a robots-declared Crawl-delay raises the politeness floor
-            // for its host above the config/hostdb delay (reference
+            // for its host above the config delay (reference
             // FetcherReducer queue setup reads getCrawlDelay), BOUNDED:
             // a hostile 'Crawl-delay: 9999999' must not starve the lane
             // (the reference's fetcher.max.crawl.delay cap, 30 s)
@@ -780,9 +754,10 @@ final class CrawlPipeline(
     * the 10^10-row frontier never shuffles (the reference needed a full
     * partition/sort/group pass per updatedb, UrlWithScore.java:124-195).
     *
-    * D1 URL-seen set: the frontier's keys themselves. One exact probe
-    * ([[presentKeys]]) collects which discovered keys the frontier already
-    * holds; new rows are the discoveries it finds absent.
+    * D1 URL-seen set: the frontier's keys themselves, with ONE frontier
+    * scan. Every discovery within depth is a candidate row; the delta is
+    * `latestOf(candidates, touched)`, so a key the frontier already holds
+    * keeps its merged version and only absent keys enter as new rows.
     */
   def updatedb(frontier: Dataset[CrawlRow], parsed: Dataset[ParsedPage],
       batchId: String, now: Long): Dataset[CrawlRow] = {
@@ -825,7 +800,8 @@ final class CrawlPipeline(
     // partial aggregation — the outlink explosion is the largest data
     // volume in the pipeline, and partial agg collapses it before the
     // shuffle. first() is safe: same urlHash => same url/host/bucket.
-    // Persisted: the side collect materializes it, the new rows read it
+    // Persisted: the side collect materializes it, the candidates read it;
+    // released however the merge ends, like the side
     val discAgg = discovered
       .groupBy(col("urlHash"))
       .agg(first(col("url")).as("url"),
@@ -838,87 +814,73 @@ final class CrawlPipeline(
         min(col("anchor")).as("anchor"))
       .as[Discovered]
       .persist()
+    try {
+      // mergeWallMs covers all of the merge's Spark work, side included
+      val t0 = System.nanoTime()
+      val outcomes = parsed
+        .select(col("urlHash"), col("outcome"),
+          coalesce(col("signature"), lit(Array.emptyByteArray))
+            .as("signature"),
+          col("batchId"),
+          coalesce(col("redirectTo"), lit("")).as("redirectTo"),
+          col("refreshTime"))
+        .as[Outcome].collect()
+      val disc = discAgg
+        .select(col("urlHash"), col("distance"), col("contrib"))
+        .as[(Long, Int, Float)].collect()
+      val side = spark.sparkContext.broadcast(BatchSide(
+        outcomes.iterator.map(o => o.urlHash -> o).toMap,
+        disc.iterator.map(d => d._1 -> ((d._2, d._3))).toMap))
+      try {
+        // every discovery within depth as a new row; a key the frontier
+        // already holds is also a touched row, whose merged version
+        // replaces its candidate in the delta's fold (later frames win) —
+        // so the frontier's keys stay the exact seen-set with ONE scan
+        val candidates =
+          if (!additionsAllowed) spark.emptyDataset[CrawlRow]
+          else discAgg
+            .filter(col("distance") <= lit(depthCap))
+            .map { d =>
+              // F4: per-site custom score/interval for new rows
+              val cfg = trie.value.configOrDefault(d.url)
+              Keys.rowOf(d.url, nb, now,
+                score = sc.newRowScore(d.url, d.contrib, cfg.customScore),
+                distance = d.distance,
+                intervalSec =
+                  if (cfg.customIntervalSec > 0) cfg.customIntervalSec
+                  else sched.defaultIntervalSec,
+                anchor = d.anchor)
+            }
+        val frames = Seq(candidates, mergeTouched(frontier, side, now))
 
-    // mergeWallMs covers all of the merge's Spark work, side included
-    val t0 = System.nanoTime()
-    val outcomes = parsed
-      .select(col("urlHash"), col("outcome"),
-        coalesce(col("signature"), lit(Array.emptyByteArray))
-          .as("signature"),
-        col("batchId"), coalesce(col("redirectTo"), lit("")).as("redirectTo"),
-        col("refreshTime"))
-      .as[Outcome].collect()
-    val disc = discAgg
-      .select(col("urlHash"), col("distance"), col("contrib"))
-      .as[(Long, Int, Float)].collect()
-    val sctx = spark.sparkContext
-    val side = sctx.broadcast(BatchSide(
-      outcomes.iterator.map(o => o.urlHash -> o).toMap,
-      disc.iterator.map(d => d._1 -> ((d._2, d._3))).toMap))
-
-    // the discovered keys the frontier already holds; none are needed
-    // when no discovery can become a row
-    val present = sctx.broadcast(
-      if (!additionsAllowed || disc.isEmpty) Set.empty[Long]
-      else presentKeys(frontier, side).collect().toSet)
-
-    val seen = udf((h: Long) => present.value.contains(h))
-    val newRows =
-      if (!additionsAllowed) spark.emptyDataset[CrawlRow]
-      else discAgg
-        .filter(!seen(col("urlHash")) &&
-          col("distance") <= lit(depthCap))
-        .map { d =>
-          // F4: per-site custom score/interval for newly discovered rows
-          val cfg = trie.value.configOrDefault(d.url)
-          Keys.rowOf(d.url, nb, now,
-            score = sc.newRowScore(d.url, d.contrib, cfg.customScore),
-            distance = d.distance,
-            intervalSec =
-              if (cfg.customIntervalSec > 0) cfg.customIntervalSec
-              else sched.defaultIntervalSec,
-            anchor = d.anchor)
+        // Snapshot strategy (Iceberg merge-on-read, emulated): each batch
+        // writes a DELTA of changed+new rows (topN-bounded — never the
+        // frontier), and every `compactEvery`-th batch compacts the chain
+        // into a full bucket-partitioned snapshot. Round 1's full rewrite
+        // per batch made the snapshot exchange the merge stage's scaling
+        // bottleneck (0.60 efficiency); here the per-batch merge cost is
+        // O(delta) and the full-width exchange is amortized over the chain.
+        val prev = lastState()
+        def merged() = Map("mergeWallMs" -> (System.nanoTime() - t0) / 1e6)
+        prev.filter(_.deltas.size < compactEvery - 1) match {
+          case Some(base) =>
+            // the fold's bucket exchange is the delta write's layout
+            runStage[CrawlRow](batchId, "updatedb", now, Table.Delta(base),
+              latestOf(frames), bucketCounts)(
+              _.write.mode(SaveMode.Overwrite).parquet(_),
+              (_, _) => merged())
+          case None =>
+            // compacting merge: fold the chain + this batch into a full
+            // snapshot
+            foldChain(batchId, "updatedb", now, prev.fold("")(_.frontierPath),
+              prev.fold(Seq.empty[String])(_.deltas).map(readFrontier) ++
+                frames) {
+              major => merged() + ("compacted" -> (if (major) 2.0 else 1.0))
+            }
         }
-
-    // Snapshot strategy (Iceberg merge-on-read, emulated): each batch
-    // writes a DELTA of changed+new rows (topN-bounded — never the
-    // frontier), and every `compactEvery`-th batch compacts the chain
-    // into a full bucket-partitioned snapshot. Round 1's full rewrite per
-    // batch made the snapshot exchange the merge stage's scaling
-    // bottleneck (0.60 efficiency); here the per-batch merge cost is
-    // O(delta) and the full-width exchange is amortized over the chain.
-    val delta = mergeTouched(frontier, side, now).union(newRows)
-    val prev = lastState()
-    def merged() = Map("mergeWallMs" -> (System.nanoTime() - t0) / 1e6)
-    prev.filter(_.deltas.size < compactEvery - 1) match {
-      case Some(base) =>
-        runStage[CrawlRow](batchId, "updatedb", now, Table.Delta(base),
-          delta, bucketCounts)(
-          _.repartition(math.max(1, numBuckets / 8), col("bucket"))
-            .write.mode(SaveMode.Overwrite).parquet(_),
-          (_, _) => merged())
-      case None =>
-        // compacting merge: fold the chain + this batch into a full
-        // snapshot
-        foldChain(batchId, "updatedb", now, prev.fold("")(_.frontierPath),
-          prev.fold(Seq.empty[String])(_.deltas).map(readFrontier) :+ delta) {
-          major => merged() + ("compacted" -> (if (major) 2.0 else 1.0))
-        }
-    }
-    discAgg.unpersist()
-    Seq(side, present).foreach(_.destroy())
+      } finally side.destroy()
+    } finally discAgg.unpersist()
     frontierState()
-  }
-
-  /** The exact D1 seen-check: which of the batch side's discovered keys
-    * are frontier keys, by a membership filter over the scan (plan
-    * spec-pinned).
-    */
-  private[crawl] def presentKeys(frontier: Dataset[CrawlRow],
-      side: Broadcast[BatchSide]): Dataset[Long] = {
-    val discovered = udf((h: Long) => side.value.disc.contains(h))
-    frontier.select(col("urlHash")).filter(discovered(col("urlHash")))
-      .as[Long]
   }
 
   /** The touched frontier rows (fetched or rediscovered this batch),
@@ -963,8 +925,8 @@ final class CrawlPipeline(
     * keys q_cd/q_mt read by the fetcher at FetcherReducer.java:363-387).
     * Stats aggregate map-side (hash partial agg) so the exchange carries
     * |hosts| rows, not |frontier|; the effective politeness settings are
-    * materialized from the config trie so the NEXT batch's fetch reads
-    * them as a bounded table lookup. A3 link-host histograms
+    * materialized as a read surface by [[CrawlPipeline.politeness]], the
+    * same resolution fetch applies per queue. A3 link-host histograms
     * (HostDbUpdateReducer.java:46-72): the batch's (srcHost, dstHost) link
     * counts, bounded by its outlinks, are collected; the top-K of each
     * direction fills in the one map over the stats aggregate.
@@ -994,11 +956,10 @@ final class CrawlPipeline(
       max(col("distance")).as("maxDistance"))
       .as[(String, Long, Long, Long, Long, Double, Int)]
       .map { case (host, pages, fetched, gone, unf, avgS, maxD) =>
-        val cfg = trie.value.configOrDefault(s"http://$host/")
+        val (delay, lanes) = CrawlPipeline.politeness(trie.value, host,
+          defaultDelay, defaultLanes)
         val (in, outH) = hists.value
-        HostRow(host, pages, fetched, gone, unf, avgS, maxD,
-          if (cfg.crawlDelayMs > 0) cfg.crawlDelayMs else defaultDelay,
-          if (cfg.maxConcurrent > 1) cfg.maxConcurrent else defaultLanes,
+        HostRow(host, pages, fetched, gone, unf, avgS, maxD, delay, lanes,
           in.getOrElse(host, Map.empty), outH.getOrElse(host, Map.empty),
           batchId)
       }
@@ -1020,41 +981,43 @@ final class CrawlPipeline(
   def runBatches(depth: Int, topN: Int, maxPerHost: Int,
       startTime: Long = 1700000000000L): Dataset[CrawlRow] = {
     val committed = log.commits().map(c => (c.batchId, c.stage) -> c).toMap
-    // the frontier VIEW is consumed by generate, updatedb's frontier
-    // probe and merge, and hostdb — cache each view once instead of
-    // re-resolving base ∖ deltas per consumer; the loop owns each cache
+    // the frontier VIEW is consumed by generate, updatedb's one scan and
+    // hostdb — cache each view once instead of re-resolving base ∖ deltas
+    // per consumer; the loop owns each cache, released however it ends
     def cached(ds: Dataset[CrawlRow]) =
       ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // resume starts on the newest committed state, which every committed
     // updatedb is already folded into
     var frontier = cached(lastState().fold(
       inject(SyntheticWeb.seeds(webCfg), startTime))(viewOf))
-    for (i <- 1 to depth) {
-      val batchId = s"b$i"
-      val now = startTime + i * 3600000L // 1h virtual tick per batch
-      def step[T: Encoder](stage: String)(run: => Dataset[T]): Dataset[T] =
-        committed.get((batchId, stage))
-          .fold(run)(c => readAs[T](c.frontierPath))
-      val list = step("generate")(
-        generate(frontier, batchId, now, topN, maxPerHost))
-      // T2: empty step => skip remaining stages (exitValue=2 analog). The
-      // batch's generate commit holds the fetchlist size observed on its
-      // write — no count job
-      if (log.commits().exists(c => c.batchId == batchId &&
-          c.stage == "generate" && c.rowCount > 0)) {
-        val fetched = step("fetch")(fetch(list, batchId, now))
-        val parsed = step("parse")(parse(fetched, batchId, now))
-        step("payload")(payloads(fetched, batchId, now))
-        if (!committed.contains((batchId, "updatedb"))) {
-          val next = cached(updatedb(frontier, parsed, batchId, now))
-          frontier.unpersist()
-          frontier = next
+    try {
+      for (i <- 1 to depth) {
+        val batchId = s"b$i"
+        val now = startTime + i * 3600000L // 1h virtual tick per batch
+        def step[T: Encoder](stage: String)(run: => Dataset[T]): Dataset[T] =
+          committed.get((batchId, stage))
+            .fold(run)(c => readAs[T](c.frontierPath))
+        val list = step("generate")(
+          generate(frontier, batchId, now, topN, maxPerHost))
+        // T2: empty step => skip remaining stages (exitValue=2 analog). The
+        // batch's generate commit holds the fetchlist size observed on its
+        // write — no count job
+        if (log.commits().exists(c => c.batchId == batchId &&
+            c.stage == "generate" && c.rowCount > 0)) {
+          val fetched = step("fetch")(fetch(list, batchId, now))
+          val parsed = step("parse")(parse(fetched, batchId, now))
+          step("payload")(payloads(fetched, batchId, now))
+          if (!committed.contains((batchId, "updatedb"))) {
+            val next = cached(updatedb(frontier, parsed, batchId, now))
+            frontier.unpersist()
+            frontier = next
+          }
+          step("hostdb")(hostdb(frontier, batchId, now, parsed))
         }
-        step("hostdb")(hostdb(frontier, batchId, now, parsed))
       }
-    }
-    // the returned view resolves from parquet; no cache outlives the loop
-    frontier.unpersist()
+      // the returned view resolves from parquet; no cache outlives the loop
+      frontier
+    } finally frontier.unpersist()
   }
 }
 
@@ -1148,6 +1111,17 @@ object CrawlPipeline {
           else row.reprUrl,
         lastBatch = out.batchId)
     }
+  }
+
+  /** A politeness queue's (crawl delay ms, lanes): the config trie's
+    * values at `http://key/`, else the defaults — the one resolution
+    * behind fetch's queues and hostdb's materialized columns.
+    */
+  def politeness(trie: graft.core.ConfigTrie, key: String,
+      defaultDelay: Long, defaultLanes: Int): (Long, Int) = {
+    val cfg = trie.configOrDefault(s"http://$key/")
+    (if (cfg.crawlDelayMs > 0) cfg.crawlDelayMs else defaultDelay,
+      if (cfg.maxConcurrent > 1) cfg.maxConcurrent else defaultLanes)
   }
 
   /** Per-host top-[[HostLinkTopK]] of (host, other, links) counts, ranked

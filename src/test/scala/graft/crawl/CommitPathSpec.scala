@@ -52,6 +52,18 @@ class CommitPathSpec extends AnyFunSuite {
     assert(outside.isEmpty, s"Observation outside the runner:\n${show(outside)}")
   }
 
+  test("fetch reads no commit and no table: its inputs are the fetchlist " +
+    "and the config trie") {
+    // a fetch-time side lookup (the last hostdb, the frontier) would read
+    // settings another stage derived from the same trie, stale after a
+    // resume with a changed one
+    val fetch = body("def fetch(fetchlist: Dataset[CrawlRow]")
+    val reads = Seq("""(^|[^\w.])log\.""".r, """spark\.read""".r,
+      """\b(readAs|readFrontier|viewOf|frontierState|lastState)\b""".r)
+    val at = fetch.filter(i => reads.exists(_.findFirstIn(lines(i)).nonEmpty))
+    assert(at.isEmpty, s"fetch reads a commit or a table:\n${show(at)}")
+  }
+
   test("runBatches builds no table path: resume reads what commits name") {
     val loop = body("def runBatches(")
     val paths = loop.filter(i => lines(i).contains("$root/"))

@@ -2,7 +2,19 @@ package graft.crawl
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.spark
@@ -381,6 +393,8 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("updatedb frontier probe and merge plan with NO shuffle above the " +
     "frontier scan and no broadcast exchange") {
+    // the probe is the merge's own touched-row membership filter: the
+    // separate present-keys plan is gone (one scan, pinned below)
     // read the base snapshot from FILES directly: this test pins the
     // cold-plan shape a 10^10-row frontier (never cacheable) would get.
     // Both pipelines: Opic adds the columnar existing-score step.
@@ -389,45 +403,179 @@ class CrawlParitySpec extends AnyFunSuite {
       Map(11L -> Outcome(11L, graft.core.FetchOutcome.Success,
         Array[Byte](1, 2), "bX", "")),
       Map(11L -> ((1, 0.5f)), 22L -> ((2, 0.25f)))))
-    def isFrontierScan(p: org.apache.spark.sql.execution.SparkPlan) =
-      p match {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.rootPaths.exists(_.toString.contains("snapshot-"))
-        case _ => false
-      }
-    val plans = Seq(ScoringFilter.Default, ScoringFilter.Opic).flatMap { sf =>
+    def isFrontierScan(p: SparkPlan) = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("snapshot-"))
+      case _ => false
+    }
+    val plans = Seq(ScoringFilter.Default, ScoringFilter.Opic).map { sf =>
       val pipeline = new CrawlPipeline(spark, root, webCfg, numBuckets = 8,
         scoring = sf)
       val frontier = pipeline.readFrontier(
         pipeline.lastState().get.frontierPath)
-      Seq(pipeline.presentKeys(frontier, side).toDF(),
-        pipeline.mergeTouched(frontier, side, 1700000000000L).toDF())
+      pipeline.mergeTouched(frontier, side, 1700000000000L).toDF()
     }
     plans.foreach { ds =>
       // the prepared physical plan: exchanges are planned into it
       val plan = ds.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
+        case a: AdaptiveSparkPlanExec => a.executedPlan
         case p => p
       }
       assert(plan.collectLeaves().exists(isFrontierScan),
         s"no frontier scan in plan:\n$plan")
-      val shuffles = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
       shuffles.foreach { e =>
         assert(!e.collectLeaves().exists(isFrontierScan),
-          s"frontier scan below a ShuffleExchange — the exact seen-check " +
-            s"would shuffle frontier keys at scale:\n$plan")
+          s"frontier scan below a ShuffleExchange — the merge would " +
+            s"shuffle frontier rows at scale:\n$plan")
       }
-      val broadcasts = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-          e
-      }
+      val broadcasts = plan.collect { case e: BroadcastExchangeExec => e }
       assert(broadcasts.isEmpty,
         s"broadcast exchange in an updatedb frontier plan:\n$plan")
     }
     side.destroy()
+  }
+
+  /** Every physical node a query ran, through adaptive stages, reused
+    * exchanges and cached relations (a cache's plan is one object, so
+    * identity-distinct nodes count work once across queries).
+    */
+  private def ranNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => ranNodes(a.executedPlan)
+    case q: QueryStageExec => ranNodes(q.plan)
+    case r: ReusedExchangeExec => ranNodes(r.child)
+    case m: InMemoryTableScanExec => ranNodes(m.relation.cachedPlan)
+    case c: CommandResultExec => ranNodes(c.commandPhysicalPlan)
+    case other => other.children.flatMap(ranNodes)
+  })
+
+  test("updatedb write plans scan the frontier once; only the bucket " +
+    "exchange sits above it (delta and compacting branches)") {
+    val cfg = webCfg.copy(numHosts = 4, pagesPerHost = 10)
+    val now = 1700000000000L + 2 * 3600000L
+    for (sf <- Seq(ScoringFilter.Default, ScoringFilter.Opic);
+         every <- Seq(4, 1)) {
+      val dir = Files.createTempDirectory("crawl-udb-plan").toString
+      // 32 buckets: the bucket repartition spans 4 partitions, so it
+      // plans as a hash on `bucket` rather than a single partition
+      val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 32,
+        scoring = sf, compactEvery = every)
+      p.runBatches(1, topN, maxPerHost)
+      // the frontier view copied to a path of its own, so its scan is
+      // told apart from the base snapshot a compacting fold rewrites
+      val probe = s"$dir/probe-frontier"
+      p.frontierState().write.parquet(probe)
+      val frontier = spark.read.schema(
+        implicitly[org.apache.spark.sql.Encoder[CrawlRow]].schema)
+        .parquet(probe).as[CrawlRow]
+      val parsed = p.parse(
+        p.fetch(p.generate(frontier, "b2", now, topN, maxPerHost), "b2", now),
+        "b2", now)
+      val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          qes.add(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      def isWrite(qe: QueryExecution) = qe.logical match {
+        case w: InsertIntoHadoopFsRelationCommand =>
+          w.outputPath.toString.contains("/frontier/")
+        case _ => false
+      }
+      spark.listenerManager.register(listener)
+      try {
+        p.updatedb(frontier, parsed, "b2", now)
+        // listener events arrive on the bus after the action returns
+        val deadline = System.nanoTime() + 30000000000L
+        while (!qes.asScala.exists(isWrite) && System.nanoTime() < deadline)
+          Thread.sleep(50)
+      } finally spark.listenerManager.unregister(listener)
+      val ran = qes.asScala.toSeq
+      val what = s"${sf.getClass.getSimpleName} compactEvery=$every"
+      assert(ran.count(isWrite) === 1, s"$what: no single frontier write")
+      val commit = p.lastState().get
+      assert(commit.batchId === "b2" && commit.stage === "updatedb")
+      assert(commit.deltas.nonEmpty === (every == 4), s"$what: wrong branch")
+
+      val nodes = ran.flatMap(qe => ranNodes(qe.executedPlan))
+      def isProbeScan(n: SparkPlan) = n match {
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toString.contains(probe))
+        case _ => false
+      }
+      val scans = nodes.filter(isProbeScan)
+      val distinctScans = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+      scans.foreach(distinctScans.add)
+      assert(distinctScans.size === 1,
+        s"$what: ${distinctScans.size} frontier scans in updatedb")
+      def above(n: SparkPlan) = ranNodes(n).exists(isProbeScan)
+      val shuffles = nodes.collect {
+        case e: ShuffleExchangeExec if above(e) => e
+      }
+      assert(shuffles.nonEmpty, s"$what: no bucket exchange")
+      shuffles.foreach { e =>
+        val keys = e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.map(_.toString)
+          case other => Seq(other.toString)
+        }
+        assert(keys.size === 1 && keys.head.startsWith("bucket#"),
+          s"$what: exchange beyond the bucket repartition: $keys")
+      }
+      // the compacting fold broadcasts its folded keys for the base
+      // anti-join; the delta write broadcasts nothing
+      nodes.collect { case e: BroadcastExchangeExec if above(e) => e }
+        .foreach { e =>
+          assert(every == 1 && e.output.map(_.name) === Seq("urlHash"),
+            s"$what: broadcast over the frontier:\n$e")
+        }
+    }
+  }
+
+  test("every delta commit's files hold distinct urlHash") {
+    // latestOf's single-frame identity (a one-delta view or compaction
+    // skips the dedup window) relies on it
+    val cfg = webCfg.copy(numHosts = 5, pagesPerHost = 12)
+    val dir = Files.createTempDirectory("crawl-delta-unique").toString
+    val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
+      compactEvery = 99, scoring = ScoringFilter.Opic)
+    p.runBatches(4, 40, 8)
+    val deltas = p.log.commits().flatMap(_.deltas).distinct
+    assert(deltas.size === 4)
+    deltas.foreach { d =>
+      val keys = spark.read.parquet(d).select("urlHash").as[Long].collect()
+      assert(keys.nonEmpty, s"empty delta $d")
+      assert(keys.distinct.length === keys.length, s"duplicate keys in $d")
+    }
+  }
+
+  test("a failing updatedb leaves no cache behind (delta and compacting)") {
+    // the new-row score hook throws inside updatedb's write; the frontier
+    // view, the discovery aggregate and the compacting fold's chain are
+    // each released by their owner on the way out
+    val throwing = new ScoringFilter {
+      def injectedScore(url: String, metaScore: Option[Float]): Float =
+        metaScore.getOrElse(1.0f)
+      def outlinkContribution(srcUrl: String, srcScore: Float,
+          outlinkCount: Int): Float = srcScore / math.max(1, outlinkCount)
+      def newRowScore(url: String, contrib: Float, customScore: Float)
+          : Float = throw new IllegalStateException("newRowScore failed")
+    }
+    val cfg = webCfg.copy(numHosts = 3, pagesPerHost = 8)
+    val sc = spark.sparkContext
+    Seq(4, 1).foreach { every =>
+      val before = sc.getPersistentRDDs.keySet
+      val dir = Files.createTempDirectory("crawl-udb-fail").toString
+      val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
+        compactEvery = every, scoring = throwing)
+      val e = intercept[Exception](p.runBatches(1, 40, 8))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("newRowScore failed")), e.toString)
+      assert(!p.log.commits().exists(_.stage == "updatedb"))
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"compactEvery=$every left cached RDDs: " +
+        left.map(sc.getPersistentRDDs(_).toDebugString.linesIterator.next()))
+    }
   }
 
   test("commit-log lineage counts (collected on the write pass) match files") {

@@ -45,7 +45,8 @@ class HostDbSpec extends AnyFunSuite {
     assert(hd("www.test-1.example").crawlDelayMs === 150L)
     assert(hd("www.test-1.example").maxConcurrent === 2)
     assert(hd("www.test-2.example").crawlDelayMs === webCfg.crawlDelayMs)
-    // the commit log gained hostdb stages (fetch reads the latest)
+    // the commit log gained hostdb stages (a read surface: fetch resolves
+    // the same settings from the trie)
     assert(p.log.commits().count(_.stage == "hostdb") === 2)
 
     // A3 link-host histograms (reference HostDbUpdateReducer.java:46-72):
@@ -72,6 +73,33 @@ class HostDbSpec extends AnyFunSuite {
     // the histograms are non-trivially populated (fanout links exist)
     assert(hd.values.exists(_.outLinkHosts.nonEmpty))
     assert(hd.values.exists(_.inLinkHosts.nonEmpty))
+  }
+
+  test("politeness follows the trie after a resume, not the last hostdb") {
+    // batch 1 runs with no per-site config, so its hostdb holds the
+    // default delay; the resumed batch 2 runs under a trie that slows
+    // www.test-1.example down and must pace that host by the new delay
+    val host = "www.test-1.example"
+    val delay = 400L
+    val dir = Files.createTempDirectory("hostdb-resume").toString
+    new CrawlPipeline(spark, dir, webCfg, numBuckets = 4)
+      .runBatches(1, 40, 8)
+    assert(spark.read.parquet(s"$dir/hostdb/b1").as[HostRow].collect()
+      .find(_.host == host).get.crawlDelayMs === webCfg.crawlDelayMs)
+    val cfgs = graft.core.ConfigTrie.build(Seq(
+      s"http://$host/" -> graft.core.SiteConfig(cfgId = 1,
+        crawlDelayMs = delay)))
+    val p = new CrawlPipeline(spark, dir, webCfg, numBuckets = 4,
+      configs = cfgs)
+    p.runBatches(2, 40, 8)
+    val starts = spark.read.parquet(s"$dir/batches/b2/fetched")
+      .filter(col("host") === host).select("fetchStart").as[Long]
+      .collect().sorted
+    assert(starts.length >= 2, s"batch 2 fetched ${starts.length} $host pages")
+    val gaps = starts.toSeq.sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    assert(gaps.forall(_ >= delay), s"gaps below $delay ms: $gaps")
+    assert(spark.read.parquet(s"$dir/hostdb/b2").as[HostRow].collect()
+      .find(_.host == host).get.crawlDelayMs === delay)
   }
 
   test("link histograms keep the top-K per host: links desc, then host asc") {
