@@ -60,13 +60,25 @@ final class CommitLog(root: String) {
   CommitLog.acquireProcessLock(dir)
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  def commits(): Seq[Commit] =
-    Option(dir.listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".json"))
-      .sortBy(_.getName)
-      .map(f => mapper.readValue(f, classOf[Commit]))
-      .toSeq
+  // parsed commits by file name: a commit file is renamed into place once
+  // and never rewritten, so each is parsed once per CommitLog
+  private val parsed = scala.collection.mutable.Map[String, Commit]()
+
+  /** The committed log in seq order. The directory is listed on every
+    * call, so commits appended through another CommitLog on this root are
+    * seen; only names not seen before are parsed, and names no longer
+    * listed are dropped.
+    */
+  def commits(): Seq[Commit] = {
+    val names = Option(dir.list()).getOrElse(Array.empty[String])
+      .filter(_.endsWith(".json")).sorted.toSeq
+    val listed = names.toSet
+    parsed.synchronized {
+      parsed.filterInPlace((name, _) => listed(name))
+      names.map(name => parsed.getOrElseUpdate(name,
+        mapper.readValue(new File(dir, name), classOf[Commit])))
+    }
+  }
 
   def last(): Option[Commit] = commits().lastOption
 

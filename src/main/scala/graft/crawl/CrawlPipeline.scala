@@ -99,8 +99,6 @@ final class CrawlPipeline(
     fetchTimelimitMs: Long = -1L,
     compactEvery: Int = 4,
     fetcherOverride: Fetcher = null,
-    majorEvery: Int = 8,
-    noExchangeMinBytes: Long = 512L << 20,
     normalizeRules: graft.core.NormalizeRules = graft.core.NormalizeRules.none,
     scoring: ScoringFilter = ScoringFilter.Default)
     extends Serializable {
@@ -291,9 +289,10 @@ final class CrawlPipeline(
       .lastOption
 
   /** Latest version of each key across an ordered list of frames (later
-    * frames win) — the one chain fold, behind the MoR view, `foldChain`
-    * and updatedb's delta write. Shuffle is DELTA-sized (topN-bounded per
-    * frame).
+    * frames win): the one chain fold, behind [[overBase]] (so the MoR view
+    * and every compaction) and updatedb's delta write. Its one exchange
+    * repartitions the frames by `bucket` into `max(1, numBuckets / 8)`
+    * partitions, so its shuffle is delta-sized (topN-bounded per frame).
     */
   private def latestOf(frames: Seq[Dataset[CrawlRow]]): Dataset[CrawlRow] = {
     // single-frame fold is the identity: every delta is itself written
@@ -316,44 +315,38 @@ final class CrawlPipeline(
       .as[CrawlRow]
   }
 
-  /** Resolve a commit's frontier view — Iceberg merge-on-read semantics:
-    * base snapshot minus keys present in any delta, union the latest
-    * delta version of each key. The delta chain is bounded by
-    * `compactEvery`, so the delta union (and the anti-join's broadcast
-    * side) stays topN-bounded; the base scan remains untouched columnar
-    * parquet. A full snapshot (no deltas) reads directly.
+  /** A folded delta chain `latest` resolved over the base snapshot at
+    * `basePath` — Iceberg merge-on-read semantics: base minus the keys
+    * present in the chain, union the chain's latest version of each key.
+    * The chain is bounded by `compactEvery`, so its keys (the anti-join's
+    * broadcast side) stay topN-bounded; the base scan remains untouched
+    * columnar parquet.
     */
-  private[crawl] def viewOf(c: Commit): Dataset[CrawlRow] = {
+  private def overBase(basePath: String, latest: Dataset[CrawlRow])
+      : Dataset[CrawlRow] =
+    // unionByName: a partitionBy-layout base read appends `bucket` last,
+    // while delta files carry case-class column order
+    readFrontier(basePath)
+      .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
+        "left_anti")
+      .unionByName(latest.toDF())
+      .as[CrawlRow]
+
+  /** Resolve a commit's frontier view: its delta chain folded over its
+    * base snapshot. A full snapshot (no deltas) reads directly.
+    */
+  private[crawl] def viewOf(c: Commit): Dataset[CrawlRow] =
     if (c.deltas.isEmpty) readFrontier(c.frontierPath)
-    else {
-      val latest = latestOf(c.deltas.map(readFrontier))
-      // unionByName: a partitionBy-layout base read appends `bucket` last,
-      // while delta files carry case-class column order
-      readFrontier(c.frontierPath)
-        .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
-          "left_anti")
-        .unionByName(latest.toDF())
-        .as[CrawlRow]
-    }
-  }
+    else overBase(c.frontierPath, latestOf(c.deltas.map(readFrontier)))
 
-  private def dirBytes(path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
-  }
-
-  /** True when the NEXT compaction should bin-pack (major). */
-  private def nextCompactionIsMajor(): Boolean = {
-    val n = log.commits().count(c =>
-      c.stage == "compact" || c.metrics.contains("compacted"))
-    majorEvery > 0 && n % majorEvery == majorEvery - 1
-  }
+  /** The last committed frontier state, or a clear failure on a root
+    * that has none.
+    */
+  private def currentState(): Commit = lastState().getOrElse(
+    throw new IllegalStateException("no frontier committed yet"))
 
   /** The current frontier state as a Dataset (test/ops surface). */
-  def frontierState(): Dataset[CrawlRow] =
-    viewOf(lastState().getOrElse(
-      throw new IllegalStateException("no frontier committed yet")))
+  def frontierState(): Dataset[CrawlRow] = viewOf(currentState())
 
   /** Compact the delta chain into a full snapshot (the Iceberg MoR
     * compaction job). No-op when the state is already a full snapshot.
@@ -362,83 +355,31 @@ final class CrawlPipeline(
     lastState().filter(_.deltas.nonEmpty).foreach { c =>
       val t0 = System.nanoTime()
       foldChain(c.batchId, "compact", now, c.frontierPath,
-        c.deltas.map(readFrontier)) { _ =>
+        c.deltas.map(readFrontier)) {
         Map("compactWallMs" -> (System.nanoTime() - t0) / 1e6)
       }
     }
 
   /** Fold a delta chain (ordered frames, later wins) over the base
-    * snapshot at `basePath` and commit the full snapshot as `stage` — the
-    * one chain compaction behind both `compact` and updatedb's compacting
-    * merge. `metrics` gets whether the compaction was major. The name
-    * holds no stage name, so per-stage tracing charges its Spark jobs to
-    * the calling stage.
-    *
-    * Minor by default, WITHOUT the full-width exchange (the measured
-    * scaling soft spot of round 2: repartitioning every frontier row for
-    * the snapshot write was memory-bandwidth bound at 0.54-0.62
-    * efficiency). The base scan's tasks are already bucket-aligned — each
-    * parquet split holds rows of exactly one `bucket=N` directory — so
-    * untouched rows stream scan->writer with no exchange, next to the
-    * folded chain's (topN-bounded) small repartition, in one write job.
-    * Each minor compaction thus adds ~numBuckets delta files to the
-    * snapshot instead of rewriting one file per bucket; every
-    * majorEvery-th compaction bin-packs through the full exchange
-    * (Iceberg's minor/major compaction split).
-    *
-    * A base below `noExchangeMinBytes` also takes the exchange: the
-    * exchange-free path pays fixed overheads that only amortize once the
-    * avoided exchange is big enough. Measured on this box at 4 cores
-    * (write pattern alone): 66MB base — exchange wins 2.7s vs 5.3s;
-    * 178MB — parity; 534MB — no-exchange wins 4.5s vs 7.6s; 1.8GB — 14s
-    * vs 18-24s. At the 10^10-row/2TB design point the exchange would
-    * serialize the whole frontier through shuffle files.
+    * snapshot at `basePath` and commit the full snapshot as `stage`
+    * through [[writeSnapshot]] — the one chain compaction behind both
+    * `compact` and updatedb's compacting merge. `metrics` is evaluated
+    * after the write. The name holds no stage name, so per-stage tracing
+    * charges its Spark jobs to the calling stage.
     */
   private def foldChain(batchId: String, stage: String, now: Long,
       basePath: String, chain: Seq[Dataset[CrawlRow]])(
-      metrics: Boolean => Map[String, Double]): Unit = {
-    // persisted: the folded chain feeds TWO jobs (base anti-join keys +
-    // the write) — without it the whole chain lineage would recompute
+      metrics: => Map[String, Double]): Unit = {
+    // persisted: the folded chain feeds both the anti-join's broadcast
+    // keys and the write; the key side is column-pruned, so its exchange
+    // is not reused and the chain (on updatedb's branch, its frontier
+    // scan too) would run twice
     val latest = latestOf(chain)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val baseUntouched = readFrontier(basePath)
-        .join(broadcast(latest.select(col("urlHash"))), Seq("urlHash"),
-          "left_anti")
-      val major = nextCompactionIsMajor()
-      val baseBytes = dirBytes(basePath)
-      val write: (DataFrame, String) => Unit =
-        if (major || baseBytes < noExchangeMinBytes) writeSnapshot
-        else {
-          // Size the scan splits from the BASE SNAPSHOT size so scan
-          // parallelism replaces exchange parallelism at every scale: with
-          // the default 128MB maxPartitionBytes a small frontier packs many
-          // bucket files into ONE task, which (a) single-threads the write
-          // and (b) makes the dynamic-partition writer sort mixed-bucket
-          // rows per task (measured: the "exchange-free" compaction slower
-          // than the exchange at bench scale). One-file-per-task splits
-          // keep each task on a single bucket: constant-key sort, one
-          // output file, full parallelism. The folded chain arrives
-          // bucket-partitioned from `latestOf`.
-          val targetSplits =
-            math.max(1, 4 * spark.sparkContext.defaultParallelism)
-          val per = math.max(1L << 20,
-            math.min(128L << 20, baseBytes / targetSplits))
-          (df: DataFrame, path: String) => {
-            val conf = spark.conf
-            val prevMax =
-              conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-            try {
-              conf.set("spark.sql.files.maxPartitionBytes", per.toString)
-              df.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-                .parquet(path)
-            } finally conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-          }
-        }
-      runStage[CrawlRow](batchId, stage, now, Table.Snapshot,
-        baseUntouched.unionByName(latest.toDF()), bucketCounts)(
-        write, (_, _) => metrics(major))
-    } finally latest.unpersist()
+    try runStage[CrawlRow](batchId, stage, now, Table.Snapshot,
+      overBase(basePath, latest), bucketCounts)(
+      writeSnapshot, (_, _) => metrics)
+    finally latest.unpersist()
   }
 
   // -------------------------------------------------------------- generate
@@ -513,8 +454,9 @@ final class CrawlPipeline(
     // then exact global topN (O1+O2). With no per-site caps the rank
     // filter is a LITERAL, which Catalyst rewrites into WindowGroupLimit
     // (partial top-k BEFORE the window shuffle — the frontier never
-    // shuffles un-capped rows); per-site caps fall back to a column
-    // filter bounded by the trie's max cap so the pushdown still prunes.
+    // shuffles un-capped rows). Per-site caps filter on each row's own
+    // `cap` column instead, which gets no such pushdown: that window
+    // shuffles every eligible row.
     val defaultCap = maxPerHost
     // ScoringFilter generatorSortValue: ranking/selection Column (Default
     // = the score itself, so the default plan is unchanged)
@@ -761,6 +703,9 @@ final class CrawlPipeline(
     */
   def updatedb(frontier: Dataset[CrawlRow], parsed: Dataset[ParsedPage],
       batchId: String, now: Long): Dataset[CrawlRow] = {
+    // the state this batch merges into; a root with none fails here,
+    // before any Spark work
+    val prev = currentState()
     val nb = numBuckets
     val sched = scheduleCfg
     val depthCap = maxDepth
@@ -860,24 +805,20 @@ final class CrawlPipeline(
         // per batch made the snapshot exchange the merge stage's scaling
         // bottleneck (0.60 efficiency); here the per-batch merge cost is
         // O(delta) and the full-width exchange is amortized over the chain.
-        val prev = lastState()
         def merged() = Map("mergeWallMs" -> (System.nanoTime() - t0) / 1e6)
-        prev.filter(_.deltas.size < compactEvery - 1) match {
-          case Some(base) =>
-            // the fold's bucket exchange is the delta write's layout
-            runStage[CrawlRow](batchId, "updatedb", now, Table.Delta(base),
-              latestOf(frames), bucketCounts)(
-              _.write.mode(SaveMode.Overwrite).parquet(_),
-              (_, _) => merged())
-          case None =>
-            // compacting merge: fold the chain + this batch into a full
-            // snapshot
-            foldChain(batchId, "updatedb", now, prev.fold("")(_.frontierPath),
-              prev.fold(Seq.empty[String])(_.deltas).map(readFrontier) ++
-                frames) {
-              major => merged() + ("compacted" -> (if (major) 2.0 else 1.0))
-            }
-        }
+        if (prev.deltas.size < compactEvery - 1)
+          // the fold's bucket exchange is the delta write's layout
+          runStage[CrawlRow](batchId, "updatedb", now, Table.Delta(prev),
+            latestOf(frames), bucketCounts)(
+            _.write.mode(SaveMode.Overwrite).parquet(_),
+            (_, _) => merged())
+        else
+          // compacting merge: fold the chain + this batch into a full
+          // snapshot
+          foldChain(batchId, "updatedb", now, prev.frontierPath,
+            prev.deltas.map(readFrontier) ++ frames) {
+            merged() + ("compacted" -> 1.0)
+          }
       } finally side.destroy()
     } finally discAgg.unpersist()
     frontierState()

@@ -317,71 +317,87 @@ object Dedup {
       if (e.sparkSession.sparkContext.getCheckpointDir.isDefined)
         e.checkpoint(eager = false)
       else e.localCheckpoint(eager = false)
+    // a local checkpoint keeps its rows in the persisted RDD under its
+    // LogicalRDD, which Dataset.unpersist (the query cache) never reaches
+    def release(e: DataFrame): Unit = e.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
     val canonEdges = canon(edges.select(
       col(edges.columns(0)).cast("long").as("u"),
       col(edges.columns(1)).cast("long").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Round-7 small-graph fast path: below `driverCap` edges (hard cap,
-    // ~1.6 MB at the default — the same bounded-driver-sample pattern as
-    // the IVF/PQ trainers and the capped exact near-dup scan), run
-    // union-find on the driver instead of O(log n) star ROUNDS of Spark
-    // jobs: each round costs 4-6 exchanges + a checkpoint action, which
-    // at near-dup-pair edge counts (tens to thousands) is pure scheduler
-    // overhead. Labels are identical by construction: component = MIN
-    // node id, order-independent. Graphs above the cap take the
-    // unchanged large-star/small-star path.
-    val edgeCount = canonEdges.count()
-    if (edgeCount <= driverCap) {
-      val es = canonEdges.as[(Long, Long)](
-        org.apache.spark.sql.Encoders.product[(Long, Long)]).collect()
-      canonEdges.unpersist()
-      val parent = scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+    // the caches are released however the body ends: canonEdges and each
+    // superseded round in `finally`; the last round backs the returned
+    // labels, so it is released only when the body throws
+    var cur: DataFrame = null
+    var done = false
+    try {
+      // Round-7 small-graph fast path: below `driverCap` edges (hard cap,
+      // ~1.6 MB at the default — the same bounded-driver-sample pattern as
+      // the IVF/PQ trainers and the capped exact near-dup scan), run
+      // union-find on the driver instead of O(log n) star ROUNDS of Spark
+      // jobs: each round costs 4-6 exchanges + a checkpoint action, which
+      // at near-dup-pair edge counts (tens to thousands) is pure scheduler
+      // overhead. Labels are identical by construction: component = MIN
+      // node id, order-independent. Graphs above the cap take the
+      // unchanged large-star/small-star path.
+      val edgeCount = canonEdges.count()
+      if (edgeCount <= driverCap) {
+        val es = canonEdges.as[(Long, Long)](
+          org.apache.spark.sql.Encoders.product[(Long, Long)]).collect()
+        val parent = scala.collection.mutable.LongMap[Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) {
+            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+          }
+          r
         }
-        r
+        es.foreach { case (u, v) =>
+          val ru = find(u); val rv = find(v)
+          if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+        }
+        val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray
+          .distinct
+        val minOfRoot = scala.collection.mutable.LongMap[Long]()
+        nodes.foreach { n =>
+          val r = find(n)
+          minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
+        }
+        val rows = nodes.map(n => (n, minOfRoot(find(n))))
+        val s = edges.sparkSession
+        import s.implicits._
+        return s.createDataset(scala.collection.immutable.ArraySeq
+          .unsafeWrapArray(rows)).toDF("node", "component")
       }
-      es.foreach { case (u, v) =>
-        val ru = find(u); val rv = find(v)
-        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+      cur = ckpt(canonEdges)
+      var lastSum = checksum(cur)
+      canonEdges.unpersist()
+      var it = 0
+      var converged = false
+      while (it < maxIter && !converged) {
+        val prev = cur
+        cur = ckpt(smallStar(largeStar(prev)))
+        val sum = try checksum(cur) finally release(prev)
+        converged = sum == lastSum
+        lastSum = sum
+        it += 1
       }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray
-        .distinct
-      val minOfRoot = scala.collection.mutable.LongMap[Long]()
-      nodes.foreach { n =>
-        val r = find(n)
-        minOfRoot(r) = math.min(minOfRoot.getOrElse(r, n), n)
-      }
-      val rows = nodes.map(n => (n, minOfRoot(find(n))))
-      val s = edges.sparkSession
-      import s.implicits._
-      return s.createDataset(scala.collection.immutable.ArraySeq
-        .unsafeWrapArray(rows)).toDF("node", "component")
+      // star state: each node's component is its minimum symmetric neighbor
+      // (the root's smallest neighbor is larger than itself; least() keeps
+      // the root labeled with its own id)
+      val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
+      done = true
+      sym.groupBy("u").agg(min(col("v")).as("mn"))
+        .select(col("u").as("node"), least(col("mn"), col("u")).as("component"))
+    } finally {
+      canonEdges.unpersist()
+      if (!done) Option(cur).foreach(release)
     }
-    var cur = ckpt(canonEdges)
-    var lastSum = checksum(cur)
-    canonEdges.unpersist()
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val next = ckpt(smallStar(largeStar(cur)))
-      val sum = checksum(next)
-      cur.unpersist()
-      cur = next
-      converged = sum == lastSum
-      lastSum = sum
-      it += 1
-    }
-    // star state: each node's component is its minimum symmetric neighbor
-    // (the root's smallest neighbor is larger than itself; least() keeps
-    // the root labeled with its own id)
-    val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
-    sym.groupBy("u").agg(min(col("v")).as("mn"))
-      .select(col("u").as("node"), least(col("mn"), col("u")).as("component"))
   }
 
   /** Cluster-level dedup: MinHash near-dup PAIRS -> connected components

@@ -73,7 +73,7 @@ object PackingOps {
     // DuckDB can afford the window-over-everything form at oracle scale;
     // the exclusive prefix sum reproduces the blocked result exactly
     "q_pack_sequences" ->
-      ("SELECT doc_id, n_toks, (cum - n_toks) // 4096 AS shard FROM (" +
+      ("SELECT doc_id, n_toks, CAST((cum - n_toks) // 4096 AS BIGINT) AS shard FROM (" +
         "SELECT doc_id, n_toks, sum(n_toks) OVER (ORDER BY doc_id " +
         "ROWS UNBOUNDED PRECEDING) AS cum FROM (" +
         "SELECT doc_id, len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_toks " +

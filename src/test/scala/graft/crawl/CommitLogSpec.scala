@@ -62,4 +62,23 @@ class CommitLogSpec extends AnyFunSuite {
       assert(log.nextSeq() === 4L)
     } finally CommitLog.releaseProcessLock(root.toString)
   }
+
+  test("two logs on one root each see the other's appends in seq order") {
+    val root = Files.createTempDirectory("committwo").toString
+    def commit(seq: Long) = Commit(seq, s"b$seq", "generate", "complete",
+      s"/r/batches/b$seq/fetchlist", seq, Map("all" -> seq), Map.empty, seq)
+    val a = new CommitLog(root)
+    val b = new CommitLog(root)
+    try {
+      a.append(commit(0L))
+      assert(b.commits() === Seq(commit(0L)))
+      b.append(commit(1L))
+      // `a` parsed seq 0 already; seq 1 is new to it
+      assert(a.commits() === Seq(commit(0L), commit(1L)))
+      a.append(commit(2L))
+      assert(b.commits() === Seq(commit(0L), commit(1L), commit(2L)))
+      assert(a.commits() === b.commits())
+      assert(b.nextSeq() === 3L)
+    } finally CommitLog.releaseProcessLock(root)
+  }
 }

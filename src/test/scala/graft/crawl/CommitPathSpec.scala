@@ -69,4 +69,22 @@ class CommitPathSpec extends AnyFunSuite {
     val paths = loop.filter(i => lines(i).contains("$root/"))
     assert(paths.isEmpty, s"hand-built paths in runBatches:\n${show(paths)}")
   }
+
+  test("every frontier snapshot is written by writeSnapshot, and no stage " +
+    "sets a session conf") {
+    // a second snapshot writer (or one that tunes the shared session's
+    // read settings around its write) is a second compaction path, and a
+    // session-global setting leaks into concurrent readers
+    val confSets = sites("conf.set(")
+    assert(confSets.isEmpty, s"session conf set:\n${show(confSets)}")
+    val writes = sites("""partitionBy("bucket")""")
+    assert(writes.size === 1,
+      s"${writes.size} bucket-partitioned writes:\n${show(writes)}")
+    // writeSnapshot is one expression: it ends at the first blank line
+    val start = lines.indexWhere(_.contains("private def writeSnapshot("))
+    assert(start >= 0, s"no writeSnapshot in $file")
+    val end = lines.indexWhere(_.trim.isEmpty, start)
+    assert(start < writes.head && writes.head < end,
+      s"bucket-partitioned write outside writeSnapshot:\n${show(writes)}")
+  }
 }

@@ -364,33 +364,6 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(after === before)
   }
 
-  test("exchange-free minor compaction: state identical to the exchange path") {
-    // noExchangeMinBytes=0 forces the scan-parallel (no base exchange)
-    // compaction writer at test scale; majorEvery disabled so every
-    // compaction takes the minor path. State must equal the exchange run.
-    val cfg = webCfg.copy(numHosts = 5, pagesPerHost = 12)
-    def run(minBytes: Long): Set[(String, Int, Long, Float, Int)] = {
-      val dir = Files.createTempDirectory(s"crawl-noex-$minBytes").toString
-      val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4,
-        compactEvery = 2, majorEvery = 0, noExchangeMinBytes = minBytes)
-      p.runBatches(4, 40, 8)
-      p.compact(now = 1700000000000L + 99 * 3600000L)
-      // the two-observation (base write + delta append) lineage counts of
-      // the no-exchange writer must also match the files exactly
-      val c = p.lastState().get
-      val actual = spark.read.parquet(c.frontierPath)
-        .groupBy(col("bucket")).count().as[(Int, Long)].collect()
-        .map { case (b, n) => b.toString -> n }.toMap
-      assert(c.partitionCounts === actual,
-        s"minBytes=$minBytes: write-pass counts drifted from files")
-      p.frontierState().collect()
-        .map(r => (r.url, r.status, r.fetchTime, r.score, r.distance)).toSet
-    }
-    val noExchange = run(0L)
-    val exchange = run(Long.MaxValue)
-    assert(noExchange === exchange)
-  }
-
   test("updatedb frontier probe and merge plan with NO shuffle above the " +
     "frontier scan and no broadcast exchange") {
     // the probe is the merge's own touched-row membership filter: the
@@ -576,6 +549,16 @@ class CrawlParitySpec extends AnyFunSuite {
       assert(left.isEmpty, s"compactEvery=$every left cached RDDs: " +
         left.map(sc.getPersistentRDDs(_).toDebugString.linesIterator.next()))
     }
+  }
+
+  test("updatedb on a root with no committed state fails clearly") {
+    val dir = Files.createTempDirectory("crawl-udb-fresh").toString
+    val p = new CrawlPipeline(spark, dir, webCfg, numBuckets = 4)
+    val e = intercept[IllegalStateException](p.updatedb(
+      spark.emptyDataset[CrawlRow], spark.emptyDataset[ParsedPage], "b1",
+      1700000000000L))
+    assert(e.getMessage === "no frontier committed yet")
+    assert(p.log.commits().isEmpty)
   }
 
   test("commit-log lineage counts (collected on the write pass) match files") {

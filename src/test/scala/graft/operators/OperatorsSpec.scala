@@ -375,6 +375,23 @@ class OperatorsSpec extends AnyFunSuite {
       s"label join not broadcast:\n${plan.take(2000)}")
   }
 
+  test("connectedComponents releases its caches when the body throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // the edge read fails inside the first action, canonEdges.count()
+    val boom = udf((v: Long) =>
+      if (v >= 0L) throw new IllegalStateException("edge read failed") else v)
+    val edges = spark.range(20).select(col("id").as("src"),
+      boom(col("id")).as("dst"))
+    val e = intercept[Exception](Dedup.connectedComponents(edges))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("edge read failed")),
+      e.toString)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, "left cached RDDs: " +
+      left.map(sc.getPersistentRDDs(_).toDebugString.linesIterator.next()))
+  }
+
   test("connectedComponents uses reliable checkpoint when a checkpoint " +
     "dir is configured (cluster mode), same labels either way") {
     import spark.implicits._
