@@ -77,6 +77,9 @@ final class ConfigTrie private (root: ConfigTrie.Node) extends Serializable {
     best
   }
 
+  /** No URL matches a config: every lookup yields [[SiteConfig.default]]. */
+  def isEmpty: Boolean = root.config.isEmpty && root.children.isEmpty
+
   def configOrDefault(canonicalUrl: String): SiteConfig =
     matchUrl(canonicalUrl).getOrElse(SiteConfig.default)
 }

@@ -5,7 +5,7 @@ package graft.core
   * Pure function `next(state, outcome, now)` re-expressing the reference's
   * schedule semantics (reference: crawl/AbstractFetchSchedule.java:115-209,
   * crawl/DefaultFetchSchedule.java:31-40, crawl/AdaptiveFetchSchedule.java:66-108,
-  * crawl/DbUpdateReducer.java:170-221, fetcher/FetcherReducer.java:588-596):
+  * crawl/DbUpdateReducer.java:170-221):
   *
   *  - SUCCESS, signature changed: status FETCHED, interval adapted down
   *    (adaptive) or kept (default), fetchTime = now + interval
@@ -14,11 +14,11 @@ package graft.core
   *  - RETRY: status RETRY, retries+1, fetchTime = now + 1 day;
   *    retries > retryMax (3) => GONE
   *  - GONE: status GONE, interval *= 1.5
-  *  - fetch error penalty: interval = interval*5 + 30 d (FetcherReducer
-  *    gone-with-interval-penalty path)
-  *  - max-interval clamp at generate time: fetchTime too far in the future
-  *    => interval = 0.9 * maxInterval and forced eligibility
-  *    (AbstractFetchSchedule.java:172-185)
+  *
+  * The generate-time max-interval clamp (fetchTime too far in the future
+  * => interval = 0.9 * maxInterval and forced eligibility,
+  * AbstractFetchSchedule.java:172-185) is a Column step of
+  * `CrawlPipeline.fetchlistPlan`, not a function here.
   *
   * All times epoch millis, intervals in seconds (matching the reference's
   * long/int split, storage/WebPage.java:36-56).
@@ -125,26 +125,5 @@ object Schedule {
       else intervalSec * (1.0f + cfg.incRate)
     math.max(cfg.minIntervalSec,
       math.min(cfg.adaptiveMaxIntervalSec, raw.toInt))
-  }
-
-  /** Fetch-error interval penalty (FetcherReducer.java:588-596):
-    * interval*5 + 30d, capped at maxInterval.
-    */
-  def errorPenaltyInterval(intervalSec: Int, cfg: ScheduleConfig): Int =
-    math.min(cfg.maxIntervalSec.toLong,
-      intervalSec.toLong * 5 + 30L * 24 * 3600).toInt
-
-  /** Generate-time eligibility with max-interval clamp
-    * (AbstractFetchSchedule.java:172-185 + GeneratorMapper shouldFetch).
-    * Returns (eligible, possiblyClampedState).
-    */
-  def shouldFetch(
-      st: ScheduleState,
-      now: Long,
-      cfg: ScheduleConfig = ScheduleConfig()): (Boolean, ScheduleState) = {
-    if (st.fetchTime - now > cfg.maxIntervalSec * 1000L) {
-      val clamped = (cfg.maxIntervalSec * 0.9).toInt
-      (true, st.copy(fetchInterval = clamped, fetchTime = now))
-    } else (st.fetchTime <= now, st)
   }
 }

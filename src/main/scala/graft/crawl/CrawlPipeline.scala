@@ -76,7 +76,7 @@ final class SyntheticFetcher(cfg: WebConfig) extends Fetcher {
   *  - generate: one window shuffle (per-host cap) + TakeOrderedAndProject
   *    for the global topN — never a full sort of the frontier;
   *  - fetch: one repartition by (bucket ^ batch salt); per-host politeness
-  *    is a sequential fold inside `flatMapGroups` (Catalyst-planned
+  *    is a sequential fold inside `flatMapSortedGroups` (Catalyst-planned
   *    MapGroups — the reference's FetchItemQueues without threads);
   *  - parse: narrow map over the batch staging table, no shuffle;
   *  - updatedb: discovered side is pre-aggregated per URL, capping the
@@ -116,7 +116,6 @@ final class CrawlPipeline(
   // DbUpdateReducer.java:111-117 re-match the trie per row)
   @transient private val trieBc =
     spark.sparkContext.broadcast(configs)
-  private val hasPerSiteCaps = configs ne graft.core.ConfigTrie.empty
 
   /** Bucket count of this frontier (ReadApi derives partition-pruning
     * predicates from it).
@@ -403,94 +402,77 @@ final class CrawlPipeline(
   }
 
   /** The fetchlist as an UNEXECUTED plan (split from [[generate]] so specs
-    * can assert on its physical shape: with no per-site config the whole
-    * chain — eligibility cascade, per-host cap, topN, lastBatch stamp —
-    * must plan with zero `DeserializeToObject` over the frontier).
+    * can assert on its physical shape). One columnar pipeline for every
+    * config trie: the F1 cascade (status, retries, [[siteColumns]]'s
+    * `siteOk`, due-or-overdue) with the O3 max-interval clamp, one per-host
+    * `row_number` window filtered by `siteCap`, the exact topN and the
+    * lastBatch stamp — zero `DeserializeToObject` over the frontier.
     */
   private[crawl] def fetchlistPlan(frontier: Dataset[CrawlRow],
       batchId: String, now: Long, topN: Int, maxPerHost: Int)
       : Dataset[CrawlRow] = {
-    val retryMax = scheduleCfg.retryMax
     val maxIntervalMs = scheduleCfg.maxIntervalSec * 1000L
     val clampedInterval = (scheduleCfg.maxIntervalSec * 0.9).toInt
-    val depthCap = maxDepth
-    val trie = trieBc
+    val (siteOk, siteCap) = siteColumns(maxPerHost)
 
-    // F1 eligibility cascade + O3 max-interval clamp. With no per-site
-    // config (the common full-scale case) every check is a pure Column
-    // expression, so the ONLY per-batch full-frontier pass stays inside
-    // WholeStageCodegen with no object decode. The trie path keeps the
-    // typed cascade (F4/F5: depth override + per-node sub-filters); a
-    // parity spec pins the two forms row-for-row.
-    val eligible: Dataset[CrawlRow] = if (!hasPerSiteCaps) {
-      val overdue = col("fetchTime") - lit(now) > lit(maxIntervalMs)
-      frontier
-        .filter(col("status") =!= lit(CrawlStatus.Gone) &&
-          col("retries") <= lit(retryMax) &&
-          col("distance") <= lit(depthCap) &&
-          (col("fetchTime") <= lit(now) || overdue))
-        // order matters: rewrite fetchInterval while fetchTime still holds
-        // the original value `overdue` tests, then clamp fetchTime
-        .withColumn("fetchInterval",
-          when(overdue, lit(clampedInterval)).otherwise(col("fetchInterval")))
-        .withColumn("fetchTime",
-          when(overdue, lit(now)).otherwise(col("fetchTime")))
-        .as[CrawlRow]
-    } else frontier.flatMap { r =>
-      val cfg = trie.value.configOrDefault(r.url)
-      val effDepth =
-        if (cfg.fetchDepth != Int.MaxValue) cfg.fetchDepth else depthCap
-      if (r.status == CrawlStatus.Gone) None
-      else if (r.retries > retryMax) None
-      else if (r.distance > effDepth) None
-      else if (!cfg.acceptsSub(r.url)) None
-      else if (r.fetchTime - now > maxIntervalMs)
-        Some(r.copy(fetchInterval = clampedInterval, fetchTime = now))
-      else if (r.fetchTime <= now) Some(r)
-      else None
-    }
+    // F1 eligibility cascade + O3 max-interval clamp: the ONLY per-batch
+    // full-frontier pass stays inside WholeStageCodegen
+    val overdue = col("fetchTime") - lit(now) > lit(maxIntervalMs)
+    val eligible = frontier
+      .filter(col("status") =!= lit(CrawlStatus.Gone) &&
+        col("retries") <= lit(scheduleCfg.retryMax) && siteOk &&
+        (col("fetchTime") <= lit(now) || overdue))
+      // order matters: rewrite fetchInterval while fetchTime still holds
+      // the original value `overdue` tests, then clamp fetchTime
+      .withColumn("fetchInterval",
+        when(overdue, lit(clampedInterval)).otherwise(col("fetchInterval")))
+      .withColumn("fetchTime",
+        when(overdue, lit(now)).otherwise(col("fetchTime")))
 
-    // A2 per-host cap via ranked window (per-config onceCount override),
-    // then exact global topN (O1+O2). With no per-site caps the rank
-    // filter is a LITERAL, which Catalyst rewrites into WindowGroupLimit
-    // (partial top-k BEFORE the window shuffle — the frontier never
-    // shuffles un-capped rows). Per-site caps filter on each row's own
-    // `cap` column instead, which gets no such pushdown: that window
-    // shuffles every eligible row.
-    val defaultCap = maxPerHost
-    // ScoringFilter generatorSortValue: ranking/selection Column (Default
-    // = the score itself, so the default plan is unchanged)
+    // A2 per-host cap via ranked window, then exact global topN (O1+O2).
+    // A literal cap is rewritten by Catalyst into WindowGroupLimit
+    // (partial top-k BEFORE the window shuffle); a per-site cap filters on
+    // each row's own value, which gets no such pushdown, so that window
+    // shuffles every eligible row. ScoringFilter generatorSortValue is the
+    // rank (Default = the score itself).
     val sortVal = scoring.generatorSortValue(col("score"))
-    val list = if (!hasPerSiteCaps) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("host"))
-        .orderBy(sortVal.desc, col("url").asc)
-      eligible
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= defaultCap)
-        .drop("rn")
-    } else {
-      val withCap = eligible.map { r =>
-        val cfg = trie.value.configOrDefault(r.url)
-        (r, if (cfg.maxPerHost > 0) cfg.maxPerHost else defaultCap)
-      }.withColumnRenamed("_1", "row").withColumnRenamed("_2", "cap")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("row.host"))
-        .orderBy(scoring.generatorSortValue(col("row.score")).desc,
-          col("row.url").asc)
-      withCap
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= col("cap"))
-        .select(col("row.*"))
-    }
-    // lastBatch stamp as a literal column (not a typed map) — keeps the
-    // tail of the plan object-free too
-    list
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("host"))
+      .orderBy(sortVal.desc, col("url").asc)
+    eligible
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= siteCap)
+      .drop("rn")
       .orderBy(sortVal.desc, col("url").asc)
       .limit(topN)
       .withColumn("lastBatch", lit(batchId))
       .as[CrawlRow]
   }
+
+  /** Generate's two per-site Columns: `siteOk` (the row is within its
+    * site's fetch depth and passes its sub-filters, F4/F5) and `siteCap`
+    * (its host's per-batch cap, the onceCount override). With an empty
+    * trie they are literals over `maxDepth` and `maxPerHost`, so the
+    * default plan carries no UDF; otherwise UDFs over the broadcast trie,
+    * at most two trie lookups per row.
+    */
+  private def siteColumns(maxPerHost: Int): (Column, Column) =
+    if (configs.isEmpty)
+      (col("distance") <= lit(maxDepth), lit(maxPerHost))
+    else {
+      val trie = trieBc
+      val depthCap = maxDepth
+      val ok = udf { (url: String, distance: Int) =>
+        val cfg = trie.value.configOrDefault(url)
+        distance <= (if (cfg.fetchDepth != Int.MaxValue) cfg.fetchDepth
+          else depthCap) && cfg.acceptsSub(url)
+      }
+      val cap = udf { (url: String) =>
+        val m = trie.value.configOrDefault(url).maxPerHost
+        if (m > 0) m else maxPerHost
+      }
+      (ok(col("url"), col("distance")), cap(col("url")))
+    }
 
   // ----------------------------------------------------------------- fetch
 
@@ -522,15 +504,12 @@ final class CrawlPipeline(
     // decode/encode), and byte-based coalescing collapses it to one task
     // (measured: identical 24.8s fetch wall at 2 and 32 cores with
     // coalescing on).
-    val sortSc = scoring
     val results = fetchlist
       .groupByKey(r => QueueMode.keyOf(mode, r.host))
-      .flatMapGroups { (qkey, rows) =>
-        // O5 in-queue order: generator sort value desc, url asc — under a
-        // custom ScoringFilter the fetch order follows the same value the
-        // generate rank used (Default = raw score, unchanged plan)
-        val sorted = rows.toArray
-          .sortBy(r => (-sortSc.generatorSortValueScalar(r.score), r.url))
+      // O5 in-queue order: the Column generate ranks by, desc, then url
+      // asc — sorted by the group's own Sort, under MapGroups
+      .flatMapSortedGroups(scoring.generatorSortValue(col("score")).desc,
+        col("url").asc) { (qkey, rows) =>
         // robots cache: one lookup per HOST in the queue group == the
         // per-executor LRU in the reference (robots stay per-host even
         // when the politeness queue is per-domain/IP)
@@ -540,7 +519,7 @@ final class CrawlPipeline(
         val (crawlDelay, lanes) = CrawlPipeline.politeness(trie.value, qkey,
           defaultDelay, defaultLanes)
         val laneAvail = Array.fill(lanes)(now)
-        sorted.iterator.flatMap[FetchResult] { r =>
+        rows.flatMap[FetchResult] { r =>
           val host = r.host
           val lane = laneAvail.zipWithIndex.minBy { case (t, i) => (t, i) }._2
           val start = laneAvail(lane)
@@ -826,36 +805,32 @@ final class CrawlPipeline(
 
   /** The touched frontier rows (fetched or rediscovered this batch),
     * selected by a membership filter over the scan (plan spec-pinned) and
-    * merged in executors by [[CrawlPipeline.mergeRow]]. The ScoringFilter
+    * merged in executors by [[CrawlPipeline.mergeRow]], with each fetched
+    * row's per-site `customIntervalSec` from the trie. The ScoringFilter
     * updateDbScore hook follows as a columnar step whose `contrib` is a
-    * lookup in the same side (null when not rediscovered); filters that
-    * keep stored scores, like Default, skip it.
+    * lookup in the same side (null when not rediscovered); for a filter
+    * that keeps stored scores, like Default, the optimizer drops the step
+    * and its unused lookup.
     */
   private[crawl] def mergeTouched(frontier: Dataset[CrawlRow],
       side: Broadcast[BatchSide], now: Long): Dataset[CrawlRow] = {
     val trie = trieBc
     val sched = scheduleCfg
-    val perSiteIntervals = hasPerSiteCaps
     val touches = udf((h: Long) => side.value.touches(h))
-    val merged = frontier.filter(touches(col("urlHash"))).map { r =>
+    val contrib = udf((h: Long) =>
+      side.value.disc.get(h).map(d => java.lang.Float.valueOf(d._2)).orNull)
+    frontier.filter(touches(col("urlHash"))).map { r =>
       val s = side.value
       val out = s.outcomes.getOrElse(r.urlHash, null)
-      val ci =
-        if (out == null || !perSiteIntervals) 0
+      val ci = if (out == null) 0
         else trie.value.configOrDefault(r.url).customIntervalSec
       CrawlPipeline.mergeRow(r, out,
         s.disc.get(r.urlHash).fold(Int.MaxValue)(_._1), ci, now, sched)
     }
-    if (!scoring.updatesExistingScores) merged
-    else {
-      val contrib = udf((h: Long) =>
-        side.value.disc.get(h).map(d => java.lang.Float.valueOf(d._2)).orNull)
-      merged
-        .withColumn("score", scoring
-          .updateExistingScore(col("score"), contrib(col("urlHash")))
-          .cast("float"))
-        .as[CrawlRow]
-    }
+      .withColumn("score", scoring
+        .updateExistingScore(col("score"), contrib(col("urlHash")))
+        .cast("float"))
+      .as[CrawlRow]
   }
 
   // --------------------------------------------------------------- hostdb

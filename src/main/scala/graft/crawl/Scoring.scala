@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
   * (scoring/ScoringFilters.java:41-130: injectedScore,
   * distributeScoreToOutlinks, updateDbScore, generatorSortValue)
   * re-expressed Spark-first: hooks that run inside typed row logic are
-  * plain scalar functions; the hook that runs over the WHOLE FRONTIER
-  * (updatedb's existing-row score update) is Column-based so the merge
-  * plan stays inside WholeStageCodegen whatever the filter does.
+  * plain scalar functions; the hooks that run over whole tables are
+  * Columns, one definition each, so their plans stay inside
+  * WholeStageCodegen whatever the filter does: updatedb's existing-row
+  * score update, and the generator sort value that both generate's rank
+  * and fetch's in-queue order sort by.
   *
   * [[ScoringFilter.Default]] reproduces this fork's exact hardcoded
   * behavior (no OPIC plugin ships in it): inject = meta-or-1.0, outlink
@@ -44,31 +46,16 @@ trait ScoringFilter extends Serializable {
     * the merge plan (the Spark-first updateDbScore): `score` is the
     * stored score, `contrib` the batch's folded contribution for the row
     * (NULL when the row was not rediscovered this batch). Default:
-    * unchanged.
+    * unchanged, which the optimizer folds away with its `contrib` lookup.
     */
   def updateExistingScore(score: Column, contrib: Column): Column = score
 
-  /** Whether [[updateExistingScore]] is non-identity — when false (the
-    * default) updatedb skips the contribution join entirely, so the
-    * default pipeline plan carries zero cost for the extension point.
-    */
-  def updatesExistingScores: Boolean = false
-
   /** Generator sort value (reference generatorSortValue): the Column
-    * generate ranks and topN-selects by. The fetch stage's IN-QUEUE
-    * ordering follows the same value via [[generatorSortValueScalar]].
+    * generate ranks and topN-selects by, and the fetch stage's in-queue
+    * order (the reference sorts its FetchItemQueues by the value carried
+    * on the key, GeneratorJob SelectorEntry). Default: the raw score.
     */
   def generatorSortValue(score: Column): Column = score
-
-  /** Scalar twin of [[generatorSortValue]] for the fetch scheduler's
-    * in-queue ordering (the reference sorts its FetchItemQueues by the
-    * generator sort value carried on the key, GeneratorJob SelectorEntry).
-    * MUST compute the same function as the Column form — generate decides
-    * WHICH rows fetch, this decides the per-queue order; divergent
-    * implementations would make fetch order disagree with generate rank.
-    * Default: identity (raw score), matching the Column default.
-    */
-  def generatorSortValueScalar(score: Float): Float = score
 }
 
 object ScoringFilter {
@@ -101,6 +88,5 @@ object ScoringFilter {
     override def updateExistingScore(score: Column, contrib: Column)
         : Column =
       score + coalesce(contrib, lit(0.0f))
-    override def updatesExistingScores: Boolean = true
   }
 }

@@ -59,23 +59,6 @@ class ScheduleSpec extends AnyFunSuite {
       cfg.maxIntervalSec)
   }
 
-  test("error penalty: interval*5 + 30d, capped") {
-    assert(Schedule.errorPenaltyInterval(1000, cfg) === 1000 * 5 + 30 * 24 * 3600)
-    assert(Schedule.errorPenaltyInterval(cfg.maxIntervalSec, cfg) ===
-      cfg.maxIntervalSec)
-  }
-
-  test("shouldFetch: due rows eligible; far-future rows clamped to 0.9*max") {
-    val (e1, _) = Schedule.shouldFetch(st0.copy(fetchTime = now - 1), now)
-    assert(e1)
-    val (e2, _) = Schedule.shouldFetch(st0.copy(fetchTime = now + 1000), now)
-    assert(!e2)
-    val far = st0.copy(fetchTime = now + cfg.maxIntervalSec * 1000L + day)
-    val (e3, clamped) = Schedule.shouldFetch(far, now)
-    assert(e3)
-    assert(clamped.fetchInterval === (cfg.maxIntervalSec * 0.9).toInt)
-    assert(clamped.fetchTime === now)
-  }
 }
 
 class ConfigTrieSpec extends AnyFunSuite {

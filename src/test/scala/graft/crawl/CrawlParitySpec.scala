@@ -59,23 +59,74 @@ class CrawlParitySpec extends AnyFunSuite {
         s"(spark=${sparkSeen.size} sim=${simSeen.size})")
   }
 
+  // the per-site trie of the overrides parity case; the plan and clamp
+  // cases plan generate with it too
+  private val siteTrie = graft.core.ConfigTrie.build(Seq(
+    // host 1: slow + parallel politeness
+    "http://www.test-1.example/" -> graft.core.SiteConfig(cfgId = 1,
+      crawlDelayMs = 200L, maxConcurrent = 3),
+    // host 2: tight per-host cap and custom score for discoveries
+    "http://www.test-2.example/" -> graft.core.SiteConfig(cfgId = 2,
+      maxPerHost = 2, customScore = 5.0f, customIntervalSec = 3600),
+    // host 3 subtree: never crawl /private/
+    "http://www.test-3.example/" -> graft.core.SiteConfig(cfgId = 3,
+      subFilters = Seq(graft.core.FilterRule(accept = false,
+        ".*/private/.*".r)))))
+
   test("generate plans object-free with no per-site config " +
     "(columnar F1 cascade + WindowGroupLimit, no DeserializeToObject)") {
-    val pipeline = new CrawlPipeline(spark, root, webCfg, numBuckets = 8)
-    val plan = pipeline
-      .fetchlistPlan(pipeline.frontierState(), "bX",
-        1700000000000L, topN, maxPerHost)
+    def planOf(p: CrawlPipeline) = p
+      .fetchlistPlan(p.frontierState(), "bX", 1700000000000L, topN,
+        maxPerHost)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("DeserializeToObject"),
-      s"frontier rows decoded to objects in generate:\n$plan")
-    assert(plan.contains("WindowGroupLimit"),
-      s"per-host cap did not plan as WindowGroupLimit:\n$plan")
+    // a trie built from no rows (an empty config table) is no per-site
+    // config either
+    Seq(graft.core.ConfigTrie.empty, graft.core.ConfigTrie.build(Nil))
+      .foreach { trie =>
+        val plan = planOf(new CrawlPipeline(spark, root, webCfg,
+          numBuckets = 8, configs = trie))
+        assert(!plan.contains("DeserializeToObject"),
+          s"frontier rows decoded to objects in generate:\n$plan")
+        assert(plan.contains("WindowGroupLimit"),
+          s"per-host cap did not plan as WindowGroupLimit:\n$plan")
+      }
+    // a per-site trie rides the same cascade: its depth, sub-filter and
+    // cap are Columns too, so no frontier row decodes to an object
+    val sitePlan = planOf(new CrawlPipeline(spark, root, webCfg,
+      numBuckets = 8, configs = siteTrie))
+    assert(!sitePlan.contains("DeserializeToObject"),
+      s"frontier rows decoded to objects under a per-site trie:\n$sitePlan")
   }
 
-  test("columnar and typed eligibility cascades agree row-for-row") {
-    // same trick as the merge parity: force the typed path with a config
-    // trie that changes NOTHING (empty rules on an unrelated host), then
-    // pin both forms to identical fetchlists over the same frontier
+  test("fetchlistPlan clamps an overdue row and skips a not-yet-due one " +
+    "(O3, with and without a trie)") {
+    val now = 1700000000000L
+    val sched = graft.core.ScheduleConfig()
+    val host = "http://www.test-2.example/"
+    val overdue = Keys.rowOf(host + "overdue.html", 4, now).copy(
+      fetchTime = now + sched.maxIntervalSec * 1000L + 24L * 3600 * 1000)
+    val notYet = Keys.rowOf(host + "later.html", 4, now).copy(
+      fetchTime = now + 1000L)
+    val frontier = Seq(overdue, notYet).toDS()
+    val dir = Files.createTempDirectory("crawl-clamp").toString
+    Seq(graft.core.ConfigTrie.empty, siteTrie).foreach { trie =>
+      val p = new CrawlPipeline(spark, dir, webCfg, numBuckets = 4,
+        configs = trie)
+      val list = p.fetchlistPlan(frontier, "bX", now, topN, maxPerHost)
+        .collect().map(r => r.url -> r).toMap
+      assert(list.keySet === Set(overdue.url))
+      assert(list(overdue.url).fetchInterval ===
+        (sched.maxIntervalSec * 0.9).toInt)
+      assert(list(overdue.url).fetchTime === now)
+    }
+  }
+
+  test("literal and trie-UDF site Columns agree row-for-row under a " +
+    "no-op trie") {
+    // same trick as the merge parity: take the trie-UDF site Columns with
+    // a config trie that changes NOTHING (empty rules on an unrelated
+    // host), then pin them to the literal Columns' fetchlist over the
+    // same frontier
     val pipeline = new CrawlPipeline(spark, root, webCfg, numBuckets = 8)
     val noopTrie = graft.core.ConfigTrie.build(
       Seq("http://never-crawled.example/" -> graft.core.SiteConfig(cfgId = 9)))
@@ -188,17 +239,7 @@ class CrawlParitySpec extends AnyFunSuite {
   }
 
   test("per-site config overrides hold parity (delay/lanes/caps/score/depth)") {
-    val cfgs = graft.core.ConfigTrie.build(Seq(
-      // host 1: slow + parallel politeness
-      "http://www.test-1.example/" -> graft.core.SiteConfig(cfgId = 1,
-        crawlDelayMs = 200L, maxConcurrent = 3),
-      // host 2: tight per-host cap and custom score for discoveries
-      "http://www.test-2.example/" -> graft.core.SiteConfig(cfgId = 2,
-        maxPerHost = 2, customScore = 5.0f, customIntervalSec = 3600),
-      // host 3 subtree: never crawl /private/
-      "http://www.test-3.example/" -> graft.core.SiteConfig(cfgId = 3,
-        subFilters = Seq(graft.core.FilterRule(accept = false,
-          ".*/private/.*".r)))))
+    val cfgs = siteTrie
     val dir = Files.createTempDirectory("crawl-cfg").toString
     val cfg = webCfg.copy(numHosts = 5, pagesPerHost = 15)
     val p = new CrawlPipeline(spark, dir, cfg, numBuckets = 4, configs = cfgs)

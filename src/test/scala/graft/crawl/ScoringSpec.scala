@@ -46,10 +46,11 @@ class ScoringSpec extends AnyFunSuite {
   }
 
   test("fetch in-queue order follows generatorSortValue " +
-    "(scalar twin of the generate rank)") {
-    // a REVERSING sort value: generate ranks score-ASC and the fetch
-    // queue must serve the same order — under Default (identity) this is
-    // the raw score-desc order pinned by the parity suite
+    "(the one Column generate ranks by)") {
+    // a REVERSING sort value, overridden only as the Column: generate
+    // ranks score-ASC and the fetch queue must serve the same order —
+    // under Default (identity) this is the raw score-desc order pinned by
+    // the parity suite
     val reversed = new ScoringFilter {
       def injectedScore(url: String, metaScore: Option[Float]): Float =
         metaScore.getOrElse(1.0f)
@@ -59,7 +60,6 @@ class ScoringSpec extends AnyFunSuite {
           customScore: Float): Float = contrib
       override def generatorSortValue(score: org.apache.spark.sql.Column)
           : org.apache.spark.sql.Column = -score
-      override def generatorSortValueScalar(score: Float): Float = -score
     }
     // single lane + a wall gap so fetchStart strictly increases in queue
     // order; batch 2 has score variety (seed 1.0 vs discovered contribs)
