@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Round-7 optimization harness (guide §1: measure first, noop-sink
@@ -16,7 +19,11 @@ import org.apache.spark.sql.SparkSession
   *   (guide §1.4) for sink-isolated timing;
   * - `--plans <dir>` writes <dir>/<name>.txt with explain("formatted");
   * - with no query names, runs every SparkEntry.queries entry sorted.
-  * Emits one JSON line: {"queries":{name:sec,...},"reps":N,"sink":...}.
+  * Emits one JSON line: {"queries":{name:[sec,...]},"build_s":{name:[sec,
+  * ...]},"build_jobs":{name:[n,...]},"reps":N,"sink":...}, one value per
+  * rep: the total (build + action), the part spent building the
+  * DataFrame, and the Spark jobs started while it was built (eager driver
+  * work such as a collected probe side or a trained model).
   */
 object BenchExtra {
 
@@ -66,13 +73,26 @@ object BenchExtra {
       }
     }
 
+    // jobs started under each build's job group; complete once stop()
+    // has drained the listener bus
+    val sc = spark.sparkContext
+    val buildJobs = new ConcurrentHashMap[String, Integer]()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => buildJobs.merge(g, 1, (a, b) => a + b))
+    })
     val results = run.map { case (name, fn) =>
-      spark.sparkContext.setJobDescription(name)
-      val samples = (1 to reps).map { _ =>
+      val samples = (1 to reps).map { rep =>
+        sc.setJobGroup(s"build:$name:$rep", name)
         val t0 = System.nanoTime()
+        var t1 = t0
         val ok =
           try {
             val df = fn(spark, sfDir)
+            t1 = System.nanoTime()
+            sc.setJobGroup(s"run:$name:$rep", name)
             if (noop) df.write.format("noop").mode("overwrite").save()
             else df.count(): Unit
             true
@@ -80,17 +100,25 @@ object BenchExtra {
             case e: Throwable =>
               System.err.println(s"[bench-extra] $name failed: $e"); false
           }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        if (ok) ((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9)
+        else (-1.0, -1.0)
       }
-      spark.sparkContext.setJobDescription(null)
+      sc.clearJobGroup()
       name -> samples
     }
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(s => f"$s%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    println(s"""EXTRA{"queries":$qs,"reps":$reps,""" +
-      s""""sink":"${if (noop) "noop" else "count"}","sf":"$sfDir"}""")
     spark.stop()
+    def obj(f: (String, Int, (Double, Double)) => String) =
+      results.map { case (k, v) =>
+        "\"" + k + "\":" + v.zipWithIndex.map { case (x, i) =>
+          f(k, i + 1, x) }.mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+    val qs = obj((_, _, x) => f"${x._1}%.3f")
+    val bs = obj((_, _, x) => f"${x._2}%.3f")
+    val js = obj((k, rep, _) =>
+      buildJobs.getOrDefault(s"build:$k:$rep", 0).toString)
+    println(s"""EXTRA{"queries":$qs,"build_s":$bs,"build_jobs":$js,""" +
+      s""""reps":$reps,"sink":"${if (noop) "noop" else "count"}",""" +
+      s""""sf":"$sfDir"}""")
     Runtime.getRuntime.halt(0)
   }
 }

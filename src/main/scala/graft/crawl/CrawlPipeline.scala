@@ -862,28 +862,28 @@ final class CrawlPipeline(
     val hists = spark.sparkContext.broadcast((
       CrawlPipeline.topLinks(links.map(l => (l._2, l._1, l._3))),
       CrawlPipeline.topLinks(links)))
-    val out = frontier.groupBy(col("host")).agg(
-      count(lit(1)).as("pages"),
-      count_if(col("status") === CrawlStatus.Fetched ||
-        col("status") === CrawlStatus.NotModified).as("fetched"),
-      count_if(col("status") === CrawlStatus.Gone).as("gone"),
-      count_if(col("status") === CrawlStatus.Unfetched).as("unfetched"),
-      avg(col("score")).as("avgScore"),
-      max(col("distance")).as("maxDistance"))
-      .as[(String, Long, Long, Long, Long, Double, Int)]
-      .map { case (host, pages, fetched, gone, unf, avgS, maxD) =>
-        val (delay, lanes) = CrawlPipeline.politeness(trie.value, host,
-          defaultDelay, defaultLanes)
-        val (in, outH) = hists.value
-        HostRow(host, pages, fetched, gone, unf, avgS, maxD, delay, lanes,
-          in.getOrElse(host, Map.empty), outH.getOrElse(host, Map.empty),
-          batchId)
-      }
-    val res = runStage[HostRow](batchId, "hostdb", now,
-      Table.Batch(s"$root/hostdb/$batchId"), out)(
-      _.write.mode(SaveMode.Overwrite).parquet(_))
-    hists.destroy()
-    res
+    try {
+      val out = frontier.groupBy(col("host")).agg(
+        count(lit(1)).as("pages"),
+        count_if(col("status") === CrawlStatus.Fetched ||
+          col("status") === CrawlStatus.NotModified).as("fetched"),
+        count_if(col("status") === CrawlStatus.Gone).as("gone"),
+        count_if(col("status") === CrawlStatus.Unfetched).as("unfetched"),
+        avg(col("score")).as("avgScore"),
+        max(col("distance")).as("maxDistance"))
+        .as[(String, Long, Long, Long, Long, Double, Int)]
+        .map { case (host, pages, fetched, gone, unf, avgS, maxD) =>
+          val (delay, lanes) = CrawlPipeline.politeness(trie.value, host,
+            defaultDelay, defaultLanes)
+          val (in, outH) = hists.value
+          HostRow(host, pages, fetched, gone, unf, avgS, maxD, delay, lanes,
+            in.getOrElse(host, Map.empty), outH.getOrElse(host, Map.empty),
+            batchId)
+        }
+      runStage[HostRow](batchId, "hostdb", now,
+        Table.Batch(s"$root/hostdb/$batchId"), out)(
+        _.write.mode(SaveMode.Overwrite).parquet(_))
+    } finally hists.destroy()
   }
 
   // ----------------------------------------------------------------- loop

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.XxHash64
 
-/** Near-duplicate detection for corpus curation: MinHash+LSH and SimHash.
+/** Near-duplicate detection for corpus curation: MinHash+LSH and SimHash
+  * over the `documents` table, read through [[Tables.read]].
   *
   * Both follow the shingle -> hash -> band -> bucket-join shape: candidate
   * generation is an equi-join on a band key (one hash-partitioned shuffle,
@@ -19,9 +20,6 @@ import graft.core.XxHash64
   * term-profile hashing) generalized to cross-document near-dup search.
   */
 object Dedup {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Word shingles (n-grams of tokens) of a text. */
   def shingles(text: String, n: Int = 3): Array[String] = {
@@ -89,7 +87,7 @@ object Dedup {
     // driver query fixes its input size instead of riding corpus growth.
     // (At production scale the cap would be a semi-join on an id sample,
     // not TakeOrdered — this form keeps the DuckDB oracle expressible.)
-    val d0 = docs(s, dir).select(col("doc_id"), col("text"))
+    val d0 = Tables.read(s, dir, "documents").select(col("doc_id"), col("text"))
     val d = if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs) else d0
     // band key: hash of each signature slice
     def sliceKeys(sig: Column): Column =
@@ -238,7 +236,8 @@ object Dedup {
   def simHashPairs(s: SparkSession, dir: String, maxHamming: Int = 3)
       : DataFrame = {
     val shUdf = udf(simHash _)
-    val d = docs(s, dir).select(col("doc_id"), shUdf(col("text")).as("sh"))
+    val d = Tables.read(s, dir, "documents")
+      .select(col("doc_id"), shUdf(col("text")).as("sh"))
     bandedPairs(d, "doc_id", "sh", hammingBands, 1)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
         hamming.as("hamming"))
@@ -412,7 +411,7 @@ object Dedup {
       minBandMatches = 2, capDocs = capDocs)
       .select(col("doc_a"), col("doc_b"))
     val cc = connectedComponents(pairs)
-    val d0 = docs(s, dir).select(col("doc_id"))
+    val d0 = Tables.read(s, dir, "documents").select(col("doc_id"))
     val d = if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs) else d0
     // the CC label table holds only nodes incident to a near-dup pair —
     // tiny next to the corpus, so the label join must broadcast (the

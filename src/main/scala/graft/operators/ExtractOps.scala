@@ -39,7 +39,7 @@ object ExtractOps {
     * column-rule shapes (keyword pick, positional capture, numeric cast).
     */
   def fieldExtract(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.read(s, dir, "documents")
     applyRules(docs, "text", Seq("doc_id"), Seq(
       FieldRule("op", "(scan|join|merge|sort)"),
       FieldRule("after_the", "the ([a-z]+)"),
@@ -78,7 +78,7 @@ object ExtractOps {
     * "op argument" phrases inside the block starting at the first `scan`.
     */
   def listExtract(s: SparkSession, dir: String): DataFrame =
-    applyListRule(s.read.parquet(s"$dir/documents.parquet"), "text",
+    applyListRule(Tables.read(s, dir, "documents"), "text",
       Seq("doc_id"),
       ListRule("(scan.*)", "(scan|join|merge|sort) ([a-z]+)",
         Seq("op" -> 1, "arg" -> 2)))
@@ -101,7 +101,7 @@ object ExtractOps {
     val rule = graft.crawl.Dom.DomListRule("ul.items", "li", Seq(
       graft.crawl.Dom.DomColRule("name", "span.name"),
       graft.crawl.Dom.DomColRule("link", "a", Some("href"))))
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
         rule.extract(renderItemsPage(id, text)).zipWithIndex.map {
@@ -136,7 +136,7 @@ object ExtractOps {
     * interval add, truncation, field extraction.
     */
   def dateCalc(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet").select(
+    Tables.read(s, dir, "events").select(
       col("event_id"),
       (col("ts") + expr("INTERVAL 1 DAY")).as("next_day"),
       date_trunc("day", col("ts")).cast("date").as("day"), // DuckDB yields DATE
@@ -155,7 +155,7 @@ object ExtractOps {
       "&phpsessid=[^&#]*~",
       "/(index|default)\\.html\\?~/?"))
     val norm = udf((u: String) => rules(u))
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"),
         concat(lit("http://h"), (col("doc_id") % 50).cast("string"),
           lit(".example/"),

@@ -29,12 +29,10 @@ import org.apache.spark.sql.functions._
   * deterministic under any partitioning, caching, recompute, or AQE
   * re-plan. (The RDD form required two `mapPartitionsWithIndex` passes to
   * observe the SAME partitioning of one persisted RDD; a replanned second
-  * pass renumbered partitions and mis-assigned offsets.)
+  * pass renumbered partitions and mis-assigned offsets.) The corpus is the
+  * `documents` table, read through [[Tables.read]].
   */
 object PackingOps {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** (doc_id, n_toks, shard) for every document: whitespace token count
     * (the q_token_count semantics) and the doc's fixed-budget shard in
@@ -46,7 +44,7 @@ object PackingOps {
   def packSequences(s: SparkSession, dir: String, budget: Long = 4096L,
       blockSize: Long = 1L << 16): DataFrame = {
     require(budget > 0 && blockSize > 0)
-    val blocked = docs(s, dir)
+    val blocked = Tables.read(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"),
         size(filter(split(col("text"), " "), x => x =!= lit("")))
           .cast("long").as("n_toks"))

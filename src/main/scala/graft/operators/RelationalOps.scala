@@ -15,17 +15,15 @@ import org.apache.spark.sql.functions._
   * the merge join pattern pre-aggregates the fact side BEFORE the join so
   * the join input is |keys|, not |rows|; small dims (nation) broadcast.
   * All float aggregates are rounded in-query — cross-engine bit parity.
+  * Every table is read through [[Tables.read]] with its pinned schema.
   */
 object RelationalOps {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** A1: status histogram (WebTableReader.processStatJob status counts,
     * reference crawl/WebTableReader.java:70-215).
     */
   def statsStatus(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .groupBy(col("o_orderstatus").as("status"))
       .agg(count(lit(1)).as("cnt"))
 
@@ -33,7 +31,7 @@ object RelationalOps {
     * (WebTableReader score stats incl. combiner, :102-144).
     */
   def statsGlobal(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").agg(
+    Tables.read(s, dir, "lineitem").agg(
       count(lit(1)).as("t"),
       round(min(col("l_quantity")), 2).as("min_q"),
       round(max(col("l_quantity")), 2).as("max_q"),
@@ -49,7 +47,7 @@ object RelationalOps {
   def generateTopK(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -64,7 +62,7 @@ object RelationalOps {
   def dedupLatest(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    t(s, dir, "events")
+    Tables.read(s, dir, "events")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_id").as("last_event"),
@@ -76,9 +74,9 @@ object RelationalOps {
     * broadcast join, no shuffle on the dim side.
     */
   def hostAgg(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val n = t(s, dir, "nation")
-    val o = t(s, dir, "orders")
+    val c = Tables.read(s, dir, "customer")
+    val n = Tables.read(s, dir, "nation")
+    val o = Tables.read(s, dir, "orders")
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .join(o, c("c_custkey") === o("o_custkey"))
       .groupBy(col("n_name"))
@@ -95,10 +93,10 @@ object RelationalOps {
     * difference between a feasible and an impossible shuffle.
     */
   def updateMerge(s: SparkSession, dir: String): DataFrame = {
-    val links = t(s, dir, "lineitem")
+    val links = Tables.read(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("links"), round(sum(col("l_quantity")), 2).as("qty"))
-    val o = t(s, dir, "orders")
+    val o = Tables.read(s, dir, "orders")
     o.join(links, o("o_orderkey") === links("l_orderkey"), "full_outer")
       .select(
         coalesce(o("o_orderkey"), links("l_orderkey")).as("okey"),
@@ -113,7 +111,7 @@ object RelationalOps {
   def inlinkTopK(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("l_orderkey"))
       .orderBy(col("l_extendedprice").desc, col("l_linenumber").asc)
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 2)
       .select(col("l_orderkey"), col("l_linenumber"),
@@ -122,7 +120,7 @@ object RelationalOps {
 
   /** A4: min-fold per key (min inlink distance, DbUpdateReducer.java:235-250). */
   def minDistance(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_partkey"))
       .agg(min(col("l_shipdate")).as("first_ship"), count(lit(1)).as("cnt"))
 
@@ -132,8 +130,8 @@ object RelationalOps {
     * check as a broadcast key-membership filter over the frontier scan.
     */
   def seenAntiJoin(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val recent = t(s, dir, "orders")
+    val c = Tables.read(s, dir, "customer")
+    val recent = Tables.read(s, dir, "orders")
       .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
     c.join(recent, c("c_custkey") === recent("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
@@ -141,7 +139,7 @@ object RelationalOps {
 
   /** A1: histogram + numeric stats by category (retries histogram shape). */
   def eventHistogram(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.read(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("total"),
         round(avg(col("value")), 6).as("avg_value"))
@@ -154,7 +152,7 @@ object RelationalOps {
     * |pairs| rows (already collapsed), never |lineitem|.
     */
   def hostLinkHist(s: SparkSession, dir: String): DataFrame = {
-    val pairs = t(s, dir, "lineitem")
+    val pairs = Tables.read(s, dir, "lineitem")
       .groupBy(col("l_suppkey"), col("l_partkey"))
       .agg(count(lit(1)).as("links"))
     val w = Window.partitionBy(col("l_suppkey"))
@@ -169,7 +167,7 @@ object RelationalOps {
     * exercised in StreamingSpec).
     */
   def streamWindow(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.read(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("total"))
       .select(col("w.start").as("ws"), col("event_type"), col("cnt"),
@@ -183,7 +181,7 @@ object RelationalOps {
   def sessionize(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
-    t(s, dir, "events")
+    Tables.read(s, dir, "events")
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .withColumn("new_sess",
         when(col("prev_ts").isNull ||
@@ -203,7 +201,7 @@ object RelationalOps {
     * the subtotal markers in both engines.
     */
   def rollupStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.read(s, dir, "orders")
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2)
         .as("revenue"))

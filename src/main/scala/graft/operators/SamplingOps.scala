@@ -25,11 +25,9 @@ import org.apache.spark.sql.functions._
   * corpus ships at most K rows per map partition for that language,
   * not the whole stratum. The md5 priority is the per-row cost — fine
   * at scale, it is the same digest the signature stage already pays.
+  * The corpus is the `documents` table, read through [[Tables.read]].
   */
 object SamplingOps {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Deterministic per-row priority in [0, 10^9): the md5-derived
     * 64-bit pattern of the key's decimal rendering, folded by UNSIGNED
@@ -49,7 +47,7 @@ object SamplingOps {
       : DataFrame = {
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("pri"), col("doc_id"))
-    docs(s, dir).select(col("doc_id"), col("lang"),
+    Tables.read(s, dir, "documents").select(col("doc_id"), col("lang"),
         priority(col("doc_id")).as("pri"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= perStratum)

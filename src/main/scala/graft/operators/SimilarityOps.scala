@@ -113,7 +113,7 @@ object SimilarityOps {
   private def vectors(s: SparkSession, dir: String)
       : Dataset[(Long, Array[Double])] = {
     import s.implicits._
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.read(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
   }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline over the
-  * `documents` table: token counting, quality scoring, n-gram Jaccard
-  * similarity, language ID, and document fingerprinting.
+  * `documents` table (read through [[Tables.read]] with its pinned
+  * schema): token counting, quality scoring, n-gram Jaccard similarity,
+  * language ID, and document fingerprinting.
   *
   * The reference's text analytics are its word-frequency scoring rules
   * (reference: parse/element/wordfre/WordFreqRule.java:15-39,
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   * a single hash-partitioned shuffle — no driver-side state.
   */
 object TextOps {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Non-empty whitespace tokens, as a reusable Column. Codegen'd higher-
     * order functions — no UDF in the hot path.
@@ -31,7 +29,7 @@ object TextOps {
     * attachment), and the ceil(chars/4) rough estimate.
     */
   def tokenCount(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id"),
       size(tokensCol(col("text"))).as("n_tokens"),
       size(regexp_extract_all(col("text"),
@@ -48,7 +46,7 @@ object TextOps {
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
     val toks = tokensCol(col("text"))
     val stop = filter(toks, x => x.isInCollection(stopwords))
-    docs(s, dir).select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id"),
       size(toks).as("n_tokens"),
       size(stop).as("n_stop"),
@@ -83,8 +81,8 @@ object TextOps {
   def jaccardPairs(s: SparkSession, dir: String, numBands: Int = 96,
       minBandMatches: Int = 2, threshold: Double = 0.2,
       capDocs: Int = 0): DataFrame = {
-    val d0 = docs(s, dir).select(col("doc_id"), col("source"),
-      array_distinct(tokensCol(col("text"))).as("toks"))
+    val d0 = Tables.read(s, dir, "documents").select(col("doc_id"),
+      col("source"), array_distinct(tokensCol(col("text"))).as("toks"))
     val d = if (capDocs > 0) d0.orderBy(col("doc_id")).limit(capDocs) else d0
     // each single-hash band's key is its signature element
     Dedup.verifiedPairs(d.select(col("doc_id"), col("source"),
@@ -102,7 +100,7 @@ object TextOps {
     * smallest doc_id as canonical.
     */
   def exactDedup(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .groupBy(md5(col("text").cast("binary")).as("sig"))
       .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n"))
 
@@ -112,7 +110,7 @@ object TextOps {
     * exact global top-K with tie-break.
     */
   def wordFreq(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .select(explode(tokensCol(col("text"))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
@@ -134,7 +132,7 @@ object TextOps {
     val toks = tokensCol(col("text"))
     val pos = size(filter(toks, x => x.isInCollection(posWords)))
     val neg = size(filter(toks, x => x.isInCollection(negWords)))
-    docs(s, dir).select(
+    Tables.read(s, dir, "documents").select(
       col("doc_id"),
       pos.as("n_pos"),
       neg.as("n_neg"),
@@ -193,7 +191,7 @@ object TextOps {
   }
 
   def langId(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), col("lang"),
+    Tables.read(s, dir, "documents").select(col("doc_id"), col("lang"),
       langIdCol(col("text")).as("pred_lang"))
 
   // --- document fingerprint (rolling hash; oracle-gated: DuckDB emulates
@@ -220,7 +218,8 @@ object TextOps {
 
   def fingerprints(s: SparkSession, dir: String): DataFrame = {
     val fp = udf((t: String) => fingerprint(t))
-    docs(s, dir).select(col("doc_id"), fp(col("text")).as("fp"))
+    Tables.read(s, dir, "documents")
+      .select(col("doc_id"), fp(col("text")).as("fp"))
   }
 
   val oracles: Map[String, String] = Map(
@@ -332,7 +331,7 @@ object TextOps {
     // this is ONE exchange with map-side partial aggregation (§2.3
     // aggregate-before-shuffle + §2.4), and the shuffle carries (seg,
     // partial count) instead of every (seg, doc_id) pair.
-    docs(s, dir)
+    Tables.read(s, dir, "documents")
       .select(col("doc_id"), tokensCol(col("text")).as("ws"))
       .select(explode(array_distinct(segs)).as("seg"))
       .groupBy(col("seg"))

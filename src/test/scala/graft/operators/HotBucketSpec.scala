@@ -97,7 +97,9 @@ class HotBucketSpec extends AnyFunSuite {
   /** Runs `body` on a corpus directory holding only `documents.parquet`:
     * `family` identical documents (ids 0 until family, one source)
     * followed by `others` documents with pairwise-disjoint vocabularies in
-    * the same source.
+    * the same source. The file holds only (doc_id, source, text): read
+    * through `Tables.read`, the pinned `lang` and `n_chars` columns read as
+    * null, and the pair queries run here read neither.
     */
   private def withExactDupCorpus(family: Int, others: Int)(
       body: String => Unit): Unit = {
