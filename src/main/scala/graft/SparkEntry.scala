@@ -55,6 +55,8 @@ object SparkEntry {
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), agg.schema)
     } finally {
+      // close the commit log's lock on the root before the tree goes
+      graft.crawl.CommitLog.releaseProcessLock(root)
       // leftover run dirs once filled this box's root disk to 90% and
       // silently depressed benchmarks — never leak the crawl tree
       import scala.jdk.CollectionConverters._

@@ -476,12 +476,13 @@ final class CrawlPipeline(
 
   // ----------------------------------------------------------------- fetch
 
-  /** Politeness-scheduled fetch with inline parse (reference:
-    * fetcher/FetcherReducer.java — FetchItemQueues :167-449 with per-host
-    * crawlDelay/maxConcurrent; inline parse :682-686; status dispatch
-    * :557-605; robots cache RobotRulesParser.java:54,414-496 — note the
-    * fork comments robots *enforcement* out at :522-544; we enforce it,
-    * deterministic in the synthetic web).
+  /** Politeness-scheduled fetch (reference: fetcher/FetcherReducer.java —
+    * FetchItemQueues :167-449 with per-host crawlDelay/maxConcurrent;
+    * status dispatch :557-605; robots cache RobotRulesParser.java:54,
+    * 414-496 — note the fork comments robots *enforcement* out at
+    * :522-544; we enforce it, deterministic in the synthetic web). The
+    * reference parses inline (:682-686); here [[parse]] is its own stage
+    * over the fetched table.
     *
     * Virtual clock: each host's timeline starts at `now`; `maxConcurrent`
     * lanes per host; lane pick = earliest-available (deterministic).

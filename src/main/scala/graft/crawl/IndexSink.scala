@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -163,7 +163,8 @@ object IndexSink {
     */
   def indexBatch(spark: SparkSession, root: String, batchId: String,
       outDir: String): Long = {
-    val parsed = spark.read.parquet(s"$root/batches/$batchId/parsed")
+    val parsed = spark.read.schema(Encoders.product[ParsedPage].schema)
+      .parquet(s"$root/batches/$batchId/parsed")
       .filter(col("signature").isNotNull)
       .select(col("urlHash"), col("url"), col("host"), col("contentType"),
         col("text"), hex(col("signature")).as("sig"), col("fetchEnd"),

@@ -247,21 +247,26 @@ object MultimodalOps {
 
   // ------------------------------------------------- image near-dup (pHash)
 
-  /** Dup marker for the image-dedup corpus: md5 nibble 11 ≡ 3 (mod 4)
-    * AND the candidate base id (i - 1 - nibble12 % 8) is in range. An id
-    * actually COPIES its base only when the base is not itself
+  /** The base id that `i` copies in a near-dup corpus, by md5 nibbles
+    * (mark, offset): `i` is dup-marked when nibble `mark` ≡ 3 (mod 4) AND
+    * its candidate base id (i - 1 - nibble `offset` % 8) is in range. An
+    * id actually COPIES its base only when the base is not itself
     * dup-marked (one level of lookup — no chains), so the pair list is a
     * pure md5 formula BOTH engines can evaluate.
     */
-  private[operators] def dupMarked(i: Long): Boolean =
-    hv(i, 11) % 4 == 3 && i - 1 - hv(i, 12) % 8 >= 0
+  private[operators] def dupBaseOf(i: Long, nibbles: (Int, Int))
+      : Option[Long] = {
+    val (mark, offset) = nibbles
+    def candidate(j: Long): Option[Long] =
+      Some(j - 1 - hv(j, offset) % 8).filter(_ >= 0 && hv(j, mark) % 4 == 3)
+    candidate(i).filter(candidate(_).isEmpty)
+  }
 
-  private[operators] def dupBaseOf(i: Long): Option[Long] =
-    if (!dupMarked(i)) None
-    else {
-      val b = i - 1 - hv(i, 12) % 8
-      if (dupMarked(b)) None else Some(b)
-    }
+  /** The image corpus's dup nibbles; the video corpus's are disjoint, so
+    * the two corpora plant independent groups.
+    */
+  private[operators] val imageDupNibbles = (11, 12)
+  private[operators] val videoDupNibbles = (13, 14)
 
   /** Structured pixels for the dedup corpus: per-cell ±60 luma plateaus
     * from a seed-derived 64-bit pattern plus ±4 per-pixel jitter. The
@@ -303,10 +308,9 @@ object MultimodalOps {
       : Dataset[MediaRow] = {
     import spark.implicits._
     spark.range(n).map { i =>
-      val src: Long = dupBaseOf(i).getOrElse(i)
-      val w = 16 + (hv(src, 2) * 16 + hv(src, 3)) % 33
-      val h = 16 + (hv(src, 4) * 16 + hv(src, 5)) % 33
-      val fmt = if (hv(i, 6) % 2 == 0) "png" else "jpeg"
+      val src: Long = dupBaseOf(i, imageDupNibbles).getOrElse(i)
+      val (_, w, h, _) = specOf(src)
+      val fmt = specOf(i)._4
       val px = cellPatternPixels(graft.core.XxHash64.hashLong(src, 11L),
         w, h, brightness = if (src != i) 4 else 0)
       MediaRow(i, "image", ImageCodec.encode(px, w, h, fmt), fmt)
@@ -356,20 +360,6 @@ object MultimodalOps {
 
   // ------------------------------------------------- video near-dup
 
-  /** Video dup marker: md5 nibbles 13/14 (disjoint from the image
-    * corpus's 11/12 so the two corpora plant independent groups); same
-    * one-level base-lookup rule.
-    */
-  private[operators] def vdupMarked(i: Long): Boolean =
-    hv(i, 13) % 4 == 3 && i - 1 - hv(i, 14) % 8 >= 0
-
-  private[operators] def vdupBaseOf(i: Long): Option[Long] =
-    if (!vdupMarked(i)) None
-    else {
-      val b = i - 1 - hv(i, 14) % 8
-      if (vdupMarked(b)) None else Some(b)
-    }
-
   /** Video corpus with planted near-duplicates: a dup-marked id
     * re-renders its BASE's frames (base seed, frame count, dims) with a
     * +4 brightness shift — a re-encoded copy of the same clip. Frames
@@ -380,10 +370,8 @@ object MultimodalOps {
       : Dataset[MediaRow] = {
     import spark.implicits._
     spark.range(n).map { i =>
-      val src: Long = vdupBaseOf(i).getOrElse(i)
-      val nFrames = 2 + hv(src, 7) % 5
-      val w = 16 + (hv(src, 2) * 16 + hv(src, 3)) % 33
-      val h = 16 + (hv(src, 4) * 16 + hv(src, 5)) % 33
+      val src: Long = dupBaseOf(i, videoDupNibbles).getOrElse(i)
+      val (nFrames, w, h) = videoSpecOf(src)
       val bright = if (src != i) 4 else 0
       val frames = (0 until nFrames).map { f =>
         val px = cellPatternPixels(

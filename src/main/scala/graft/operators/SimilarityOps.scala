@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * Four top-k searches rank the first `nQueries` vectors against the
   * table: brute force (the SQL-oracle-checked exactness baseline), IVF,
-  * IVF-PQ and multi-table LSH. Brute force, IVF and both PQ stages are one
+  * IVF-PQ and multi-table LSH. All four, and both PQ stages, are one
   * broadcast-probe scan, [[probeTopK]]: the probe side is |Q| rows, so it
   * is collected and broadcast, and each partition keeps only its k best
-  * rows per query for one window rank. LSH groups by (table, bucket)
-  * instead, so candidate generation never scans |Q|x|N| pairs.
+  * rows per query for one window rank. IVF keys the broadcast by cell and
+  * LSH by (table, bucket): a vector scores only the queries in its own.
   *
   * Vector math runs in JVM loops over `Array[Double]`: an unrolled
   * Catalyst dot of 64 terms exceeds the codegen method limit and falls
@@ -197,8 +197,8 @@ object SimilarityOps {
     * `planesPerTable` sign bits each. A pair of similar vectors collides in
     * at least one table with probability 1-(1-p^b)^L where p = 1 - theta/pi.
     */
-  private def lshPlanes(nTables: Int, planesPerTable: Int, dim: Int)
-      : Array[Array[Array[Double]]] =
+  private[operators] def lshPlanes(nTables: Int, planesPerTable: Int,
+      dim: Int): Array[Array[Array[Double]]] =
     Array.tabulate(nTables, planesPerTable)((t, p) =>
       hyperplane(t * planesPerTable + p, dim))
 
@@ -216,6 +216,12 @@ object SimilarityOps {
     bucket
   }
 
+  /** `v`'s (table << 32 | bucket) key in each LSH table. */
+  private[operators] def lshKeys(v: Array[Double],
+      planes: Array[Array[Array[Double]]]): Array[Long] =
+    Array.tabulate(planes.length)(t =>
+      (t.toLong << 32) | bucketOf(v, planes(t)))
+
   /** Hot-bucket cap: a popular LSH bucket does O(|bucket|^2) pair work in
     * one task — at corpus scale one dense bucket becomes a multi-hour
     * straggler. Buckets above `cap` are recursively re-split with EXTRA
@@ -226,8 +232,8 @@ object SimilarityOps {
     * task time stays O(cap^2) and transitive near-dup connectivity is
     * preserved through the window overlap.
     */
-  private[operators] def capBuckets(members: Array[VecBucket], cap: Int,
-      dim: Int): Iterator[Array[VecBucket]] = {
+  private[operators] def capBuckets(members: Array[VecBucket], cap: Int)
+      : Iterator[Array[VecBucket]] = {
     def windows(ms: Array[VecBucket]): Iterator[Array[VecBucket]] = {
       val sorted = ms.sortBy(_.vecId)
       val stride = math.max(1, cap / 2)
@@ -239,7 +245,8 @@ object SimilarityOps {
       if (ms.length <= cap) Iterator.single(ms)
       else if (depth >= 24) windows(ms)
       else {
-        val plane = hyperplane(1 << 20 | ms.head.tbl << 8 | depth, dim)
+        val plane =
+          hyperplane(1 << 20 | ms.head.tbl << 8 | depth, ms.head.v.length)
         val (pos, neg) = ms.partition(m => dotArr(m.v, plane) >= 0)
         if (pos.isEmpty || neg.isEmpty) windows(ms)
         else split(pos, depth + 1) ++ split(neg, depth + 1)
@@ -247,51 +254,48 @@ object SimilarityOps {
     split(members, 0)
   }
 
-  /** LSH-bucketed ANN: candidates = vectors sharing (table, bucket) with
-    * the query in ANY of the tables, deduped, then exactly scored and
-    * ranked. Scale path: candidate generation is a co-partitioned equi-join
-    * on the bucket key — no |Q|x|N| scan. Recall vs the brute-force
+  /** LSH-bucketed ANN: a vector is scored once against each query it
+    * shares a (table, bucket) with in ANY table. The queries are broadcast
+    * keyed by (table, bucket), so per-vector work is `nTables` lookups and
+    * at most |Q| scores however hot a bucket is. Recall vs the brute-force
     * baseline is asserted in OperatorsSpec.
     */
   def cosineTopKLsh(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
-      bucketCap: Int = 512): DataFrame = {
-    import s.implicits._
+      k: Int = 5, nTables: Int = 8, planesPerTable: Int = 4): DataFrame = {
     val e = vectors(s, dir)
-    val planes = lshPlanes(nTables, planesPerTable, dim)
-    // only a bucket holding a query can emit rows, so every other bucket
-    // is dropped before the shuffle; the filter keeps or drops whole
-    // (table, bucket) groups, never single members
-    val queryBuckets: Set[Long] = probes(e, nQueries).flatMap { q =>
-      planes.indices.map(t => (t.toLong << 32) | bucketOf(q._2, planes(t)))
-    }.toSet
-    val qbBc = s.sparkContext.broadcast(queryBuckets)
-    // capBuckets bounds each group's pair loop at O(cap^2): clustered data
-    // makes LSH buckets genuinely dense
-    val scored = toVecBuckets(e, planes)
-      .filter(r => qbBc.value.contains((r.tbl.toLong << 32) | r.bucket))
-      .groupByKey(r => (r.tbl, r.bucket))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[VecBucket]) =>
-        capBuckets(it.toArray, bucketCap, dim).flatMap { members =>
-          val queries = members.filter(_.vecId < nQueries)
-          for {
-            q <- queries.iterator
-            c <- members.iterator if c.vecId != q.vecId
-          } yield (q.vecId, c.vecId, roundedCos(q.v, q.nrm, c.v, c.nrm))
-        }
+    val qs = probes(e, nQueries)
+    val planes = lshPlanes(nTables, planesPerTable,
+      qs.headOption.fold(0)(_._2.length))
+    val byBucket: Map[Long, Array[Probe]] =
+      qs.flatMap(q => lshKeys(q._2, planes).map((_, q))).groupMap(_._1)(_._2)
+    val bc = s.sparkContext.broadcast(byBucket)
+    probeTopK(e, k) { (id, v, emit) =>
+      // no query, no planes of the vectors' dimension to hash on
+      if (bc.value.nonEmpty) {
+        // a query sharing buckets in several tables is scored once
+        val byId = mutable.LongMap[Probe]()
+        lshKeys(v, planes).foreach(bc.value.get(_).foreach(
+          _.foreach(q => byId(q._1) = q)))
+        scoreExact(id, v, byId.values.toArray, emit)
       }
-      .toDF("query_id", "vec_id", "sim")
-      .dropDuplicates("query_id", "vec_id")
-    rankTopK(scored, k)
+    }
   }
 
-  /** Bucketed membership: one row per (LSH table, vector). */
-  private def toVecBuckets(e: Dataset[(Long, Array[Double])],
-      planes: Array[Array[Array[Double]]]): Dataset[VecBucket] = {
+  /** Bucketed membership: one row per (LSH table, vector), on
+    * hyperplanes of the dimension of the partition's first row.
+    */
+  private def toVecBuckets(e: Dataset[(Long, Array[Double])], nTables: Int,
+      planesPerTable: Int): Dataset[VecBucket] = {
     import e.sparkSession.implicits._
-    e.flatMap { case (id, v) =>
-      val nrm = norm(v)
-      planes.indices.map(t => VecBucket(t, bucketOf(v, planes(t)), id, v, nrm))
+    e.mapPartitions { rows =>
+      val it = rows.buffered
+      val planes = lshPlanes(nTables, planesPerTable,
+        it.headOption.fold(0)(_._2.length))
+      it.flatMap { case (id, v) =>
+        val nrm = norm(v)
+        planes.indices.map(t =>
+          VecBucket(t, bucketOf(v, planes(t)), id, v, nrm))
+      }
     }
   }
 
@@ -433,13 +437,13 @@ object SimilarityOps {
     */
   def cosineTopKPq(s: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nCells: Int = 16, nProbe: Int = 4, m: Int = 8,
-      kCodes: Int = 64, dim: Int = 64, sampleN: Int = 2048,
-      rerank: Int = 4): DataFrame = {
+      kCodes: Int = 64, sampleN: Int = 2048, rerank: Int = 4): DataFrame = {
     import s.implicits._
-    require(dim % m == 0, "dim must divide into m subspaces")
-    val subDim = dim / m
     val e = vectors(s, dir)
     val sample = trainingSample(e, sampleN)
+    val dim = sample.head.length
+    require(dim % m == 0, "dim must divide into m subspaces")
+    val subDim = dim / m
     val centroids = trainCentroids(sample, nCells)
     val unitSample = sample.map(unit)
     // a corpus smaller than kCodes still trains (fewer codes), instead of
@@ -533,14 +537,13 @@ object SimilarityOps {
     * LSH-blocked (multi-table), exactly verified within bucket.
     */
   def embeddingNearDup(s: SparkSession, dir: String, threshold: Double = 0.35,
-      nTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
-      bucketCap: Int = 512): DataFrame = {
+      nTables: Int = 8, planesPerTable: Int = 4, bucketCap: Int = 512)
+      : DataFrame = {
     import s.implicits._
-    val pairs = toVecBuckets(vectors(s, dir),
-        lshPlanes(nTables, planesPerTable, dim))
+    val pairs = toVecBuckets(vectors(s, dir), nTables, planesPerTable)
       .groupByKey(r => (r.tbl, r.bucket))
       .flatMapGroups { (_: (Int, Long), it: Iterator[VecBucket]) =>
-        capBuckets(it.toArray, bucketCap, dim).flatMap { grp =>
+        capBuckets(it.toArray, bucketCap).flatMap { grp =>
           val m = grp.sortBy(_.vecId)
           val out =
             scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()

@@ -153,11 +153,14 @@ object TextOps {
     "es" -> Set("el", "la", "los", "las", "es", "una", "para", "como"),
     "zh" -> Set.empty) // zh detected by CJK codepoint ratio, not tokens
 
+  /** [[langIdCol]]'s rule: U+4E00..U+9FFF code points (its `[一-鿿]`)
+    * against the length in code points.
+    */
   def detectLang(text: String): String = {
     if (text == null || text.isEmpty) return "und"
-    val cjk = text.codePoints.toArray.count(cp =>
-      Character.UnicodeScript.of(cp) == Character.UnicodeScript.HAN)
-    if (cjk * 5 >= text.length) return "zh"
+    val cps = text.codePoints.toArray
+    if (cps.count(cp => cp >= 0x4E00 && cp <= 0x9FFF) * 5 >= cps.length)
+      return "zh"
     val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
     if (toks.isEmpty) return "und"
     val scores = langMarkers.collect {

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
@@ -13,7 +14,8 @@ import graft.SparkTestBase.{sfDir, spark}
   * nothing (q_embedding_near_dup shipped empty once: its threshold could
   * never fire on this data). Each query must also release every RDD it
   * persisted. Building a query's DataFrame must start no Spark job, save
-  * for the named builders whose eager work is inherent. Also pins
+  * for the named builders whose eager work is inherent, and the crawl
+  * loop query must close the lock on the crawl root it deletes. Also pins
   * queries/oracleSql key consistency.
   */
 class QueriesSmokeSpec extends AnyFunSuite {
@@ -43,6 +45,17 @@ class QueriesSmokeSpec extends AnyFunSuite {
       assert(left.isEmpty, s"$name left cached RDDs: " +
         left.map(sc.getPersistentRDDs(_).toDebugString.linesIterator.next()))
     }
+  }
+
+  test("q_crawl_loop leaves no lock open on its deleted crawl root") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    SparkEntry.crawlLoop(spark, sfDir)
+    // each lock is an open FileChannel on <root>/_commits/_driver.lock
+    val held = fds.listFiles().toSeq.flatMap(f =>
+      scala.util.Try(Files.readSymbolicLink(f.toPath).toString).toOption)
+      .filter(p => p.contains("graft-crawl-q") && p.contains("_driver.lock"))
+    assert(held.isEmpty, s"crawl-loop locks still open: $held")
   }
 
   test("building a query starts no Spark job, bar the eager builders") {

@@ -47,6 +47,27 @@ class GraftFunctionsSpec extends AnyFunSuite {
       graft.operators.Dedup.minHashSignature(t, 8, 3).toSeq)
   }
 
+  test("graft_langid, detectLang and langIdCol agree on CJK Ext-A and " +
+    "supplementary-plane text") {
+    import graft.operators.TextOps
+    // Ext-A and Ext-B ideographs lie outside the U+4E00..U+9FFF zh rule;
+    // a supplementary code point counts once in the length, not twice
+    val texts = Seq("㐀㐀㐀", "𠀀𠀀𠀀", "中😀😀😀😀", "中😀😀😀😀😀",
+      "中文 the and 😀", "这是一个中文句子")
+    val df = texts.toDF("text")
+    df.createOrReplaceTempView("t_lang")
+    val bySql = spark.sql("SELECT text, graft_langid(text) FROM t_lang")
+      .as[(String, String)].collect().toMap
+    val byCol = df.select($"text", TextOps.langIdCol($"text"))
+      .as[(String, String)].collect().toMap
+    texts.foreach { t =>
+      val jvm = TextOps.detectLang(t)
+      assert((bySql(t), byCol(t)) === ((jvm, jvm)), t)
+    }
+    assert(TextOps.detectLang("㐀㐀㐀") === "und")
+    assert(TextOps.detectLang("中😀😀😀😀") === "zh")
+  }
+
   test("html extraction through SQL handles real-web attribute styles") {
     Seq("""<html><a href='/x.html'>go</a><img src=i.png alt='c'></html>""")
       .toDF("html").createOrReplaceTempView("t_html")

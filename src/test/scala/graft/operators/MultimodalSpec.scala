@@ -114,8 +114,8 @@ class MultimodalSpec extends AnyFunSuite {
     "pairs from real bytes; margins hold") {
     val corpus = MultimodalOps.syntheticImageDupCorpus(spark, 400).cache()
     // expected pair set from the dup formula (base groups -> all pairs)
-    val groups = (0L until 400L).flatMap(i =>
-      MultimodalOps.dupBaseOf(i).map(b => (b, i)))
+    val groups = (0L until 400L).flatMap(i => MultimodalOps
+      .dupBaseOf(i, MultimodalOps.imageDupNibbles).map(b => (b, i)))
       .groupBy(_._1).map { case (b, ds) => b +: ds.map(_._2) }
     val expected = groups.flatMap(g =>
       g.combinations(2).map(p => (p.min, p.max))).toSet
@@ -161,8 +161,8 @@ class MultimodalSpec extends AnyFunSuite {
   test("video phash near-dup: majority-of-frames rule recovers exactly " +
     "the planted pairs from real demuxed bytes") {
     val corpus = MultimodalOps.syntheticVideoDupCorpus(spark, 300).cache()
-    val groups = (0L until 300L).flatMap(i =>
-      MultimodalOps.vdupBaseOf(i).map(b => (b, i)))
+    val groups = (0L until 300L).flatMap(i => MultimodalOps
+      .dupBaseOf(i, MultimodalOps.videoDupNibbles).map(b => (b, i)))
       .groupBy(_._1).map { case (b, ds) => b +: ds.map(_._2) }
     val expected = groups.flatMap(g =>
       g.combinations(2).map(p => (p.min, p.max))).toSet

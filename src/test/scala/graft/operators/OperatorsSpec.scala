@@ -239,7 +239,7 @@ class OperatorsSpec extends AnyFunSuite {
           h.toDouble / Long.MaxValue
         }, 1.0)
     }
-    val splitGroups = SimilarityOps.capBuckets(spread, 256, dim).toArray
+    val splitGroups = SimilarityOps.capBuckets(spread, 256).toArray
     assert(splitGroups.forall(_.length <= 256))
     assert(splitGroups.map(_.length).sum === 1024) // split is a partition
 
@@ -248,7 +248,7 @@ class OperatorsSpec extends AnyFunSuite {
     // window overlap chains them into one component
     val same = Array.tabulate(3000)(i => SimilarityOps.VecBucket(0, 0L,
       i.toLong, Array.fill(dim)(1.0), math.sqrt(dim.toDouble)))
-    val win = SimilarityOps.capBuckets(same, 256, dim).toArray
+    val win = SimilarityOps.capBuckets(same, 256).toArray
     assert(win.forall(_.length <= 256))
     val work = win.map(g => g.length.toLong * g.length).sum
     assert(work <= 3000L * 256 * 4, s"unbounded pair work: $work")

@@ -13,7 +13,8 @@ import graft.SparkTestBase.{sfDir, spark}
   * directory the operators run on, so reading with them changes no query.
   * And `Tables.read` is the only table reader in `graft.operators`: a
   * second, schema-less read would bring back the footer-inference job per
-  * read.
+  * read. Nor does any other `src/main` code read parquet without a
+  * schema.
   */
 class TablesSpec extends AnyFunSuite {
   private val testdata = new File(sfDir).getParent
@@ -29,6 +30,23 @@ class TablesSpec extends AnyFunSuite {
         assert(inferred === pinned, s"$dir/$name")
       }
     }
+  }
+
+  test("src/main reads no parquet table without a schema") {
+    // every crawl table has its writer's encoder schema, every operator
+    // input its pinned one
+    def scalaFiles(d: File): Seq[File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val sites = for {
+      f <- scalaFiles(new File("src/main/scala"))
+      (l, i) <- {
+        val src = Source.fromFile(f, "UTF-8")
+        try src.getLines().toVector finally src.close()
+      }.zipWithIndex
+      if l.contains(".read.parquet(")
+    } yield s"${f.getPath}:${i + 1}"
+    assert(sites.isEmpty, s"schema-less reads at: ${sites.mkString(", ")}")
   }
 
   test("graft.operators reads tables only through Tables.read") {
